@@ -48,8 +48,10 @@ def test_supervisor_metadata_and_sync(spark):
     assert meta.filter(F.col("predicate") == vocab.ACCOUNT_OF).count() == 2
     assert meta.filter(F.col("predicate") == vocab.SOURCE_OF).count() == 2
 
-    diffs = sup.sync_all()
-    assert set(diffs) == {iris["inbox"], iris2["graph"]}
+    # one round over both sources: its diff links documents of each
+    diff = sup.sync_all()
+    linked = diff.added.filter(F.col("predicate") == vocab.DOCUMENT_OF)
+    assert {r.object_value for r in linked.collect()} == {iris["inbox"], iris2["graph"]}
     # every delivered document graph is linked to its source
     doc_of = sup.store.quads.filter(F.col("predicate") == vocab.DOCUMENT_OF)
     links = {(r.subject, r.object_value) for r in doc_of.collect()}

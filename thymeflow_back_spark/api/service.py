@@ -36,7 +36,6 @@ from xml.sax.saxutils import escape
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..plans.sparql import (
     _Parser,
@@ -47,6 +46,7 @@ from ..plans.sparql import (
     sparql_update_diff,
 )
 from ..rdf.store import StatementStore
+from ..supervisor import documents_per_source
 from ..update.updater import WriteBack, apply_update
 
 _XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -489,22 +489,7 @@ class SparqlEndpoint:
         """The data-services dashboard (DataServicesService.scala:25-49
         shape): per-source document counts from the service metadata graph,
         as JSON."""
-        from ..rdf import vocab
-
-        meta = self.store.quads.filter(F.col("graph") == vocab.SERVICE_GRAPH)
-        docs = meta.filter(F.col("predicate") == vocab.DOCUMENT_OF).select(
-            F.col("subject").alias("document"), F.col("object_value").alias("source")
-        )
-        names = meta.filter(F.col("predicate") == vocab.NAME).select(
-            F.col("subject").alias("source"), F.col("object_value").alias("source_name")
-        )
-        rows = (
-            docs.groupBy("source")
-            .agg(F.count("*").alias("n_documents"))
-            .join(names, "source", "left")
-            .orderBy("source")
-            .collect()
-        )
+        rows = documents_per_source(self.store).orderBy("source").collect()
         body = json.dumps(
             [
                 {

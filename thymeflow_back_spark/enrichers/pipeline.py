@@ -3,8 +3,10 @@
 Parity with reference Pipeline.scala:37-42 + Thymeflow.scala:56-63: each
 ingested document produces a diff; enrichers run in order, each seeing the
 store state left by its predecessors; their inferences are applied to the
-store and appended to the flowing diff. ``ingest_quads`` accepts a batch of
-mixed-graph quads (the foreachBatch entry point for streaming).
+store and appended to the flowing diff. ``ingest`` is that round — one
+document replace, one materialization, one pass of the chain — shared by
+``EnrichmentPipeline.ingest_quads`` (the foreachBatch entry point for
+streaming) and the supervisor's sync rounds.
 """
 
 from __future__ import annotations
@@ -17,6 +19,36 @@ from pyspark.sql import functions as F
 from ..rdf.store import Diff, StatementStore
 
 Enricher = Callable[[StatementStore, Diff], Diff]
+
+
+def ingest(
+    store: StatementStore,
+    quads: DataFrame,
+    graphs: list[str] | DataFrame | None = None,
+    enrichers: Sequence[Enricher] = (),
+    metadata: Callable[[StatementStore, Diff], Diff] | None = None,
+) -> tuple[StatementStore, Diff]:
+    """Replace every document graph in ``quads`` (and ``graphs``), run the
+    enricher chain once over the combined diff; return (store, total diff).
+
+    The document diff is pinned before anything reads it, so the batch's
+    inputs are evaluated once however many readers follow. ``metadata``
+    derives extra statements from (pre-batch store, pinned diff) — the
+    supervisor's ``personal:documentOf`` links — applied in the same single
+    materialization as the documents. Each enricher's diff is pinned and
+    materialized in turn, since the next enricher reads the store it leaves.
+    A micro-batch of n documents costs O(1) Spark job chains, not O(n).
+    """
+    _, diff = store.add_documents(quads, graphs=graphs)
+    diff = diff.pin()
+    if metadata is not None:
+        diff = diff.union(metadata(store, diff))
+    store = store.apply_diff(diff).materialize()
+    for enricher in enrichers:
+        extra = enricher(store, diff).pin()
+        store = store.apply_diff(extra).materialize()
+        diff = diff.union(extra)
+    return store, diff
 
 
 class EnrichmentPipeline:
@@ -32,17 +64,9 @@ class EnrichmentPipeline:
         )
 
     def ingest_quads(self, quads: DataFrame, graphs: list[str] | None = None) -> Diff:
-        """Batch entry point: replace ALL document graphs present in the
-        batch with one vectorized set-difference (StatementStore.
-        add_documents), then run the enricher chain ONCE over the combined
-        diff. A micro-batch of n re-delivered documents costs O(1) Spark
-        job chains, not O(n) — this is the foreachBatch entry point for
-        Structured Streaming."""
-        store, diff = self.store.add_documents(quads, graphs=graphs)
-        store = store.materialize()
-        for enricher in self.enrichers:
-            extra = enricher(store, diff)
-            store = store.apply_diff(extra).materialize()
-            diff = diff.union(extra)
-        self.store = store
+        """Batch entry point (``ingest``): replace ALL document graphs
+        present in the batch with one vectorized set-difference, then run
+        the enricher chain ONCE over the combined diff — the foreachBatch
+        entry point for Structured Streaming."""
+        self.store, diff = ingest(self.store, quads, graphs, self.enrichers)
         return diff

@@ -1777,13 +1777,12 @@ def sparql_update_diff(quads: DataFrame, text: str):
     NULL graph — apply_update routes adds to the subject's dominant graph
     and expands graphless removals to every matching statement).
     DELETE WHERE deletes every store quad matching the pattern."""
-    from ..rdf.store import Diff
+    from functools import reduce
 
-    spark = quads.sparkSession
-    ddl = ", ".join(f"{c} string" for c in (
-        "subject", "predicate", "object_value", "object_type", "object_datatype",
-        "object_lang", "graph",
-    ))
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from ..rdf.model import QUAD_COLUMNS, local_relation
+    from ..rdf.store import Diff
 
     def ground_rows(triples: list[Triple]):
         rows = []
@@ -1806,29 +1805,38 @@ def sparql_update_diff(quads: DataFrame, text: str):
             else:
                 obj = (oval, "literal", _XSD + "string", None)
             rows.append((t.s[1], t.p[1], *obj, t.g[1] if t.g is not None else None))
-        return spark.createDataFrame(rows, ddl)
+        return rows
 
-    added = spark.createDataFrame([], ddl)
-    removed = spark.createDataFrame([], ddl)
+    # ground rows become one driver-local relation per side (no Spark job
+    # to read them back); pattern matches stay DataFrames over the store
+    added_rows, removed_rows = [], []
+    added_frames, removed_frames = [], []
     for op, payload in _Parser(text).parse_update():
         if op == "insert_data":
-            added = added.unionByName(ground_rows(payload))
+            added_rows += ground_rows(payload)
         elif op == "delete_data":
-            removed = removed.unionByName(ground_rows(payload))
+            removed_rows += ground_rows(payload)
         elif op == "modify":
             # [DELETE {tmpl}] [INSERT {tmpl}] WHERE {pattern}: one solution
             # relation instantiates both templates
             del_tmpl, ins_tmpl, group = payload
             df = _Compiler(quads, track_types=True).compile_group(group)
             if del_tmpl:
-                removed = removed.unionByName(_instantiate(del_tmpl, df, None))
+                removed_frames.append(_instantiate(del_tmpl, df, None))
             if ins_tmpl:
-                added = added.unionByName(_instantiate(ins_tmpl, df, None))
+                added_frames.append(_instantiate(ins_tmpl, df, None))
         else:  # delete_where: instantiate the pattern itself from matches
             group: Group = payload
             df = _Compiler(quads, track_types=True).compile_group(group)
-            matched = _instantiate(
-                [el for el in group.elements if isinstance(el, Triple)], df, None
+            removed_frames.append(
+                _instantiate([el for el in group.elements if isinstance(el, Triple)], df, None)
             )
-            removed = removed.unionByName(matched)
+
+    schema = StructType([StructField(c, StringType()) for c in QUAD_COLUMNS])
+
+    def relation(rows, frames):
+        ground = local_relation(quads.sparkSession, rows, schema)
+        return reduce(DataFrame.unionByName, frames, ground)
+
+    added, removed = relation(added_rows, added_frames), relation(removed_rows, removed_frames)
     return Diff(added=added, removed=removed)

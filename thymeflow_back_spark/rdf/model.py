@@ -81,8 +81,21 @@ class V:
     name: str
 
 
+def local_relation(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """Driver-side rows as a LocalRelation, built through Arrow: scans run
+    in the JVM and the optimizer knows the relation is tiny. A DataFrame
+    made by ``createDataFrame(list)`` is an RDD of pickled rows instead —
+    every scan starts Python tasks, and its size is unknown, so joins
+    against it shuffle."""
+    import pandas as pd
+
+    if not rows:  # Arrow skips empty frames; a zero limit optimizes to an empty LocalRelation
+        return spark.createDataFrame([], schema).limit(0)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
+
+
 def empty_quads(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], QUAD_SCHEMA)
+    return local_relation(spark, [], QUAD_SCHEMA)
 
 
 def make_quads(spark: SparkSession, rows: list[tuple]) -> DataFrame:

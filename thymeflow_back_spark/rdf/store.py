@@ -30,19 +30,27 @@ from functools import reduce
 from .model import NEG_PREFIX, QUAD_COLUMNS, SPO
 
 
-def _null_safe_cond(a: DataFrame, b: DataFrame, cols) -> F.Column:
-    """Join condition treating NULL as equal to NULL (quad columns are
-    nullable — plain column-list joins would silently keep every row with a
-    NULL datatype/lang out of anti-joins)."""
-    return reduce(lambda x, y: x & y, [a[c].eqNullSafe(b[c]) for c in cols])
+def _join(a: DataFrame, b: DataFrame, cols, how: str, extra=None) -> DataFrame:
+    """``a`` semi/anti-joined with ``b`` on ``cols``, NULL equal to NULL
+    (quad columns are nullable — plain column-list joins would silently
+    keep every row with a NULL datatype/lang out of anti-joins).
+
+    Both sides are aliased and the condition names them (``l.``/``r.``), so
+    joining a relation with one derived from it (a diff against the store
+    it came from) resolves each side, rather than relying on Spark to
+    rewrite an ambiguous, trivially true equality."""
+    cond = reduce(lambda x, y: x & y, [F.col(f"l.{c}").eqNullSafe(F.col(f"r.{c}")) for c in cols])
+    if extra is not None:
+        cond = cond & extra
+    return a.alias("l").join(b.alias("r"), on=cond, how=how)
 
 
-def _anti(a: DataFrame, b: DataFrame, cols) -> DataFrame:
-    return a.join(b, on=_null_safe_cond(a, b, cols), how="left_anti")
+def _anti(a: DataFrame, b: DataFrame, cols, extra=None) -> DataFrame:
+    return _join(a, b, cols, "left_anti", extra)
 
 
 def _semi(a: DataFrame, b: DataFrame, cols) -> DataFrame:
-    return a.join(b, on=_null_safe_cond(a, b, cols), how="left_semi")
+    return _join(a, b, cols, "left_semi")
 
 
 @dataclass(frozen=True)
@@ -58,6 +66,23 @@ class Diff:
     def union(self, other: "Diff") -> "Diff":
         return Diff(
             self.added.unionByName(other.added), self.removed.unionByName(other.removed)
+        )
+
+    def tagged(self) -> DataFrame:
+        """Both sides as one relation: the quad columns plus ``__added``
+        (True on added rows), so one job evaluates the whole diff."""
+        return self.added.select(*QUAD_COLUMNS, F.lit(True).alias("__added")).unionByName(
+            self.removed.select(*QUAD_COLUMNS, F.lit(False).alias("__added"))
+        )
+
+    def pin(self) -> "Diff":
+        """Evaluate both sides in one job and cut their lineage
+        (localCheckpoint): every later reader sees the same rows, and
+        nothing upstream — a source fetch, the store joins — runs again."""
+        both = self.tagged().localCheckpoint(eager=True)
+        return Diff(
+            both.filter(F.col("__added")).drop("__added"),
+            both.filter(~F.col("__added")).drop("__added"),
         )
 
 
@@ -182,11 +207,7 @@ class StatementStore:
         added = _anti(added, elsewhere, SPO)
         # (2) dedup vs triples kept unchanged by OTHER batch graphs
         kept = _semi(new, current, QUAD_COLUMNS).select(*SPO, "graph")
-        added = added.join(
-            kept,
-            on=_null_safe_cond(added, kept, SPO) & (added["graph"] != kept["graph"]),
-            how="left_anti",
-        )
+        added = _anti(added, kept, SPO, F.col("l.graph") != F.col("r.graph"))
         # (3) among adds of the same triple in several batch graphs, the
         # smallest graph IRI wins (order-free analogue of sequential ingest)
         winner = added.groupBy(*SPO).agg(F.min("graph").alias("graph"))

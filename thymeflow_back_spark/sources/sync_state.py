@@ -22,8 +22,11 @@ listing (metadata only — cheap), and ONLY the resulting to-fetch set hits
 the network, executor-side via mapInPandas with an injectable fetcher (the
 reference fetches on parallel connections; here each partition fetches its
 batch, the analogue of the 100-resource multiget / 512-message fetch
-buffer). At 100 TB the snapshot is a Delta table MERGEd per pass; the diff
-below is the MERGE's source query.
+buffer). The fetch runs once per pass, when ``fetch_quads`` pins its
+output: every later reader — the store, the diff, enrichers — sees that
+one fetch, never a re-run that might return different payloads. At 100 TB
+the snapshot is a Delta table MERGEd per pass; the diff below is the
+MERGE's source query.
 """
 
 from __future__ import annotations
@@ -36,7 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ..rdf.model import QUAD_SCHEMA
+from ..rdf.model import QUAD_SCHEMA, local_relation
 from ..rdf.store import Diff, StatementStore
 
 SNAPSHOT_COLUMNS = ("source", "collection", "collection_version", "item_id", "item_version")
@@ -56,7 +59,7 @@ class SyncDelta:
 
 
 def snapshot(spark: SparkSession, rows: list[tuple]) -> DataFrame:
-    return spark.createDataFrame(rows, SNAPSHOT_SCHEMA)
+    return local_relation(spark, rows, SNAPSHOT_SCHEMA)
 
 
 def imap_snapshot(
@@ -126,6 +129,12 @@ def snapshot_delta(previous: DataFrame, current: DataFrame) -> SyncDelta:
     relation, so at 100 TB the pass costs a single co-partitioned shuffle
     of item METADATA (the payload fetch stays out-of-band).
     """
+    return _split(_classify(previous, current))
+
+
+def _classify(previous: DataFrame, current: DataFrame) -> DataFrame:
+    """One row per sync key of either snapshot, with both versions and
+    the ``__fetch`` / ``__remove`` verdicts of ``snapshot_delta``."""
     # collections are few relative to items (folders vs messages), so the
     # reset set broadcasts
     reset = F.broadcast(
@@ -149,14 +158,26 @@ def snapshot_delta(previous: DataFrame, current: DataFrame) -> SyncDelta:
     in_cur, in_prev = F.col("__c").isNotNull(), F.col("__p").isNotNull()
     is_reset = F.col("__reset").isNotNull()
     changed = ~F.col("__c_iver").eqNullSafe(F.col("__p_iver"))
-    to_fetch = full.filter(in_cur & (is_reset | ~in_prev | changed)).select(
+    return full.select(
+        *_KEY,
+        "__c_cver",
+        "__c_iver",
+        "__p_cver",
+        "__p_iver",
+        (in_cur & (is_reset | ~in_prev | changed)).alias("__fetch"),
+        (in_prev & (is_reset | ~in_cur)).alias("__remove"),
+    )
+
+
+def _split(classified: DataFrame) -> SyncDelta:
+    to_fetch = classified.filter(F.col("__fetch")).select(
         "source",
         "collection",
         F.col("__c_cver").alias("collection_version"),
         "item_id",
         F.col("__c_iver").alias("item_version"),
     )
-    to_remove = full.filter(in_prev & (is_reset | ~in_cur)).select(
+    to_remove = classified.filter(F.col("__remove")).select(
         "source",
         "collection",
         F.col("__p_cver").alias("collection_version"),
@@ -178,11 +199,13 @@ Fetcher = Callable[[pd.DataFrame], pd.DataFrame]
 
 
 def fetch_quads(to_fetch: DataFrame, fetcher: Fetcher, batch_size: int = 100) -> DataFrame:
-    """Run `fetcher` executor-side over the to-fetch set, in batches.
+    """Run `fetcher` executor-side over the to-fetch set, in batches, now.
 
     The fetcher sees at most `batch_size` rows per call (the DAV multiget
     batch; EmailSynchronizer caps fetch buffers at 512) and must mint each
-    item's quads into its document graph (doc_iri_col convention).
+    item's quads into its document graph (doc_iri_col convention). The
+    result is pinned (localCheckpoint), so each item is fetched exactly
+    once however often the quads are read.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -194,7 +217,25 @@ def fetch_quads(to_fetch: DataFrame, fetcher: Fetcher, batch_size: int = 100) ->
         yield pd.DataFrame(columns=list(QUAD_SCHEMA.names))
 
     cols = to_fetch.select("source", "collection", "item_id", "item_version")
-    return cols.mapInPandas(run, QUAD_SCHEMA)
+    return cols.mapInPandas(run, QUAD_SCHEMA).localCheckpoint(eager=True)
+
+
+def fetch_pass(
+    previous: DataFrame, current: DataFrame, fetcher: Fetcher, batch_size: int = 100
+) -> tuple[DataFrame, DataFrame]:
+    """The source side of one incremental pass: (fetched quads, replaced
+    graphs). The snapshot delta is evaluated once and pinned, and so is
+    the fetch over it. ``graphs`` holds every document graph the pass
+    replaces — fetched items' graphs and removed items' graphs, the latter
+    replaced with the empty set."""
+    changed = (
+        _classify(previous, current)
+        .filter(F.col("__fetch") | F.col("__remove"))
+        .localCheckpoint(eager=True)
+    )
+    quads = fetch_quads(_split(changed).to_fetch, fetcher, batch_size=batch_size)
+    graphs = changed.select(doc_iri_col(F.col("collection"), F.col("item_id")).alias("graph"))
+    return quads, graphs
 
 
 def sync_pass(
@@ -210,17 +251,8 @@ def sync_pass(
     document graphs are replaced with the empty set (negation/user edits in
     other graphs survive — same path as an empty re-delivery); fetched items
     go through the batched document-replace, so a re-fetched changed item is
-    an idempotent graph replacement.
+    an idempotent graph replacement. The fetch runs once, here.
     """
-    delta = snapshot_delta(previous, current)
-    quads = fetch_quads(delta.to_fetch, fetcher, batch_size=batch_size)
-    removed_graphs = delta.to_remove.select(
-        doc_iri_col(F.col("collection"), F.col("item_id")).alias("graph")
-    )
-    fetched_graphs = delta.to_fetch.select(
-        doc_iri_col(F.col("collection"), F.col("item_id")).alias("graph")
-    )
-    new_store, diff = store.add_documents(
-        quads, graphs=removed_graphs.unionByName(fetched_graphs)
-    )
+    quads, graphs = fetch_pass(previous, current, fetcher, batch_size=batch_size)
+    new_store, diff = store.add_documents(quads, graphs=graphs)
     return new_store, diff, current

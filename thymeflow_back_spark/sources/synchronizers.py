@@ -17,6 +17,11 @@ Reference parity (SURVEY.md §2.1):
 - ``FacebookSynchronizer`` — Graph API paged fetch of me/friends/events
   (FacebookSynchronizer.scala, ~156 LoC) folded into one export document.
 
+Each synchronizer's ``fetch`` is the source side of a pass: it returns
+the fetched quads and the document graphs they replace, pinned, and leaves
+the store alone, so the supervisor can ingest every source of a round at
+once. ``sync`` is ``fetch`` followed by the store's document replace.
+
 Transports are injectable and must be PICKLABLE: item fetching runs
 executor-side through ``sync_state.fetch_quads`` (mapInPandas), the Spark
 analogue of the reference's parallel fetcher connections. The listing
@@ -38,14 +43,14 @@ from typing import Protocol
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
-from ..rdf.model import QUAD_COLUMNS, QUAD_SCHEMA
+from ..rdf.model import QUAD_COLUMNS, QUAD_SCHEMA, local_relation
 from ..rdf.store import Diff, StatementStore
 from .eml import eml_to_quads
 from .facebook import facebook_to_quads
 from .ical import ical_apply_diff, ical_to_quads
-from .sync_state import dav_snapshot, imap_snapshot, sync_pass
+from .sync_state import dav_snapshot, fetch_pass, imap_snapshot, sync_pass
 from .vcard import vcard_apply_diff, vcard_to_quads
 
 # ---------------------------------------------------------------------------
@@ -78,8 +83,29 @@ def _item_doc_quads(
     return [(*row[:6], graph) for row in converter(raw, graph)]
 
 
-class EmailSynchronizer:
+class _SnapshotSynchronizer:
+    """A pass of snapshot CDC: list, diff against the previous snapshot,
+    fetch the delta in batches of ``fetch_batch``."""
+
+    fetch_batch: int  # subclasses also define current_snapshot() and _fetcher()
+
+    def fetch(self, previous: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """(pinned quads, replaced graphs, next snapshot) — the store is untouched."""
+        current = self.current_snapshot()
+        return (*fetch_pass(previous, current, self._fetcher(), self.fetch_batch), current)
+
+    def sync(
+        self, store: StatementStore, previous: DataFrame
+    ) -> tuple[StatementStore, Diff, DataFrame]:
+        return sync_pass(
+            store, previous, self.current_snapshot(), self._fetcher(), self.fetch_batch
+        )
+
+
+class EmailSynchronizer(_SnapshotSynchronizer):
     """Incremental IMAP synchronizer over the snapshot-CDC machinery."""
+
+    fetch_batch = EMAIL_FETCH_BATCH
 
     def __init__(self, spark: SparkSession, source: str, transport: EmailTransport):
         self.spark = spark
@@ -106,14 +132,6 @@ class EmailSynchronizer:
             return pd.DataFrame(rows, columns=list(QUAD_COLUMNS))
 
         return fetch
-
-    def sync(
-        self, store: StatementStore, previous: DataFrame
-    ) -> tuple[StatementStore, Diff, DataFrame]:
-        current = self.current_snapshot()
-        return sync_pass(
-            store, previous, current, self._fetcher(), batch_size=EMAIL_FETCH_BATCH
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -143,10 +161,11 @@ class DavTransport(Protocol):
 DAV_MULTIGET_BATCH = 100  # BaseDavSynchronizer.scala:130
 
 
-class BaseDavSynchronizer:
+class BaseDavSynchronizer(_SnapshotSynchronizer):
     """Shared etag-diff sync; subclasses choose the payload converter."""
 
     converter: Callable[[bytes, str], list[tuple]]
+    fetch_batch = DAV_MULTIGET_BATCH
 
     def __init__(
         self, spark: SparkSession, source: str, directories: list[str], transport: DavTransport
@@ -175,14 +194,6 @@ class BaseDavSynchronizer:
             return pd.DataFrame(rows, columns=list(QUAD_COLUMNS))
 
         return fetch
-
-    def sync(
-        self, store: StatementStore, previous: DataFrame
-    ) -> tuple[StatementStore, Diff, DataFrame]:
-        current = self.current_snapshot()
-        return sync_pass(
-            store, previous, current, self._fetcher(), batch_size=DAV_MULTIGET_BATCH
-        )
 
     def owns_graph(self, graph: str) -> bool:
         return any(graph.startswith(f"{d}#") for d in self.directories)
@@ -285,14 +296,22 @@ class FacebookSynchronizer:
             me["taggable_friends"] = {"data": friends}
         return me
 
-    def sync(self, store: StatementStore) -> tuple[StatementStore, Diff]:
+    def fetch(self) -> tuple[DataFrame, DataFrame]:
+        """(quads, replaced graphs) of the export document; both empty when
+        the export converts to nothing."""
         export = self._export()
         path = f"facebook:{self.account}"
         rows = facebook_to_quads(json.dumps(export).encode("utf-8"), path)
-        if not rows:
-            return store, Diff(
-                added=store.quads.limit(0), removed=store.quads.limit(0)
-            )
-        graph = rows[0][6]
-        quads = self.spark.createDataFrame(rows, QUAD_SCHEMA)
-        return store.add_document(graph, quads.filter(F.col("graph") == graph))
+        graph = rows[0][6] if rows else None
+        return (
+            local_relation(self.spark, [r for r in rows if r[6] == graph], QUAD_SCHEMA),
+            local_relation(
+                self.spark,
+                [(graph,)] if rows else [],
+                StructType([StructField("graph", StringType())]),
+            ),
+        )
+
+    def sync(self, store: StatementStore) -> tuple[StatementStore, Diff]:
+        quads, graphs = self.fetch()
+        return store.add_documents(quads, graphs=graphs)

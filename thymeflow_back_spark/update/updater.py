@@ -13,65 +13,86 @@ Parity with reference Updater.scala:26-196 (SURVEY.md §3.3):
 - adds a source rejects land in the user graph (here: sources are
   represented by a write_back callback; None means "cannot write back",
   the reference's IMAP/file behavior).
+
+An update diff is user-scale — a handful of statements, as in the
+reference's in-memory diff — so it is collected to the driver once and
+routed there. One filtered store lookup fetches the statements the update
+can touch; it answers the routing of graphless adds, the expansion of
+graphless removals and which negations a re-add clears. Write-backs are
+grouped per graph on the driver, and the update ends in a single
+``apply_diff(...).materialize()``.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..rdf import vocab
-from ..rdf.model import NEG_PREFIX, QUAD_COLUMNS, negate, negate_col
+from ..rdf.model import QUAD_SCHEMA, is_negation, local_relation, negate
 from ..rdf.store import Diff, StatementStore
-
-SPOT = ("subject", "predicate", "object_value", "object_type")
 
 USER_GRAPH = "urn:graph:userData"
 
 # write_back(graph, added_df, removed_df) -> bool (True = source accepted)
 WriteBack = Callable[[str, DataFrame, DataFrame], bool]
 
+Quad = tuple  # the QUAD_COLUMNS values of one statement
 
-def _route_graphless_adds(store: StatementStore, adds: DataFrame) -> DataFrame:
-    """Adds with NULL graph → the subject's dominant existing graph, else
-    the user graph (reference 'possible contexts' inference,
-    Updater.scala:109-130)."""
-    subject_graphs = (
-        store.quads.groupBy("subject", "graph")
-        .agg(F.count("*").alias("n"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("subject").orderBy(F.desc("n"), F.asc("graph"))
-            ),
-        )
-        .filter(F.col("rk") == 1)
-        .select("subject", F.col("graph").alias("target_graph"))
+
+def _collect(diff: Diff) -> tuple[set[Quad], set[Quad]]:
+    """Both sides of a user-scale diff, in one job."""
+    rows = diff.tagged().collect()
+    added = {tuple(r)[:-1] for r in rows if r["__added"]}
+    return added, {tuple(r)[:-1] for r in rows if not r["__added"]}
+
+
+def _lookup(store: StatementStore, added: set[Quad], removed: set[Quad]) -> list[Quad]:
+    """The store statements the update can touch: every statement of a
+    subject a graphless add is routed by, plus the candidates for graphless
+    removals and for the negations the adds clear (matched exactly on the
+    driver)."""
+    route = {q[0] for q in added if q[6] is None}
+    keys = {q[:2] for q in removed if q[6] is None} | {(q[0], negate(q[1])) for q in added}
+    if not route and not keys:
+        return []
+    cond = F.col("subject").isin(sorted(route)) | (
+        F.col("subject").isin(sorted({s for s, _ in keys}))
+        & F.col("predicate").isin(sorted({p for _, p in keys}))
     )
-    return (
-        adds.drop("graph")
-        .join(subject_graphs, "subject", "left")
-        .withColumn("graph", F.coalesce(F.col("target_graph"), F.lit(USER_GRAPH)))
-        .select(*QUAD_COLUMNS)
-    )
+    return [tuple(r) for r in store.quads.filter(cond).collect()]
 
 
-def _negation_quads(removed: DataFrame) -> DataFrame:
-    """Negation assertions for removals from synchronized graphs. A removed
-    personal:sameAs asserts personal:differentFrom (the special pair,
-    Negation.scala:21-23) rather than a prefixed quad."""
-    return removed.select(
-        F.col("subject"),
-        negate_col(F.col("predicate")).alias("predicate"),
-        F.col("object_value"),
-        F.col("object_type"),
-        F.col("object_datatype"),
-        F.col("object_lang"),
-        F.lit(USER_GRAPH).alias("graph"),
-    ).select(*QUAD_COLUMNS)
+def _write_back(
+    store: StatementStore, adds: set[Quad], removes: set[Quad], write_back: WriteBack | None
+) -> set[str]:
+    """Offer each synchronized graph its adds and removes; return the graphs
+    whose source accepted them. Synchronizers may expose the row-level
+    ``write_back_rows`` hook next to ``write_back`` (no Spark work inside);
+    plain callbacks get small local DataFrames."""
+    if write_back is None:
+        return set()
+    rows_fn = getattr(write_back, "write_back_rows", None)
+    if rows_fn is None and hasattr(write_back, "__self__"):
+        rows_fn = getattr(write_back.__self__, "write_back_rows", None)
+    spark = store.quads.sparkSession
+    accepted = set()
+    for g in sorted({q[6] for q in adds | removes}):
+        g_adds = sorted((q for q in adds if q[6] == g), key=str)
+        g_removes = sorted((q for q in removes if q[6] == g), key=str)
+        if rows_fn is not None:
+            ok = rows_fn(g, [q[:3] for q in g_adds], [q[:3] for q in g_removes])
+        else:
+            ok = write_back(
+                g,
+                local_relation(spark, g_adds, QUAD_SCHEMA),
+                local_relation(spark, g_removes, QUAD_SCHEMA),
+            )
+        if ok:
+            accepted.add(g)
+    return accepted
 
 
 def apply_update(
@@ -81,110 +102,49 @@ def apply_update(
     write_back: WriteBack | None = None,
 ) -> StatementStore:
     """Apply a SPARQL-UPDATE-style diff with source write-back routing."""
-    added = diff.added
-    graphless = added.filter(F.col("graph").isNull())
-    explicit = added.filter(F.col("graph").isNotNull())
-    routed = _route_graphless_adds(store, graphless) if not graphless.isEmpty() else graphless
+    added, removed = _collect(diff)
+    if not added and not removed:
+        return store
+    known = _lookup(store, added, removed)
 
-    # removals with NULL graph expand to ALL matching store statements
-    # (reference Updater.scala:138-144 — a context-less DELETE means "this
-    # triple, wherever it lives"), mirroring _route_graphless_adds
-    removed = diff.removed
-    graphless_rm = removed.filter(F.col("graph").isNull())
-    explicit_rm = removed.filter(F.col("graph").isNotNull())
-    if not graphless_rm.isEmpty():
-        resolved = store.quads.join(
-            graphless_rm.select(*SPOT).dropDuplicates(), on=list(SPOT), how="left_semi"
-        )
-        removed = explicit_rm.unionByName(resolved.select(*QUAD_COLUMNS))
-    else:
-        removed = explicit_rm
-    sync_removed = removed.filter(F.col("graph").startswith(synchronized_graph_prefix))
+    def route(subject: str) -> str:
+        """The subject's most populated graph, ties to the smallest IRI,
+        else the user graph (Updater.scala:109-130)."""
+        counts = Counter(q[6] for q in known if q[0] == subject)
+        return min(counts, key=lambda g: (-counts[g], g)) if counts else USER_GRAPH
 
-    # split adds by whether they target a synchronized source graph (explicit
-    # OR routed there by the possible-contexts inference) — those must go
-    # through the source's write-back, like removals (Updater.scala:47-75)
-    is_sync = F.col("graph").startswith(synchronized_graph_prefix)
-    candidate_adds = explicit.select(*QUAD_COLUMNS).unionByName(routed.select(*QUAD_COLUMNS))
-    sync_added = candidate_adds.filter(is_sync)
-    other_added = candidate_adds.filter(~is_sync)
+    def synced(q: Quad) -> bool:
+        return q[6].startswith(synchronized_graph_prefix)
 
-    # attempt write-back per synchronized graph over its adds AND removes;
-    # a failure asserts negations (removes) / reroutes to the user graph
-    # (adds — keeping them in the source graph would lose them on the next
-    # idempotent document re-delivery, which is why the reference keeps
-    # rejected adds in personal:userData)
-    failed_removals, failed_adds, ok_adds = sync_removed, sync_added, None
-    if write_back is not None:
-        # ONE job materializes the whole sync diff (update diffs are
-        # user-scale); grouping by graph happens driver-side, so a bulk
-        # update touching many graphs costs one Spark job, not 2×G filter
-        # jobs re-running the diff pipeline per graph
-        tagged = (
-            sync_added.select(*QUAD_COLUMNS).withColumn("__op", F.lit("add"))
-            .unionByName(
-                sync_removed.select(*QUAD_COLUMNS).withColumn("__op", F.lit("rm"))
-            )
-            .collect()
-        )
-        by_graph: dict[str, tuple[list, list]] = {}
-        for r in tagged:
-            slot = by_graph.setdefault(r["graph"], ([], []))
-            (slot[0] if r["__op"] == "add" else slot[1]).append(r)
-        # synchronizers may expose the row-level batch hook (no Spark work
-        # inside); plain callbacks get small local DataFrames instead
-        rows_fn = getattr(write_back, "write_back_rows", None)
-        if rows_fn is None and hasattr(write_back, "__self__"):
-            rows_fn = getattr(write_back.__self__, "write_back_rows", None)
-        spark = store.quads.sparkSession
-        ddl = ", ".join(f"{c} string" for c in QUAD_COLUMNS)
-        accepted_graphs = []
-        for g in sorted(by_graph):
-            adds, rms = by_graph[g]
-            if rows_fn is not None:
-                ok = rows_fn(
-                    g,
-                    [(r["subject"], r["predicate"], r["object_value"]) for r in adds],
-                    [(r["subject"], r["predicate"], r["object_value"]) for r in rms],
-                )
-            else:
-                added_df = spark.createDataFrame(
-                    [tuple(r[c] for c in QUAD_COLUMNS) for r in adds], ddl
-                )
-                removed_df = spark.createDataFrame(
-                    [tuple(r[c] for c in QUAD_COLUMNS) for r in rms], ddl
-                )
-                ok = write_back(g, added_df, removed_df)
-            if ok:
-                accepted_graphs.append(g)
-        if accepted_graphs:
-            failed_removals = sync_removed.filter(~F.col("graph").isin(accepted_graphs))
-            failed_adds = sync_added.filter(~F.col("graph").isin(accepted_graphs))
-            ok_adds = sync_added.filter(F.col("graph").isin(accepted_graphs))
+    adds = {q if q[6] is not None else (*q[:6], route(q[0])) for q in added}
+    # a context-less DELETE means "this triple, wherever it lives"
+    # (Updater.scala:138-144)
+    anywhere = {q[:4] for q in removed if q[6] is None}
+    removed = {q for q in removed if q[6] is not None} | {q for q in known if q[:4] in anywhere}
 
-    negations = _negation_quads(failed_removals)
-    all_adds = other_added.unionByName(
-        failed_adds.withColumn("graph", F.lit(USER_GRAPH)).select(*QUAD_COLUMNS)
+    # adds and removals in synchronized graphs go through the source's
+    # write-back (Updater.scala:47-75); a rejected removal asserts a
+    # negation, a rejected add moves to the user graph (kept in the source
+    # graph it would be lost on the next idempotent document re-delivery)
+    accepted = _write_back(
+        store, {q for q in adds if synced(q)}, {q for q in removed if synced(q)}, write_back
     )
-    if ok_adds is not None:
-        all_adds = all_adds.unionByName(ok_adds.select(*QUAD_COLUMNS))
+
+    def rejected(q: Quad) -> bool:
+        return synced(q) and q[6] not in accepted
+
+    negations = {(q[0], negate(q[1]), *q[2:6], USER_GRAPH) for q in removed if rejected(q)}
+    adds = {(*q[:6], USER_GRAPH) if rejected(q) else q for q in adds}
 
     # a user re-add clears any matching negation quad (reference Updater.
     # scala:34-36) — otherwise a once-removed triple stays suppressed forever,
     # since add_documents anti-joins sync adds against negations on every sync
-    neg_keys = all_adds.select(
-        "subject",
-        negate_col(F.col("predicate")).alias("predicate"),
-        "object_value",
-        "object_type",
-    ).dropDuplicates()
-    cleared_negations = store.quads.filter(
-        F.col("predicate").startswith(NEG_PREFIX)
-        | F.col("predicate").isin(vocab.SAME_AS, vocab.DIFFERENT_FROM)
-    ).join(neg_keys, on=list(SPOT), how="left_semi")
+    clears = {(q[0], negate(q[1]), *q[2:4]) for q in adds}
+    cleared = {q for q in known if is_negation(q[1]) and q[:4] in clears}
 
+    spark = store.quads.sparkSession
     effective = Diff(
-        all_adds.unionByName(negations),
-        removed.select(*QUAD_COLUMNS).unionByName(cleared_negations.select(*QUAD_COLUMNS)),
+        local_relation(spark, sorted(adds | negations, key=str), QUAD_SCHEMA),
+        local_relation(spark, sorted(removed | cleared, key=str), QUAD_SCHEMA),
     )
     return store.apply_diff(effective).materialize()
