@@ -4,6 +4,8 @@
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from thymeflow_back_spark.plans.sparql import sparql_ask, sparql_select
@@ -15,8 +17,11 @@ def iri_q(s, p, o, g):
     return (s, p, o, "iri", None, None, g)
 
 
+XSD_S = "http://www.w3.org/2001/XMLSchema#string"
+
+
 def lit_q(s, p, o, g):
-    return (s, p, o, "literal", "http://www.w3.org/2001/XMLSchema#string", None, g)
+    return (s, p, o, "literal", XSD_S, None, g)
 
 
 @pytest.fixture()
@@ -1066,3 +1071,157 @@ def test_unbound_asymmetric_star_matches_pair_closure(quads):
     got = {(r.a, r.b) for r in rows}
     assert ("p:alice", "p:carol") in got  # 2 hops forward
     assert ("p:carol", "p:alice") not in got  # never backward
+
+
+# --- term kinds and escaping in SELECT results --------------------------------
+
+
+def _bindings(df) -> list[dict]:
+    import json
+
+    from thymeflow_back_spark.api.service import select_json
+
+    return json.loads(select_json(df.toPandas()))["results"]["bindings"]
+
+
+def test_values_data_keeps_term_kinds(quads):
+    """VALUES cells carry their term's kind: a literal stays a literal."""
+    rows = _bindings(sparql_select(
+        quads, 'SELECT ?x WHERE { VALUES ?x { "hello" <urn:z> } }', keep_term_types=True
+    ))
+    assert sorted(rows, key=lambda b: b["x"]["value"]) == [
+        {"x": {"type": "literal", "value": "hello"}},
+        {"x": {"type": "uri", "value": "urn:z"}},
+    ]
+
+
+def test_group_by_key_keeps_term_kind(quads):
+    """A GROUP BY key bound in object position serializes as the literal
+    it is, not as an IRI."""
+    rows = _bindings(sparql_select(
+        quads,
+        PFX + "SELECT ?n (COUNT(?s) AS ?c) WHERE { ?s schema:name ?n } GROUP BY ?n",
+        keep_term_types=True,
+    ))
+    assert {b["n"]["value"] for b in rows} == {"Alice", "Bob", "Carol"}
+    assert all(b["n"]["type"] == "literal" for b in rows)
+
+
+def test_having_string_constant_is_unescaped(quads):
+    extra = make_quads(quads.sparkSession, [lit_q("p:dan", "schema:name", "O'Hara", "g:c")])
+    rows = sparql_select(
+        quads.unionByName(extra),
+        PFX + "SELECT ?n (COUNT(?s) AS ?c) WHERE { ?s schema:name ?n } "
+        "GROUP BY ?n HAVING (?n = \"O\\'Hara\")",
+    ).collect()
+    assert [(r.n, r.c) for r in rows] == [("O'Hara", 1)]
+
+
+# constants of the query text travel as parameters: any quote, comment or
+# escape sequence round-trips, and none changes the compiled statement
+_NASTY = ["'", '"', "\\", "`", "--", "/*", "*/", ";", "{", "}", ":c0", "é", "日本", "😀", "a", "x' OR '1'='1"]
+_literals = st.lists(st.sampled_from(_NASTY + [" ", "\n"]), min_size=1, max_size=6).map("".join)
+_iri_parts = st.lists(st.sampled_from(_NASTY), min_size=1, max_size=4).map(
+    lambda parts: "urn:x:" + "".join(parts).replace(" ", "")
+)
+
+
+def _sparql_string(value: str) -> str:
+    return '"' + value.replace("\\", "\\\\").replace('"', '\\"') + '"'
+
+
+@settings(max_examples=20, deadline=None, suppress_health_check=list(HealthCheck))
+@given(lit=_literals, iri=_iri_parts)
+def test_constants_round_trip_and_never_shape_the_statement(spark, lit, iri):
+    from thymeflow_back_spark.plans.sparql import explain_sparql
+
+    p, g = "urn:p", "urn:g"
+    store = make_quads(spark, [
+        (iri, p, lit, "literal", XSD_S, None, g),
+        ("urn:safe", p, "safe", "literal", XSD_S, None, g),
+    ])
+    assert [r.o for r in sparql_select(store, f"SELECT ?o WHERE {{ <{iri}> <{p}> ?o }}").collect()] == [lit]
+    match = f"SELECT ?s WHERE {{ ?s <{p}> {_sparql_string(lit)} }}"
+    assert [r.s for r in sparql_select(store, match).collect()] == [iri]
+    assert sparql_ask(store, f"ASK {{ <{iri}> <{p}> {_sparql_string(lit)} }}")
+    built = sparql_construct(store, f"CONSTRUCT {{ ?s <urn:q> ?o }} WHERE {{ ?s <{p}> ?o . FILTER(?o = {_sparql_string(lit)}) }}")
+    assert [(r.subject, r.object_value, r.object_type) for r in built.collect()] == [(iri, lit, "literal")]
+    diff = sparql_update_diff(store, f"DELETE WHERE {{ <{iri}> <{p}> {_sparql_string(lit)} }}")
+    # a DELETE WHERE template is graphless: apply_update expands it to every graph
+    assert [(r.subject, r.object_value, r.graph) for r in diff.removed.collect()] == [(iri, lit, None)]
+
+    def statement(value: str) -> str:
+        return explain_sparql(store, match.replace(_sparql_string(lit), _sparql_string(value))).split("\n-- ")[0]
+
+    assert statement(lit) == statement("safe")
+
+
+# --- closures above the driver cap ----------------------------------------------
+
+
+def test_closures_above_the_cap_run_distributed(quads, monkeypatch):
+    """With the driver cap at 0 every closure takes the distributed route
+    (bound endpoint: reachable_nodes; symmetric: connected components;
+    otherwise: transitive_closure) and answers exactly as the driver
+    route does."""
+    import thymeflow_back_spark.plans.sparql as S
+
+    queries = [
+        PFX + "SELECT ?f WHERE { ?f p:knows* p:carol }",
+        PFX + "SELECT ?o WHERE { p:alice p:knows+ ?o }",
+        PFX + "SELECT ?a ?b WHERE { ?a (p:knows|^p:knows)* ?b }",
+        PFX + "SELECT ?a ?b WHERE { ?a p:knows+ ?b }",
+        PFX + "SELECT ?x WHERE { p:alice (p:knows/p:knows?)+ ?x }",
+        # two distributed closures in one statement, and one nested in
+        # another: each result stays an input until the statement is analysed
+        PFX + "SELECT ?a ?c WHERE { ?a p:knows+ ?b . ?b (p:knows|^p:knows)+ ?c }",
+        PFX + "SELECT ?a ?b WHERE { ?a (p:knows+/p:knows)+ ?b }",
+    ]
+
+    def answers():
+        return [sorted(map(tuple, sparql_select(quads, q).collect())) for q in queries]
+
+    local = answers()
+    calls = []
+    for name in ("reachable_nodes", "connected_components_star", "transitive_closure"):
+        real = getattr(S, name)
+        monkeypatch.setattr(S, name, lambda *a, _real=real, _name=name, **k: calls.append(_name) or _real(*a, **k))
+    monkeypatch.setattr(S, "LOCAL_CLOSURE_MAX_ROWS", 0)
+    assert answers() == local
+    assert set(calls) == {"reachable_nodes", "connected_components_star", "transitive_closure"}
+
+
+def test_closure_pairs_above_the_cap_run_distributed(quads, monkeypatch):
+    """The cap bounds the rows the driver route would inline, not only the
+    edge rows: two knows edges fit a cap of 2, but their all-pairs closure
+    has three pairs, so it runs distributed; a bound endpoint (two reached
+    nodes) stays on the driver."""
+    import thymeflow_back_spark.plans.sparql as S
+
+    calls = []
+    real = S.transitive_closure
+    monkeypatch.setattr(S, "transitive_closure", lambda *a, **k: calls.append(1) or real(*a, **k))
+    monkeypatch.setattr(S, "LOCAL_CLOSURE_MAX_ROWS", 2)
+    rows = sparql_select(quads, PFX + "SELECT ?a ?b WHERE { ?a p:knows+ ?b }").collect()
+    assert sorted(map(tuple, rows)) == [("p:alice", "p:bob"), ("p:alice", "p:carol"), ("p:bob", "p:carol")]
+    assert calls == [1]
+    rows = sparql_select(quads, PFX + "SELECT ?x WHERE { p:alice p:knows+ ?x }").collect()
+    assert sorted(r.x for r in rows) == ["p:bob", "p:carol"]
+    assert calls == [1]
+
+
+def test_compiling_keeps_a_cached_store_cached(quads):
+    """A statement reads the store through a temp view for its one
+    ``spark.sql`` call; dropping that view afterwards must not uncache a
+    pinned store with the same plan, and leaves no view behind."""
+    spark = quads.sparkSession
+    store = quads.cache()
+    try:
+        store.count()
+        before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        rows = sparql_select(store, PFX + "SELECT ?o WHERE { p:alice p:knows+ ?o }").collect()
+        assert sorted(r.o for r in rows) == ["p:bob", "p:carol"]
+        assert store.storageLevel.useMemory
+        assert {t.name for t in spark.catalog.listTables() if t.isTemporary} == before
+    finally:
+        store.unpersist()

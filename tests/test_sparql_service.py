@@ -383,3 +383,76 @@ def test_formats_agree_on_null_bearing_int_column(spark):
     assert terms["1"]["datatype"] == "http://www.w3.org/2001/XMLSchema#integer"
     assert terms["1"]["value"] == "9007199254740993"
     assert terms["2"] is None  # NULL stays unbound, not NaN-serialized
+
+
+def test_explain_returns_compiled_statement(quads):
+    """explain=1 (GET, form or POST URL parameter) answers with the Spark SQL
+    statement and its named parameters as text/plain; nothing runs, so an
+    update explained this way leaves the store unchanged."""
+    endpoint = SparqlEndpoint(StatementStore(quads))
+    store = endpoint.store
+    base = f"http://127.0.0.1:{endpoint.start()}/sparql"
+    try:
+        q = PFX + 'SELECT ?who WHERE { ?who schema:name "Ada" }'
+        with urllib.request.urlopen(f"{base}?explain=1&query={urllib.parse.quote(q)}") as resp:
+            assert resp.headers["Content-Type"].startswith("text/plain")
+            text = resp.read().decode()
+        statement, _, params = text.partition("\n-- ")
+        assert statement.startswith("SELECT") and "{store}" in statement
+        # constants are parameters, never SQL text
+        assert "Ada" not in statement and "schema.org" not in statement
+        assert '"Ada"' in params and '"http://schema.org/name"' in params
+
+        update = 'DELETE WHERE { ?s <http://schema.org/name> "Ada" }'
+        body = urllib.parse.urlencode({"update": update, "explain": "1"}).encode()
+        req = urllib.request.Request(
+            base, data=body, headers={"Content-Type": "application/x-www-form-urlencoded"}
+        )
+        with urllib.request.urlopen(req) as resp:
+            assert resp.status == 200 and "__added" in resp.read().decode()
+        # from the POST URL only explain is read: the body's update wins
+        # over a query= there
+        req = urllib.request.Request(
+            f"{base}?explain=1&query={urllib.parse.quote(q)}",
+            data=urllib.parse.urlencode({"update": update}).encode(),
+            headers={"Content-Type": "application/x-www-form-urlencoded"},
+        )
+        with urllib.request.urlopen(req) as resp:
+            assert resp.status == 200 and "__added" in resp.read().decode()
+        assert endpoint.store is store
+
+        req = urllib.request.Request(
+            f"{base}?explain=1", data=b"SELECT ?x WHERE { ?x }",
+            headers={"Content-Type": "application/sparql-query"},
+        )
+        try:
+            urllib.request.urlopen(req)
+            raise AssertionError("expected HTTP 400")
+        except urllib.error.HTTPError as e:
+            assert e.code == 400
+    finally:
+        endpoint.stop()
+
+
+def test_store_versions_do_not_leak_views(spark, quads):
+    """A statement reads the store as a DataFrame argument of its one
+    ``spark.sql`` call; no store version, current or replaced, leaves a
+    view in the session catalog."""
+    import gc
+
+    def views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = views()
+    endpoint = SparqlEndpoint(StatementStore(quads))
+    read = PFX + "SELECT ?n WHERE { <urn:p:1> schema:name ?n }"
+    for i in range(20):
+        if i % 2:
+            update = f'INSERT DATA {{ <urn:p:1> <urn:tag> "t{i}" }}'
+        else:
+            update = f'DELETE {{ ?s <urn:tag> ?t }} INSERT {{ ?s <urn:tag> "t{i}" }} WHERE {{ ?s <urn:tag> ?t }}'
+        assert endpoint.handle(update)[0] == 204
+        assert endpoint.handle(read)[0] == 200
+    gc.collect()
+    assert endpoint.handle(read)[0] == 200
+    assert views() == before

@@ -17,12 +17,16 @@ This module is that surface over the Spark engine:
 Document formats (JSON/XML) collect to the driver under a row cap; the
 line formats (CSV/TSV) stream through ``toLocalIterator`` in chunks with
 no cap — the Spark analogue of the reference's piped background writer
-(SparqlService.scala:183-195). The QUERY itself always runs distributed.
+(SparqlService.scala:183-195). Each request compiles to one Spark SQL
+statement; a property-path closure over an edge relation under the cap of
+plans/sparql.py is closed on the driver before that statement is built,
+anything larger runs distributed. ``explain=1`` on ``/sparql`` returns the
+statement text and its parameters instead of running it.
 
 Term kinds in SELECT results are exact, not guessed: the compiler carries
-hidden ``__type/__datatype/__lang`` columns for object-bound variables
-(``keep_term_types=True``), and a variable without them was bound in
-subject/predicate/graph position — an IRI by construction.
+hidden ``__type/__datatype/__lang`` columns for every variable a pattern,
+VALUES, BIND or GROUP BY key binds (``keep_term_types=True``); a variable
+without them is an aggregate or function output, typed from its column.
 """
 
 from __future__ import annotations
@@ -38,7 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..plans.sparql import (
-    _Parser,
+    explain_sparql,
+    query_form,
     sparql_ask,
     sparql_construct,
     sparql_describe,
@@ -50,21 +55,6 @@ from ..supervisor import documents_per_source
 from ..update.updater import WriteBack, apply_update
 
 _XSD = "http://www.w3.org/2001/XMLSchema#"
-
-
-def query_form(text: str) -> str:
-    """select|ask|construct|describe|update — the dispatch the reference
-    does via RDF4J's parsed query class (SparqlService.scala:100-158)."""
-    p = _Parser(text)
-    p.parse_prologue()
-    kind, val = p.peek()
-    if kind == "KW":
-        v = val.upper()
-        if v in ("SELECT", "ASK", "CONSTRUCT", "DESCRIBE"):
-            return v.lower()
-        if v in ("INSERT", "DELETE"):
-            return "update"
-    raise SyntaxError(f"SPARQL: cannot dispatch query starting at {val!r}")
 
 
 @dataclass
@@ -133,8 +123,8 @@ def _term(pdf_row, var: str, dtype_kind: str) -> dict | None:
         return None
     ttype = pdf_row.get(f"{var}__type")
     if ttype is None:
-        # no hidden columns: subject/predicate/graph-position var → IRI;
-        # aggregate outputs land here too, typed from the pandas dtype
+        # no hidden columns: an aggregate or function output, typed from
+        # the pandas dtype (a string falls back to an IRI)
         if dtype_kind in "iu":
             return {"type": "literal", "value": str(int(value)), "datatype": _XSD + "integer"}
         if dtype_kind == "f":
@@ -379,7 +369,11 @@ class SparqlEndpoint:
 
     GET /sparql?query=… and POST /sparql (form-encoded `query=`/`update=`,
     `application/sparql-query`, or `application/sparql-update`) — the same
-    surface SparqlService.scala:38-74 mounts. The held store is swapped
+    surface SparqlService.scala:38-74 mounts. With `explain=1` (a GET or
+    form parameter, or in the POST URL) the response is the compiled
+    statement instead of the result; compiling evaluates the request's
+    property-path closures, so a closure above the driver cap runs its
+    distributed operator even then. The held store is swapped
     atomically on update; reads serve from the store current at arrival.
     """
 
@@ -468,6 +462,18 @@ class SparqlEndpoint:
             # (AnalysisException from an unbound variable, bad bindings, …)
             # must produce an HTTP response, not kill the handler thread
             return 500, "text/plain", f"query evaluation failed: {e}"
+
+    def explain(self, text: str) -> tuple[int, str, str]:
+        """(status, content_type, body) of an EXPLAIN request: the Spark SQL
+        statements ``text`` compiles to, with their named parameters, as
+        text/plain. The statements do not run, but their closures are
+        evaluated (see ``explain_sparql``)."""
+        try:
+            return 200, "text/plain", explain_sparql(self.store.quads, text)
+        except SyntaxError as e:
+            return 400, "text/plain", str(e)
+        except Exception as e:  # noqa: BLE001 — analysis errors are a response too
+            return 500, "text/plain", f"query compilation failed: {e}"
 
     def service_description(self) -> str:
         """SPARQL 1.1 Service Description (Turtle) — union default graph and
@@ -564,6 +570,8 @@ class SparqlEndpoint:
                     return self._respond(
                         200, "text/turtle", endpoint.service_description()
                     )
+                if params.get("explain") == ["1"]:
+                    return self._respond(*endpoint.explain(params["query"][0]))
                 status, ctype, body = endpoint.handle(
                     params["query"][0], self.headers.get("Accept", "")
                 )
@@ -576,8 +584,12 @@ class SparqlEndpoint:
                 length = int(self.headers.get("Content-Length", "0"))
                 raw = self.rfile.read(length).decode("utf-8")
                 ctype = (self.headers.get("Content-Type") or "").split(";")[0].strip()
+                # explain may ride in the URL whatever the body type; the
+                # request text comes from the body only
+                explain = parse_qs(url.query).get("explain") == ["1"]
                 if ctype == "application/x-www-form-urlencoded":
                     params = parse_qs(raw)
+                    explain = explain or params.get("explain") == ["1"]
                     text = (params.get("query") or params.get("update") or [""])[0]
                 elif ctype in ("application/sparql-query", "application/sparql-update"):
                     text = raw
@@ -585,6 +597,8 @@ class SparqlEndpoint:
                     return self._respond(415, "text/plain", f"unsupported content type {ctype}")
                 if not text:
                     return self._respond(400, "text/plain", "missing query")
+                if explain:
+                    return self._respond(*endpoint.explain(text))
                 status, rtype, body = endpoint.handle(text, self.headers.get("Accept", ""))
                 self._respond(status, rtype, body)
 

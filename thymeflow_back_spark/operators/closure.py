@@ -156,8 +156,29 @@ def transitive_closure(
     return reach.select(F.col("s").alias(src), F.col("d").alias(dst))
 
 
+# edge rows a driver-side closure accepts; above it, the distributed forms
+LOCAL_CLOSURE_MAX_ROWS = 100_000
+
+
+def reach_local(adj: dict[str, set[str]], start: str) -> set[str]:
+    """Nodes reachable from ``start`` by >= 1 edge of the driver-side
+    adjacency ``adj``; ``start`` itself is in the result iff it lies on a
+    cycle (the >= 1-step semantics of :func:`reachable_nodes`)."""
+    seen: set[str] = set()
+    stack = list(adj.get(start, ()))
+    while stack:
+        cur = stack.pop()
+        if cur not in seen:
+            seen.add(cur)
+            stack.extend(adj.get(cur, ()))
+    return seen
+
+
 def transitive_closure_local(
-    edges: DataFrame, src: str = "src", dst: str = "dst", max_rows: int = 100_000
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    max_rows: int = LOCAL_CLOSURE_MAX_ROWS,
 ) -> DataFrame:
     """Reflexive-transitive closure computed DRIVER-SIDE for MODEL-SIZED
     edge sets — same output relation as :func:`transitive_closure`
@@ -191,15 +212,7 @@ def transitive_closure_local(
         nodes.add(r["d"])
     pairs: set[tuple[str, str]] = {(n, n) for n in nodes}
     for start in nodes:
-        seen: set[str] = set()
-        stack = list(adj.get(start, ()))
-        while stack:
-            cur = stack.pop()
-            if cur in seen:
-                continue
-            seen.add(cur)
-            stack.extend(adj.get(cur, ()))
-        pairs.update((start, d) for d in seen)
+        pairs.update((start, d) for d in reach_local(adj, start))
     spark = edges.sparkSession
     return spark.createDataFrame(
         sorted(pairs), schema=f"{src} string, {dst} string"
