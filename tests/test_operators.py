@@ -1,4 +1,7 @@
-"""Unit tests for operators: closure, BGP compiler, interval join, top-k."""
+"""Unit tests for operators: closure, interval join, graph statistics
+(triangles, k-core, GraphML), similarity joins, full-text index, top-k,
+skew salting and profiling. Triple-pattern matching is tested through
+SPARQL text in test_sparql.py."""
 
 from __future__ import annotations
 
@@ -8,8 +11,6 @@ from pyspark.sql import functions as F
 from thymeflow_back_spark.operators.closure import connected_components, transitive_closure
 from thymeflow_back_spark.operators.interval_join import interval_overlap_self_join
 from thymeflow_back_spark.operators.topk import top_k_per_group
-from thymeflow_back_spark.plans.patterns import BGP
-from thymeflow_back_spark.rdf.model import V, make_quads
 
 
 def test_connected_components_chain_and_clique(spark):
@@ -31,52 +32,6 @@ def test_transitive_closure_reflexive(spark):
     assert got == {
         ("a", "a"), ("b", "b"), ("c", "c"),
         ("a", "b"), ("b", "c"), ("a", "c"),
-    }
-
-
-def test_bgp_two_hop_and_optional(spark):
-    quads = make_quads(
-        spark,
-        [
-            ("alice", "email", "a@x", "iri", None, None, "g"),
-            ("a@x", "name", "A. Smith", "literal", None, None, "g"),
-            ("bob", "email", "b@x", "iri", None, None, "g"),
-        ],
-    )
-    bgp = BGP(quads)
-    two_hop = bgp.compile([(V("agent"), "email", V("em")), (V("em"), "name", V("name"))])
-    assert [(r.agent, r.em, r.name) for r in two_hop.collect()] == [("alice", "a@x", "A. Smith")]
-    base = bgp.compile([(V("agent"), "email", V("em"))])
-    opt = bgp.optional(base, [(V("em"), "name", V("name"))])
-    got = {(r.agent, r.name) for r in opt.collect()}
-    assert got == {("alice", "A. Smith"), ("bob", None)}
-
-
-def test_bgp_track_types_object_object_join(spark):
-    """Regression: a variable shared between two OBJECT positions under
-    track_types carries hidden __type/__datatype/__lang columns that are NULL
-    for IRIs / plain literals. Those must not be equi-join keys (NULL = NULL
-    is false) — the join is on base names with null-safe kind agreement."""
-    quads = make_quads(
-        spark,
-        [
-            ("alice", "attends", "ev1", "iri", None, None, "g"),
-            ("bob", "hosts", "ev1", "iri", None, None, "g"),
-            ("carol", "attends", "ev2", "iri", None, None, "g"),
-            # same lexical form as ev2 but a literal: kinds disagree → no match
-            ("dave", "hosts", "ev2", "literal", None, None, "g"),
-        ],
-    )
-    bgp = BGP(quads, track_types=True)
-    joined = bgp.compile([(V("a"), "attends", V("e")), (V("b"), "hosts", V("e"))])
-    assert {(r.a, r.b, r.e) for r in joined.collect()} == {("alice", "bob", "ev1")}
-    # OPTIONAL: kind mismatch is a non-match (row kept, right side NULL),
-    # not a dropped row and not a merge.
-    base = bgp.compile([(V("a"), "attends", V("e"))])
-    opt = bgp.optional(base, [(V("b"), "hosts", V("e"))])
-    assert {(r.a, r.e, r.b) for r in opt.collect()} == {
-        ("alice", "ev1", "bob"),
-        ("carol", "ev2", None),
     }
 
 

@@ -56,13 +56,3 @@ def test_negation_blocks_resync(spark):
     )
     assert rows(diff.added) == {q("s1", "name", "Bob", "g:doc1")}
     assert q("s1", "name", "Alice", "g:doc1") not in rows(store2.quads)
-
-
-def test_graph_removal_and_ask(spark):
-    store = StatementStore(
-        make_quads(spark, [q("s1", "name", "Alice", "g:doc1"), q("s2", "name", "Bob", "g:doc2")])
-    )
-    assert store.ask(subject="s1", predicate="name")
-    assert not store.ask(subject="s1", predicate="age")
-    store2 = store.remove_graph("g:doc1")
-    assert rows(store2.quads) == {q("s2", "name", "Bob", "g:doc2")}

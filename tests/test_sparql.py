@@ -63,6 +63,52 @@ def test_select_bgp_optional(quads):
     ]
 
 
+def test_two_hop_join_and_optional(spark):
+    """A variable bound in object position and reused as a subject joins
+    the two patterns; under OPTIONAL, a left row without a match is kept
+    with the right side unbound."""
+    quads = make_quads(
+        spark,
+        [
+            iri_q("alice", "email", "a@x", "g"),
+            lit_q("a@x", "name", "A. Smith", "g"),
+            iri_q("bob", "email", "b@x", "g"),
+        ],
+    )
+    rows = sparql_select(
+        quads, "SELECT ?agent ?em ?name WHERE { ?agent <email> ?em . ?em <name> ?name }"
+    ).collect()
+    assert [(r.agent, r.em, r.name) for r in rows] == [("alice", "a@x", "A. Smith")]
+    rows = sparql_select(
+        quads, "SELECT ?agent ?name WHERE { ?agent <email> ?em . OPTIONAL { ?em <name> ?name } }"
+    ).collect()
+    assert {(r.agent, r.name) for r in rows} == {("alice", "A. Smith"), ("bob", None)}
+
+
+def test_object_object_join_checks_term_kinds(spark):
+    """A variable shared by two object positions matches on its value AND
+    its term kind: an IRI and a literal with the same text join to
+    nothing. The kind columns are not equi-join keys (datatype and lang
+    are NULL for IRIs, and NULL = NULL is not true), so two IRIs still
+    match; under OPTIONAL the mismatch keeps the left row, right side
+    unbound."""
+    quads = make_quads(
+        spark,
+        [
+            iri_q("alice", "attends", "ev1", "g"),
+            iri_q("bob", "hosts", "ev1", "g"),
+            iri_q("carol", "attends", "ev2", "g"),
+            ("dave", "hosts", "ev2", "literal", None, None, "g"),
+        ],
+    )
+    rows = sparql_select(quads, "SELECT ?a ?b ?e WHERE { ?a <attends> ?e . ?b <hosts> ?e }").collect()
+    assert {(r.a, r.b, r.e) for r in rows} == {("alice", "bob", "ev1")}
+    rows = sparql_select(
+        quads, "SELECT ?a ?e ?b WHERE { ?a <attends> ?e . OPTIONAL { ?b <hosts> ?e } }"
+    ).collect()
+    assert {(r.a, r.e, r.b) for r in rows} == {("alice", "ev1", "bob"), ("carol", "ev2", None)}
+
+
 def test_union_and_filter_in(quads):
     rows = sparql_select(
         quads,
@@ -621,7 +667,7 @@ def test_union_subject_position_binding_under_track_types(quads):
     """A UNION branch that binds the shared variable in SUBJECT position
     must still join downstream patterns under keep_term_types: the branch
     emits ?v__type='iri' instead of a null-filled column that the join's
-    kind check would treat as a mismatch (round-3 ADVICE, patterns.py)."""
+    kind check would treat as a mismatch."""
     rows = sparql_select(
         quads,
         PFX

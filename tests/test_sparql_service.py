@@ -18,8 +18,8 @@ from thymeflow_back_spark.api.service import (
     SparqlEndpoint,
     ask_json,
     execute_sparql,
+    iter_select,
     query_form,
-    select_csv,
     select_json,
     select_xml,
 )
@@ -120,7 +120,7 @@ def test_select_xml_and_csv(quads):
     )
     xml = select_xml(df)
     assert '<variable name="n"/>' in xml and "<literal>Ada</literal>" in xml
-    csv = select_csv(df)
+    csv = "".join(iter_select(df, "text/csv"))
     assert csv.splitlines() == ["n", "Ada"]
 
 
@@ -263,15 +263,13 @@ def test_service_description_and_dashboard(spark, quads):
         endpoint.stop()
 
 
-def test_select_tsv_term_encoding(quads):
-    from thymeflow_back_spark.api.service import select_tsv
-
+def test_tsv_term_encoding(quads):
     df = sparql_select(
         quads,
         PFX + "SELECT ?who ?m ?n ?a WHERE { ?who schema:email ?m . ?who schema:name ?n . ?who schema:age ?a }",
         keep_term_types=True,
     )
-    lines = select_tsv(df).splitlines()
+    lines = "".join(iter_select(df, "text/tab-separated-values")).splitlines()
     assert lines[0].split("\t") == ["?who", "?m", "?n", "?a"]
     assert lines[1].split("\t") == [
         "<urn:p:1>",
@@ -283,13 +281,12 @@ def test_select_tsv_term_encoding(quads):
     df = sparql_select(
         quads, PFX + "SELECT ?n WHERE { <urn:p:2> schema:name ?n }", keep_term_types=True
     )
-    assert select_tsv(df).splitlines()[1] == '"Grace"@en'
+    assert "".join(iter_select(df, "text/tab-separated-values")).splitlines()[1] == '"Grace"@en'
 
 
 def test_endpoint_streams_line_formats_past_cap(quads):
     """CSV/TSV stream through toLocalIterator with NO row cap (the piped-
-    writer parity path); document formats keep the 413 guard; disabling
-    stream_large restores the capped behavior for every format."""
+    writer parity path); document formats keep the 413 guard."""
     endpoint = SparqlEndpoint(StatementStore(quads), max_rows=2)
     big = "SELECT ?s ?p ?o WHERE { ?s ?p ?o }"
     status, ctype, body = endpoint.handle(big, accept="text/csv")
@@ -302,10 +299,6 @@ def test_endpoint_streams_line_formats_past_cap(quads):
     assert text.splitlines()[0] == "?s\t?p\t?o" and len(text.splitlines()) == 6
     # JSON still capped
     status, _, body = endpoint.handle(big)
-    assert status == 413
-    # stream_large=False: CSV capped again
-    capped = SparqlEndpoint(StatementStore(quads), max_rows=2, stream_large=False)
-    status, _, body = capped.handle(big, accept="text/csv")
     assert status == 413
 
 
@@ -325,21 +318,13 @@ def test_http_streaming_no_content_length(quads):
         endpoint.stop()
 
 
-def test_select_tsv_nullable_int_null_cell(quads):
-    """Capped-path TSV: a NULL in an Int64-coerced integer column must
-    serialize as an empty cell, not crash on pd.NA (round-4 review —
-    str(int(pd.NA)) raised TypeError and the endpoint returned 500)."""
-    import pandas as pd
-
-    from thymeflow_back_spark.api.service import select_tsv
-
-    pdf = pd.DataFrame(
-        {"s": pd.array([4, None], dtype="Int64"), "who": ["urn:a", "urn:b"]}
-    )
-    lines = select_tsv(pdf).splitlines()
-    assert lines[0].split("\t") == ["?s", "?who"]
-    assert lines[1].split("\t")[0] == '"4"^^<http://www.w3.org/2001/XMLSchema#integer>'
-    assert lines[2].split("\t")[0] == ""  # unbound, not a crash
+def test_csv_nullable_int_null_cell(spark):
+    """CSV goes through pandas, where a NULL in an integer column is a
+    nullable-Int64 pd.NA: it must serialize as an empty cell next to
+    exact integers, not float-ify the column ('4.0') or crash."""
+    df = spark.createDataFrame([(4, "urn:a"), (None, "urn:b")], "s long, who string").orderBy("who")
+    lines = "".join(iter_select(df, "text/csv")).splitlines()
+    assert lines == ["s,who", "4,urn:a", ",urn:b"]
 
 
 def test_streamed_tsv_exact_big_ints_with_nulls(spark):

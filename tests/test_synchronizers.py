@@ -254,24 +254,15 @@ END:VCALENDAR
     # rename the event through the write-back path (remove+add = replace)
     graph = f"{directory}#cal.ics"
     ev = "urn:event:e-1"
-    schema = store.quads.schema
-    adds = spark.createDataFrame(
-        [(ev, vocab.NAME, "Planning", "literal", None, None, graph)], schema
-    )
-    removes = spark.createDataFrame(
-        [(ev, vocab.NAME, "Standup", "literal", None, None, graph)], schema
-    )
-    assert sync.write_back(graph, adds, removes) is True
+    removes = [(ev, vocab.NAME, "Standup")]
+    assert sync.write_back(graph, [(ev, vocab.NAME, "Planning")], removes) is True
     _, body = transport.state[directory]["cal.ics"]
     assert b"SUMMARY:Planning" in body and b"SUMMARY:Standup" not in body
     assert b"DTSTART:20260601T090000Z" in body  # untouched property survives
     # VCALENDAR wrapper preserved
     assert body.startswith(b"BEGIN:VCALENDAR") and body.rstrip().endswith(b"END:VCALENDAR")
     # unsupported predicate → rejected → write_back False
-    bad = spark.createDataFrame(
-        [(ev, "urn:unsupported", "x", "literal", None, None, graph)], schema
-    )
-    assert sync.write_back(graph, bad, removes.limit(0)) is False
+    assert sync.write_back(graph, [(ev, "urn:unsupported", "x")], []) is False
 
 
 class FakePagedGraphApi:

@@ -86,41 +86,23 @@ def _accepts(graph: str) -> bool:
     return graph == ACCEPTS
 
 
-class _RowsSource:
-    """A synchronizer-like write-back owner: the endpoint is handed its bound
-    ``write_back``, and the updater finds the row-level hook next to it."""
-
-    def __init__(self):
-        self.calls = []
-
-    def write_back_rows(self, graph, adds, removes):
-        self.calls.append((graph, sorted(adds), sorted(removes)))
-        return _accepts(graph)
-
-    def write_back(self, graph, added, removed):  # never reached: the row hook wins
-        raise AssertionError("DataFrame write-back called despite a row hook")
-
-
 def _impl_update(spark, store, added, removed, mode):
-    """(store rows after apply_update, write-back calls) for one write-back mode."""
+    """(store rows after apply_update, write-back calls), with no write-back
+    (mode "none") or one taking (s, p, o) rows (mode "rows")."""
     calls = []
 
-    def frames(graph, added_df, removed_df):
-        rows = [sorted((r.subject, r.predicate, r.object_value) for r in df.collect())
-                for df in (added_df, removed_df)]
-        calls.append((graph, *rows))
+    def write_back(graph, adds, removes):
+        calls.append((graph, sorted(adds), sorted(removes)))
         return _accepts(graph)
 
-    source = _RowsSource()
-    write_back = {"none": None, "frames": frames, "rows": source.write_back}[mode]
     out = apply_update(
         StatementStore(spark.createDataFrame(sorted(store, key=str), DDL)),
         Diff(spark.createDataFrame(sorted(added, key=str), DDL),
              spark.createDataFrame(sorted(removed, key=str), DDL)),
         synchronized_graph_prefix=PREFIX,
-        write_back=write_back,
+        write_back=None if mode == "none" else write_back,
     )
-    return {tuple(r) for r in out.quads.collect()}, calls + source.calls
+    return {tuple(r) for r in out.quads.collect()}, calls
 
 
 def _quads(predicates, graphs):
@@ -136,7 +118,7 @@ def updates(draw):
     if store:  # removals that hit the store, explicitly or graphless
         hits = draw(st.sets(st.sampled_from(sorted(store, key=str)), max_size=2))
         removed |= {h if draw(st.booleans()) else (*h[:6], None) for h in hits}
-    mode = draw(st.sampled_from(("none", "frames", "rows")))
+    mode = draw(st.sampled_from(("none", "rows")))
     return store, added, removed, mode
 
 
@@ -148,7 +130,7 @@ def updates(draw):
           {q("s1", "p:a", "o1", ACCEPTS)}, "rows"))
 # write-back rejected: the add moves to the user graph, the removal asserts a negation
 @example(({q("s1", "p:a", "o1", REJECTS)}, {q("s1", "p:b", "v", REJECTS)},
-          {q("s1", "p:a", "o1", REJECTS)}, "frames"))
+          {q("s1", "p:a", "o1", REJECTS)}, "rows"))
 # graphless add routed to the dominant (synchronized) graph, graphless removal expanded
 @example(({q("s1", "p:a", "o1", REJECTS), q("s1", "p:b", "o1", REJECTS),
            q("s1", "p:a", "v", OTHER)},

@@ -9,8 +9,10 @@ surface Spark-first:
 
 - ``rdf``        — quad data model, statement store (graph-replace / negation
                    semantics of reference Pipeline.scala:61-93) on DataFrames.
-- ``plans``      — a pattern-join (BGP/OPTIONAL/UNION/FILTER) builder compiling
-                   the SPARQL-subset workload of SURVEY.md §2.3 to DataFrames.
+- ``plans``      — the SPARQL text compiler: the SPARQL-subset workload of
+                   SURVEY.md §2.3 (BGP/OPTIONAL/UNION/FILTER, paths,
+                   aggregates, updates) as one Spark SQL statement per
+                   request over the quad store.
 - ``operators``  — interval joins, sessionization, top-k, dedup (exact /
                    MinHash-LSH / SimHash / n-gram Jaccard), similarity search,
                    text analysis, closure/connected components.

@@ -6,7 +6,6 @@ from .service import (  # noqa: F401
     execute_sparql,
     quads_ntriples,
     query_form,
-    select_csv,
     select_json,
     select_xml,
 )

@@ -39,9 +39,11 @@ from urllib.parse import parse_qs, urlparse
 from xml.sax.saxutils import escape
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..plans.sparql import (
+    HIDDEN_SUFFIXES,
     explain_sparql,
     query_form,
     sparql_ask,
@@ -98,14 +100,11 @@ def execute_sparql(
 # SELECT / ASK result serialization (SPARQL 1.1 Query Results formats)
 
 
-# suffixes of the hidden term-kind columns (plans.patterns emits them under
-# track_types); an explicit suffix set, NOT a '__' substring test, so a
-# legitimately projected variable whose name contains '__' is kept
-from ..plans.patterns import HIDDEN_SUFFIXES as _HIDDEN_COL_SUFFIXES  # noqa: E402
-
-
-def _solution_columns(pdf: pd.DataFrame) -> list[str]:
-    return [c for c in pdf.columns if not c.endswith(_HIDDEN_COL_SUFFIXES)]
+def _solution_columns(columns) -> list[str]:
+    """The solution variables among ``columns``: the hidden term-kind
+    columns are dropped by their exact suffixes, NOT by a '__' substring
+    test, so a projected variable whose name contains '__' is kept."""
+    return [c for c in columns if not c.endswith(HIDDEN_SUFFIXES)]
 
 
 def _to_pandas(df) -> pd.DataFrame:
@@ -148,7 +147,7 @@ def _term(pdf_row, var: str, dtype_kind: str) -> dict | None:
 
 def _solutions(df) -> tuple[list[str], list[dict]]:
     pdf = _to_pandas(df)
-    cols = _solution_columns(pdf)
+    cols = _solution_columns(pdf.columns)
     kinds = {c: pdf[c].dtype.kind for c in cols}
     rows = []
     for _, r in pdf.iterrows():
@@ -193,13 +192,6 @@ def select_xml(df: DataFrame) -> str:
     return "".join(parts)
 
 
-def select_csv(df) -> str:
-    """text/csv (SPARQL 1.1 CSV: plain lexical values)."""
-    pdf = _to_pandas(df)
-    cols = _solution_columns(pdf)
-    return pdf[cols].to_csv(index=False, lineterminator="\r\n")
-
-
 def _tsv_term(term: dict | None) -> str:
     """One term in SPARQL 1.1 TSV encoding (Turtle-style): IRIs in <>,
     bnodes as _:label, literals quoted with @lang / ^^<datatype>."""
@@ -225,17 +217,9 @@ def _tsv_term(term: dict | None) -> str:
     return f'"{value}"'
 
 
-def select_tsv(df) -> str:
-    """text/tab-separated-values (SPARQL 1.1 TSV) — the writer-registry
-    format the reference serves through RDF4J's
-    SPARQLResultsTSVWriter (api/SparqlService.scala writer registries)."""
-    cols, rows = _solutions(df)
-    lines = ["\t".join(f"?{c}" for c in cols)]
-    for row in rows:
-        lines.append("\t".join(_tsv_term(row.get(c)) for c in cols))
-    return "\n".join(lines) + "\n"
-
-
+# the line formats: SPARQL 1.1 CSV (plain lexical values) and TSV (the
+# format the reference serves through RDF4J's SPARQLResultsTSVWriter),
+# both streamed by ``iter_select``
 _STREAMABLE = ("text/csv", "text/tab-separated-values")
 
 
@@ -254,24 +238,12 @@ def _exact_pandas(df: DataFrame) -> pd.DataFrame:
     ``toPandas()`` converts an int64 column containing a NULL to float64 at
     collection time — digits past 2^53 are already wrong before any
     coercion can run. Arrow holds int64 + a null mask natively, so routing
-    through ``toArrow`` with a nullable-Int64 types_mapper is exact; the
-    fallback builds object columns from Row dicts (python ints, exact)."""
-    try:
-        import pyarrow as pa
-
-        mapper = {pa.int64(): pd.Int64Dtype(),
-                  pa.int32(): pd.Int32Dtype(),
-                  pa.int16(): pd.Int16Dtype(),
-                  pa.int8(): pd.Int8Dtype()}
-        return df.toArrow().to_pandas(types_mapper=mapper.get)
-    except (ImportError, AttributeError):
-        # Arrow (or DataFrame.toArrow) genuinely unavailable. ONLY those:
-        # a blanket except would swallow a runtime query failure and
-        # silently re-execute the whole job through collect() — paying
-        # twice and retrying an OOM-ing result on a hungrier path.
-        return pd.DataFrame(
-            [r.asDict() for r in df.collect()], columns=df.columns
-        )
+    through ``toArrow`` with a nullable-Int64 types_mapper is exact."""
+    mapper = {pa.int64(): pd.Int64Dtype(),
+              pa.int32(): pd.Int32Dtype(),
+              pa.int16(): pd.Int16Dtype(),
+              pa.int8(): pd.Int8Dtype()}
+    return df.toArrow().to_pandas(types_mapper=mapper.get)
 
 
 def _stable_int_cols(pdf: pd.DataFrame, kinds: dict[str, str]) -> pd.DataFrame:
@@ -292,7 +264,7 @@ def iter_select(df: DataFrame, ctype: str, chunk_rows: int = 10_000):
     partition + one chunk at a time, never the whole result, so arbitrarily
     large SELECTs serve without a row cap."""
     cols_all = df.columns
-    cols = [c for c in cols_all if not c.endswith(_HIDDEN_COL_SUFFIXES)]
+    cols = _solution_columns(cols_all)
     kinds = _spark_kinds(df)
     if ctype == "text/csv":
         yield ",".join(cols) + "\r\n"
@@ -347,21 +319,22 @@ def quads_ntriples(df: DataFrame) -> str:
 # HTTP endpoint
 
 
+# the document formats, built whole from a capped collect
 _SELECT_WRITERS = {
     "application/sparql-results+json": select_json,
     "application/json": select_json,
     "application/sparql-results+xml": select_xml,
-    "text/csv": select_csv,
-    "text/tab-separated-values": select_tsv,
 }
 
 
-def _negotiate(accept: str) -> tuple[str, object]:
+def _negotiate(accept: str) -> str:
+    """The SELECT result media type for an Accept header: the first listed
+    document or line format, else SPARQL Results JSON."""
     for media in (accept or "").split(","):
         media = media.split(";")[0].strip()
-        if media in _SELECT_WRITERS:
-            return media, _SELECT_WRITERS[media]
-    return "application/sparql-results+json", select_json
+        if media in _SELECT_WRITERS or media in _STREAMABLE:
+            return media
+    return "application/sparql-results+json"
 
 
 class SparqlEndpoint:
@@ -382,22 +355,19 @@ class SparqlEndpoint:
         store: StatementStore,
         write_back: WriteBack | None = None,
         max_rows: int = 100_000,
-        stream_large: bool = True,
     ):
         """``max_rows`` bounds driver-side result materialization for the
         DOCUMENT formats (JSON/XML must be built whole): a SELECT /
         CONSTRUCT producing more rows gets HTTP 413 instead of OOMing the
         driver. The limit is pushed into the plan (``LIMIT cap+1``), so
-        Spark never collects more than cap+1 rows. With ``stream_large``
-        (default), the LINE formats — CSV and TSV — are exempt from the
-        cap: they stream through ``toLocalIterator`` in chunks, the Spark
-        analogue of the reference's piped background writer
-        (SparqlService.scala:183-195), so the driver never holds the full
-        result."""
+        Spark never collects more than cap+1 rows. The LINE formats — CSV
+        and TSV — are exempt from the cap: they stream through
+        ``toLocalIterator`` in chunks, the Spark analogue of the
+        reference's piped background writer (SparqlService.scala:183-195),
+        so the driver never holds the full result."""
         self.store = store
         self.write_back = write_back
         self.max_rows = max_rows
-        self.stream_large = stream_large
         self._lock = threading.Lock()
         self._server: ThreadingHTTPServer | None = None
 
@@ -406,7 +376,7 @@ class SparqlEndpoint:
     def handle(self, text: str, accept: str = ""):
         """(status, content_type, body) for one SPARQL request string.
         ``body`` is a str, or an ITERATOR of str chunks when a large SELECT
-        streams (CSV/TSV with ``stream_large``); a mid-stream executor
+        streams (CSV/TSV); a mid-stream executor
         failure truncates the body, exactly like the reference's piped
         writer after headers are sent."""
         try:
@@ -421,8 +391,8 @@ class SparqlEndpoint:
                 return 204, "text/plain", ""
             result = execute_sparql(self.store, text)
             if result.kind == "select":
-                ctype, writer = _negotiate(accept)
-                if self.stream_large and ctype in _STREAMABLE:
+                ctype = _negotiate(accept)
+                if ctype in _STREAMABLE:
                     # pull the header AND the first data chunk eagerly: the
                     # first chunk triggers execution, so analysis/runtime
                     # errors surface HERE and become a clean 400/500 instead
@@ -447,7 +417,7 @@ class SparqlEndpoint:
                 # NULL-bearing bigint binding serialized as xsd:integer in
                 # TSV but xsd:double in JSON/XML depending on Accept
                 pdf = _stable_int_cols(pdf, _spark_kinds(result.df))
-                return 200, ctype, writer(pdf)
+                return 200, ctype, _SELECT_WRITERS[ctype](pdf)
             if result.kind == "ask":
                 if "xml" in (accept or ""):
                     return 200, "application/sparql-results+xml", ask_xml(result.boolean)
@@ -581,8 +551,20 @@ class SparqlEndpoint:
                 url = urlparse(self.path)
                 if url.path != "/sparql":
                     return self._respond(404, "text/plain", "not found")
-                length = int(self.headers.get("Content-Length", "0"))
-                raw = self.rfile.read(length).decode("utf-8")
+                # a malformed request gets a 400, never a dropped
+                # connection; a negative length would make rfile.read
+                # wait for the client to hang up
+                length = self.headers.get("Content-Length", "0")
+                try:
+                    n = int(length)
+                except ValueError:
+                    n = -1
+                if n < 0:
+                    return self._respond(400, "text/plain", f"bad Content-Length {length!r}")
+                try:
+                    raw = self.rfile.read(n).decode("utf-8")
+                except UnicodeDecodeError:
+                    return self._respond(400, "text/plain", "request body is not UTF-8")
                 ctype = (self.headers.get("Content-Type") or "").split(";")[0].strip()
                 # explain may ride in the URL whatever the body type; the
                 # request text comes from the body only

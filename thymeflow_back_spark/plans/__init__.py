@@ -1,3 +1,1 @@
-from .patterns import BGP
-
-__all__ = ["BGP"]
+"""SPARQL text → one Spark SQL statement over the quad store (sparql.py)."""

@@ -59,7 +59,6 @@ from ..operators.closure import (
     transitive_closure,
 )
 from ..rdf.model import QUAD_COLUMNS, local_relation
-from .patterns import HIDDEN_SUFFIXES
 
 BUILTIN_PREFIXES = {
     "rdf": "http://www.w3.org/1999/02/22-rdf-syntax-ns#",
@@ -816,6 +815,9 @@ def query_form(text: str) -> str:
 
 _XSD = "http://www.w3.org/2001/XMLSchema#"
 _POSITIONS = ("subject", "predicate", "object_value", "graph")
+# suffixes of the hidden term-kind columns a solution variable ``v`` carries
+# (``v__type``, ``v__datatype``, ``v__lang``); api.service drops them by suffix
+HIDDEN_SUFFIXES = ("__type", "__datatype", "__lang")
 _NULL = "CAST(NULL AS STRING)"
 _UNIT = "TRUE AS __unit"  # the one column of a relation that binds no variable
 

@@ -4,8 +4,9 @@ sameAs-closure connected components — the reference's core query shapes
 (rdf/tpch.py) and oracle-checked against the equivalent relational SQL.
 
 The oracle deliberately takes the DIRECT relational path (joins over
-customer/nation/region), while Spark goes through quad-ification + the BGP
-compiler — matching results prove the RDF layer preserves semantics, not
+customer/nation/region), while Spark goes through quad-ification + the
+SPARQL compiler of plans/sparql.py, the one code path that matches triple
+patterns — matching results prove the RDF layer preserves semantics, not
 just that two identical plans agree.
 """
 
@@ -15,12 +16,37 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.closure import connected_components
-from ..plans.patterns import BGP
-from ..rdf import tpch
-from ..rdf.model import V
+from ..plans.sparql import sparql_construct, sparql_describe, sparql_select
+from ..rdf import tpch, vocab
 from .catalog import query
 
 _PB = tpch.PHONE_BUCKETS
+
+
+def _phone_pairs(quads: DataFrame, op: str) -> DataFrame:
+    """IFP candidate pairs: two agents sharing a phone value (reference
+    InverseFunctionalPropertyInferencer.scala:37-53), the two ends related
+    by ``op`` (``<`` for one pair per unordered couple, ``!=`` for both
+    directions). Columns ``a_id``, ``b_id`` and the shared value ``v``."""
+    return sparql_select(
+        quads,
+        f"SELECT ?a_id ?b_id ?v WHERE {{ ?a_id <{tpch.PHONE}> ?v . "
+        f"?b_id <{tpch.PHONE}> ?v . FILTER(?a_id {op} ?b_id) }}",
+    )
+
+
+def _ifp_sameas(quads: DataFrame, op: str) -> DataFrame:
+    """The distinct phone pairs as ``personal:sameAs`` quads in ``g:ifp``."""
+    pairs = _phone_pairs(quads, op).select("a_id", "b_id").dropDuplicates()
+    return pairs.select(
+        F.col("a_id").alias("subject"),
+        F.lit(vocab.SAME_AS).alias("predicate"),
+        F.col("b_id").alias("object_value"),
+        F.lit("iri").alias("object_type"),
+        F.lit(None).cast("string").alias("object_datatype"),
+        F.lit(None).cast("string").alias("object_lang"),
+        F.lit("g:ifp").alias("graph"),
+    )
 
 
 # --- Q: BGP with OPTIONAL (2-hop join + left join over quads) ----------------
@@ -46,8 +72,6 @@ _PB = tpch.PHONE_BUCKETS
     "relational join, proving text→algebra→DataFrame preserves semantics.",
 )
 def q_rdf_bgp_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans.sparql import sparql_select
-
     quads = tpch.tpch_quads(spark, sf_dir)
     return sparql_select(
         quads,
@@ -86,22 +110,12 @@ def q_rdf_bgp_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="IFP identity inference: agents sharing an inverse-functional "
     "property value (phone) become sameAs pairs — the self-join of "
     "quads[pred=phone] on object value (reference "
-    "InverseFunctionalPropertyInferencer.scala:37-53), via the BGP compiler.",
+    "InverseFunctionalPropertyInferencer.scala:37-53), compiled from SPARQL "
+    "text.",
 )
 def q_rdf_ifp_sameas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    quads = tpch.tpch_quads(spark, sf_dir)
-    bgp = BGP(quads)
-    pairs = bgp.compile(
-        [
-            (V("a_id"), tpch.PHONE, V("shared_value")),
-            (V("b_id"), tpch.PHONE, V("shared_value")),
-        ]
-    )
-    return (
-        pairs.filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", "shared_value")
-        .orderBy("a_id", "b_id")
-    )
+    pairs = _phone_pairs(tpch.tpch_quads(spark, sf_dir), "<")
+    return pairs.select("a_id", "b_id", F.col("v").alias("shared_value")).orderBy("a_id", "b_id")
 
 
 # --- Q: sameAs* closure (connected components) -------------------------------
@@ -139,18 +153,7 @@ def q_rdf_ifp_sameas(spark: SparkSession, sf_dir: str) -> DataFrame:
     "component-size histogram, oracle via recursive CTE.",
 )
 def q_rdf_sameas_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    quads = tpch.tpch_quads(spark, sf_dir)
-    bgp = BGP(quads)
-    pairs = (
-        bgp.compile(
-            [
-                (V("a_id"), tpch.PHONE, V("v")),
-                (V("b_id"), tpch.PHONE, V("v")),
-            ]
-        )
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-    )
+    pairs = _phone_pairs(tpch.tpch_quads(spark, sf_dir), "<").select("a_id", "b_id")
     comps = connected_components(pairs, src="a_id", dst="b_id")
     sizes = comps.groupBy("component").agg(F.count("*").alias("component_size"))
     return (
@@ -192,8 +195,6 @@ _XSD_S = "http://www.w3.org/2001/XMLSchema#string"
     "— reference SparqlService.scala:100-143 graph-query dispatch).",
 )
 def q_rdf_construct_euro(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans.sparql import sparql_construct
-
     quads = tpch.tpch_quads(spark, sf_dir)
     return sparql_construct(
         quads,
@@ -235,8 +236,6 @@ def q_rdf_construct_euro(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SparqlService.scala graph-query dispatch).",
 )
 def q_rdf_describe_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans.sparql import sparql_describe
-
     quads = tpch.tpch_quads(spark, sf_dir)
     return sparql_describe(
         quads,
@@ -288,8 +287,6 @@ def q_rdf_rdfs_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..enrichers.rdfs import SUB_CLASS_OF, rdfs_enricher
     from ..rdf.model import QUAD_SCHEMA
     from ..rdf.store import Diff, StatementStore
-
-    from ..rdf import vocab
 
     # normalize the tpch mapping's shorthand 'rdf:type' to the full RDF IRI
     # the inferencer's rules match on
@@ -355,7 +352,6 @@ def q_owl_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
         owl_enricher,
     )
     from ..operators.cachereg import pin
-    from ..rdf import vocab
     from ..rdf.model import QUAD_SCHEMA
     from ..rdf.store import Diff, StatementStore
 
@@ -436,31 +432,10 @@ def q_owl_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_primary_facet(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..enrichers.primary_facet import primary_facet_enricher
-    from ..rdf import vocab
     from ..rdf.store import Diff, StatementStore
 
     base = tpch.tpch_quads(spark, sf_dir)
-    bgp = BGP(base)
-    pairs = (
-        bgp.compile(
-            [
-                (V("a_id"), tpch.PHONE, V("v")),
-                (V("b_id"), tpch.PHONE, V("v")),
-            ]
-        )
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .dropDuplicates()
-    )
-    sameas = pairs.select(
-        F.col("a_id").alias("subject"),
-        F.lit(vocab.SAME_AS).alias("predicate"),
-        F.col("b_id").alias("object_value"),
-        F.lit("iri").alias("object_type"),
-        F.lit(None).cast("string").alias("object_datatype"),
-        F.lit(None).cast("string").alias("object_lang"),
-        F.lit("g:ifp").alias("graph"),
-    )
+    sameas = _ifp_sameas(base, "<")
     # the store relation is scanned once per compiled statement pattern
     # — pin the union so the sameas derivation (a join + distinct) runs
     # once, not per pattern (released via operators/cachereg)
@@ -504,31 +479,8 @@ def q_primary_facet(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sameAs degree).",
 )
 def q_rdf_facet_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans.sparql import sparql_select
-    from ..rdf import vocab
-
     base = tpch.tpch_quads(spark, sf_dir)
-    bgp = BGP(base)
-    pairs = (
-        bgp.compile(
-            [
-                (V("a_id"), tpch.PHONE, V("v")),
-                (V("b_id"), tpch.PHONE, V("v")),
-            ]
-        )
-        .filter(F.col("a_id") != F.col("b_id"))
-        .select("a_id", "b_id")
-        .dropDuplicates()
-    )
-    sameas = pairs.select(
-        F.col("a_id").alias("subject"),
-        F.lit(vocab.SAME_AS).alias("predicate"),
-        F.col("b_id").alias("object_value"),
-        F.lit("iri").alias("object_type"),
-        F.lit(None).cast("string").alias("object_datatype"),
-        F.lit(None).cast("string").alias("object_lang"),
-        F.lit("g:ifp").alias("graph"),
-    )
+    sameas = _ifp_sameas(base, "!=")
     # pin the queried store: the SPARQL text compiles one pattern scan
     # per triple pattern and the sameas arm re-derived its join per scan
     from ..operators.cachereg import pin
@@ -570,8 +522,6 @@ def q_rdf_facet_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "customer x nation rollup.",
 )
 def q_rdf_grouped_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans.sparql import sparql_select
-
     quads = tpch.tpch_quads(spark, sf_dir)
     return sparql_select(
         quads,
@@ -605,8 +555,6 @@ def q_rdf_grouped_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     "region chain. Oracle is the direct relational rollup by region name.",
 )
 def q_rdf_negated_pathset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans.sparql import sparql_select
-
     quads = tpch.tpch_quads(spark, sf_dir)
     return sparql_select(
         quads,
@@ -645,8 +593,6 @@ def q_rdf_negated_pathset(spark: SparkSession, sf_dir: str) -> DataFrame:
     "RDF4J grammar parity for the aggregate tail.",
 )
 def q_rdf_group_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans.sparql import sparql_select
-
     quads = tpch.tpch_quads(spark, sf_dir)
     return sparql_select(
         quads,

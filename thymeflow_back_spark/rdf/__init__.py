@@ -1,4 +1,4 @@
-from .model import QUAD_COLUMNS, QUAD_SCHEMA, V
+from .model import QUAD_COLUMNS, QUAD_SCHEMA
 from .store import StatementStore
 
-__all__ = ["QUAD_COLUMNS", "QUAD_SCHEMA", "V", "StatementStore"]
+__all__ = ["QUAD_COLUMNS", "QUAD_SCHEMA", "StatementStore"]

@@ -15,8 +15,6 @@ skipping).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -72,13 +70,6 @@ def unnegate(predicate: str) -> str:
     if predicate in _SPECIAL_NEGATION:
         return _SPECIAL_NEGATION[predicate]
     return predicate[len(NEG_PREFIX):]
-
-
-@dataclass(frozen=True)
-class V:
-    """A variable in a triple/quad pattern (plans.patterns)."""
-
-    name: str
 
 
 def local_relation(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:

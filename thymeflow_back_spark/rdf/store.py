@@ -95,29 +95,6 @@ class StatementStore:
 
     # -- reads ----------------------------------------------------------------
 
-    def get_statements(
-        self,
-        subject: str | None = None,
-        predicate: str | None = None,
-        object_value: str | None = None,
-        graph: str | None = None,
-    ) -> DataFrame:
-        """Point/wildcard statement-pattern scan (getStatements(s,p,o,g))."""
-        df = self.quads
-        for col, val in (
-            ("subject", subject),
-            ("predicate", predicate),
-            ("object_value", object_value),
-            ("graph", graph),
-        ):
-            if val is not None:
-                df = df.filter(F.col(col) == val)
-        return df
-
-    def ask(self, **kwargs) -> bool:
-        """Existence check (SPARQL ASK shape: limit-1 probe, not a count)."""
-        return len(self.get_statements(**kwargs).limit(1).take(1)) > 0
-
     def graph(self, graph: str) -> DataFrame:
         return self.quads.filter(F.col("graph") == graph)
 
@@ -228,9 +205,6 @@ class StatementStore:
             .dropDuplicates(list(QUAD_COLUMNS))
         )
         return StatementStore(quads)
-
-    def remove_graph(self, graph: str) -> "StatementStore":
-        return StatementStore(self.quads.filter(F.col("graph") != graph))
 
     def materialize(self) -> "StatementStore":
         """Cut lineage (localCheckpoint). Functional updates stack anti-joins;

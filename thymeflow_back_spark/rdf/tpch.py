@@ -1,7 +1,7 @@
 """Quad-ification of the synthetic relational tables.
 
 Turns customer/nation/region into a canonical quads DataFrame so the RDF
-layer (store, BGP compiler, IFP inference, closure) can be exercised — and
+layer (store, SPARQL compiler, IFP inference, closure) can be exercised — and
 oracle-checked — against the same data the relational queries use. The
 mapping is the property-table inverse of SURVEY.md §1.5: one row per
 (entity, property) with IRIs minted deterministically from keys.

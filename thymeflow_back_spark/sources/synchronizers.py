@@ -205,9 +205,7 @@ class _DavWriteBackMixin:
 
     Returns False (→ negation/user-graph routing) when the graph is not
     ours, any statement cannot be expressed in the payload format, or the
-    PUT loses the etag race. Update diffs are user edits — a handful of
-    rows — so collecting them here is the same size class as the
-    reference's in-memory diff."""
+    PUT loses the etag race."""
 
     apply_diff_fn: Callable
 
@@ -217,8 +215,9 @@ class _DavWriteBackMixin:
         adds: list[tuple[str, str, str]],
         removes: list[tuple[str, str, str]],
     ) -> bool:
-        """Row-level batch hook (the Updater collects the whole sync diff in
-        one job and calls this per graph — no Spark work in here)."""
+        """One graph's adds and removes as (subject, predicate, object_value)
+        tuples (the updater collects the update diff in one job and calls
+        this per graph — no Spark work in here)."""
         if not self.owns_graph(graph):
             return False
         directory, _, path = graph.rpartition("#")
@@ -228,12 +227,11 @@ class _DavWriteBackMixin:
             return False
         return self.transport.put(directory, path, new_text.encode("utf-8"), etag) is not None
 
-    def write_back(self, graph: str, added: DataFrame, removed: DataFrame) -> bool:
-        return self.write_back_rows(
-            graph,
-            [(r.subject, r.predicate, r.object_value) for r in added.collect()],
-            [(r.subject, r.predicate, r.object_value) for r in removed.collect()],
-        )
+    def write_back(self, graph: str, adds: list[tuple], removes: list[tuple]) -> bool:
+        """The updater's ``WriteBack``: the bound method an endpoint is
+        given. It goes through ``write_back_rows`` so a wrapper installed
+        on that name sees every write-back."""
+        return self.write_back_rows(graph, adds, removes)
 
 
 class CalDavSynchronizer(_DavWriteBackMixin, BaseDavSynchronizer):

@@ -28,7 +28,6 @@ from __future__ import annotations
 from collections import Counter
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..rdf.model import QUAD_SCHEMA, is_negation, local_relation, negate
@@ -36,10 +35,11 @@ from ..rdf.store import Diff, StatementStore
 
 USER_GRAPH = "urn:graph:userData"
 
-# write_back(graph, added_df, removed_df) -> bool (True = source accepted)
-WriteBack = Callable[[str, DataFrame, DataFrame], bool]
-
 Quad = tuple  # the QUAD_COLUMNS values of one statement
+
+# write_back(graph, adds, removes) -> bool (True = source accepted), with
+# adds and removes as (subject, predicate, object_value) tuples
+WriteBack = Callable[[str, list[tuple], list[tuple]], bool]
 
 
 def _collect(diff: Diff) -> tuple[set[Quad], set[Quad]]:
@@ -65,32 +65,16 @@ def _lookup(store: StatementStore, added: set[Quad], removed: set[Quad]) -> list
     return [tuple(r) for r in store.quads.filter(cond).collect()]
 
 
-def _write_back(
-    store: StatementStore, adds: set[Quad], removes: set[Quad], write_back: WriteBack | None
-) -> set[str]:
+def _write_back(adds: set[Quad], removes: set[Quad], write_back: WriteBack | None) -> set[str]:
     """Offer each synchronized graph its adds and removes; return the graphs
-    whose source accepted them. Synchronizers may expose the row-level
-    ``write_back_rows`` hook next to ``write_back`` (no Spark work inside);
-    plain callbacks get small local DataFrames."""
+    whose source accepted them."""
     if write_back is None:
         return set()
-    rows_fn = getattr(write_back, "write_back_rows", None)
-    if rows_fn is None and hasattr(write_back, "__self__"):
-        rows_fn = getattr(write_back.__self__, "write_back_rows", None)
-    spark = store.quads.sparkSession
     accepted = set()
     for g in sorted({q[6] for q in adds | removes}):
-        g_adds = sorted((q for q in adds if q[6] == g), key=str)
-        g_removes = sorted((q for q in removes if q[6] == g), key=str)
-        if rows_fn is not None:
-            ok = rows_fn(g, [q[:3] for q in g_adds], [q[:3] for q in g_removes])
-        else:
-            ok = write_back(
-                g,
-                local_relation(spark, g_adds, QUAD_SCHEMA),
-                local_relation(spark, g_removes, QUAD_SCHEMA),
-            )
-        if ok:
+        g_adds = sorted((q[:3] for q in adds if q[6] == g), key=str)
+        g_removes = sorted((q[:3] for q in removes if q[6] == g), key=str)
+        if write_back(g, g_adds, g_removes):
             accepted.add(g)
     return accepted
 
@@ -126,9 +110,7 @@ def apply_update(
     # write-back (Updater.scala:47-75); a rejected removal asserts a
     # negation, a rejected add moves to the user graph (kept in the source
     # graph it would be lost on the next idempotent document re-delivery)
-    accepted = _write_back(
-        store, {q for q in adds if synced(q)}, {q for q in removed if synced(q)}, write_back
-    )
+    accepted = _write_back({q for q in adds if synced(q)}, {q for q in removed if synced(q)}, write_back)
 
     def rejected(q: Quad) -> bool:
         return synced(q) and q[6] not in accepted
