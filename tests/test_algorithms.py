@@ -8,7 +8,7 @@ import random
 from thymeflow_back_spark.algorithms.alignment import align_queries
 from thymeflow_back_spark.algorithms.flow import min_cost_max_flow
 from thymeflow_back_spark.algorithms.matching import hungarian
-from thymeflow_back_spark.algorithms.strings import jaro_winkler, levenshtein
+from thymeflow_back_spark.algorithms.strings import levenshtein
 
 
 def test_alignment_reference_golden():
@@ -65,9 +65,6 @@ def test_hungarian_matches_bruteforce():
         assert total == best
 
 
-def test_levenshtein_and_jaro_winkler():
+def test_levenshtein():
     assert levenshtein("kitten", "sitting") == 3
     assert levenshtein("", "abc") == 3
-    assert jaro_winkler("martha", "marhta") > 0.95
-    assert jaro_winkler("abc", "xyz") == 0.0
-    assert jaro_winkler("alice", "alice") == 1.0

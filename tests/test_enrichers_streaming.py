@@ -1,29 +1,26 @@
-"""Enrichment pipeline + streaming tests: IFP inference across documents,
-RDFS forward chaining, and the foreachBatch streaming drive."""
+"""Ingest-round tests: IFP inference across documents, RDFS and OWL
+forward chaining, ref-counted retraction on re-delivery, and batched
+multi-document ingest, all through ``pipeline.ingest``."""
 
 from __future__ import annotations
 import pytest
 
-# streaming enricher pipeline e2e (quick tier keeps test_enrichment_suite + the RDF closure oracle rows)
+# enricher pipeline e2e (quick tier keeps test_enrichment_suite, test_ingest_model + the RDF closure oracle rows)
 pytestmark = pytest.mark.slow
-
-import time
 
 from pyspark.sql import functions as F
 
 from thymeflow_back_spark.enrichers import (
-    EnrichmentPipeline,
     counting_ifp_enricher,
     counting_rdfs_enricher,
-    ifp_enricher,
     rdfs_enricher,
 )
 from thymeflow_back_spark.enrichers.ifp import OUTPUT_GRAPH as IFP_GRAPH
+from thymeflow_back_spark.enrichers.pipeline import ingest
 from thymeflow_back_spark.enrichers.rdfs import SUB_CLASS_OF, SUB_PROPERTY_OF, DOMAIN
 from thymeflow_back_spark.rdf import vocab
-from thymeflow_back_spark.rdf.model import QUAD_SCHEMA, make_quads
+from thymeflow_back_spark.rdf.model import make_quads
 from thymeflow_back_spark.rdf.store import StatementStore
-from thymeflow_back_spark.streaming import quad_stream, run_pipeline_stream
 
 
 def iri_q(s, p, o, g):
@@ -31,16 +28,16 @@ def iri_q(s, p, o, g):
 
 
 def test_ifp_across_documents(spark):
+    ifp = [counting_ifp_enricher()]
     store = StatementStore(make_quads(spark, []))
-    pipe = EnrichmentPipeline(store, [ifp_enricher])
     doc1 = make_quads(spark, [iri_q("agent:a", vocab.EMAIL, "mailto:x@y.z", "g:doc1")])
-    pipe.ingest_document("g:doc1", doc1)
+    store, _ = ingest(store, doc1, ["g:doc1"], ifp)
     # same email in a second document → sameAs both ways in the IFP graph
     doc2 = make_quads(spark, [iri_q("agent:b", vocab.EMAIL, "mailto:x@y.z", "g:doc2")])
-    diff = pipe.ingest_document("g:doc2", doc2)
+    store, diff = ingest(store, doc2, ["g:doc2"], ifp)
     inferred = {
         (r.subject, r.object_value)
-        for r in pipe.store.quads.filter(F.col("graph") == IFP_GRAPH).collect()
+        for r in store.quads.filter(F.col("graph") == IFP_GRAPH).collect()
     }
     assert ("agent:a", "agent:b") in inferred and ("agent:b", "agent:a") in inferred
     assert diff.added.filter(F.col("predicate") == vocab.SAME_AS).count() == 2
@@ -54,10 +51,9 @@ def test_ifp_respects_differentfrom(spark):
             iri_q("agent:a", vocab.DIFFERENT_FROM, "agent:b", "g:user"),
         ],
     )
-    pipe = EnrichmentPipeline(StatementStore(base), [ifp_enricher])
     doc2 = make_quads(spark, [iri_q("agent:b", vocab.EMAIL, "mailto:x@y.z", "g:doc2")])
-    pipe.ingest_document("g:doc2", doc2)
-    assert pipe.store.quads.filter(F.col("predicate") == vocab.SAME_AS).count() == 0
+    store, _ = ingest(StatementStore(base), doc2, ["g:doc2"], [counting_ifp_enricher()])
+    assert store.quads.filter(F.col("predicate") == vocab.SAME_AS).count() == 0
 
 
 def test_rdfs_forward_chaining(spark):
@@ -70,7 +66,6 @@ def test_rdfs_forward_chaining(spark):
             iri_q("p:name", DOMAIN, "c:Named", "g:ontology"),
         ],
     )
-    pipe = EnrichmentPipeline(StatementStore(ontology), [rdfs_enricher])
     doc = make_quads(
         spark,
         [
@@ -78,10 +73,10 @@ def test_rdfs_forward_chaining(spark):
             ("x", "p:givenName", "Ada", "literal", None, None, "g:doc"),
         ],
     )
-    pipe.ingest_document("g:doc", doc)
+    store, _ = ingest(StatementStore(ontology), doc, ["g:doc"], [rdfs_enricher])
     got = {
         (r.subject, r.predicate, r.object_value)
-        for r in pipe.store.quads.filter(F.col("graph") == "urn:graph:rdfsInferencer").collect()
+        for r in store.quads.filter(F.col("graph") == "urn:graph:rdfsInferencer").collect()
     }
     assert ("x", vocab.RDF_TYPE, "c:Agent") in got  # subclass
     assert ("x", vocab.RDF_TYPE, "c:Thing") in got  # transitive subclass
@@ -93,14 +88,16 @@ def test_ifp_retraction_on_redelivery(spark):
     """Re-delivering a document MINUS its email triple retracts the
     IFP-derived sameAs pair (reference InferenceCountingInferencer.scala:
     20-46 — ref-counted derivations, retract at zero)."""
-    pipe = EnrichmentPipeline(
-        StatementStore(make_quads(spark, [])), [counting_ifp_enricher()]
+    ifp = [counting_ifp_enricher()]
+    store = StatementStore(make_quads(spark, []))
+    store, _ = ingest(
+        store,
+        make_quads(spark, [iri_q("agent:a", vocab.EMAIL, "mailto:x@y.z", "g:doc1")]),
+        ["g:doc1"],
+        ifp,
     )
-    pipe.ingest_document(
-        "g:doc1", make_quads(spark, [iri_q("agent:a", vocab.EMAIL, "mailto:x@y.z", "g:doc1")])
-    )
-    pipe.ingest_document(
-        "g:doc2",
+    store, _ = ingest(
+        store,
         make_quads(
             spark,
             [
@@ -108,25 +105,29 @@ def test_ifp_retraction_on_redelivery(spark):
                 iri_q("agent:b", vocab.RDF_TYPE, "c:Person", "g:doc2"),
             ],
         ),
+        ["g:doc2"],
+        ifp,
     )
-    assert pipe.store.quads.filter(F.col("predicate") == vocab.SAME_AS).count() == 2
+    assert store.quads.filter(F.col("predicate") == vocab.SAME_AS).count() == 2
 
     # redeliver doc2 without the email triple → premise gone → sameAs retracted
-    diff = pipe.ingest_document(
-        "g:doc2", make_quads(spark, [iri_q("agent:b", vocab.RDF_TYPE, "c:Person", "g:doc2")])
+    store, diff = ingest(
+        store,
+        make_quads(spark, [iri_q("agent:b", vocab.RDF_TYPE, "c:Person", "g:doc2")]),
+        ["g:doc2"],
+        ifp,
     )
-    assert pipe.store.quads.filter(F.col("predicate") == vocab.SAME_AS).count() == 0
+    assert store.quads.filter(F.col("predicate") == vocab.SAME_AS).count() == 0
     assert diff.removed.filter(F.col("predicate") == vocab.SAME_AS).count() == 2
 
 
 def test_ifp_multi_support_survives_single_retraction(spark):
     """Two shared emails support one sameAs pair; removing one premise must
     NOT retract the inference (count 2 → 1, not 0)."""
-    pipe = EnrichmentPipeline(
-        StatementStore(make_quads(spark, [])), [counting_ifp_enricher()]
-    )
-    pipe.ingest_document(
-        "g:doc1",
+    ifp = [counting_ifp_enricher()]
+    store = StatementStore(make_quads(spark, []))
+    store, _ = ingest(
+        store,
         make_quads(
             spark,
             [
@@ -134,9 +135,11 @@ def test_ifp_multi_support_survives_single_retraction(spark):
                 iri_q("agent:a", vocab.EMAIL, "mailto:x2@y.z", "g:doc1"),
             ],
         ),
+        ["g:doc1"],
+        ifp,
     )
-    pipe.ingest_document(
-        "g:doc2",
+    store, _ = ingest(
+        store,
         make_quads(
             spark,
             [
@@ -144,16 +147,21 @@ def test_ifp_multi_support_survives_single_retraction(spark):
                 iri_q("agent:b", vocab.EMAIL, "mailto:x2@y.z", "g:doc2"),
             ],
         ),
+        ["g:doc2"],
+        ifp,
     )
-    assert pipe.store.quads.filter(F.col("predicate") == vocab.SAME_AS).count() == 2
+    assert store.quads.filter(F.col("predicate") == vocab.SAME_AS).count() == 2
     # drop one of the two shared emails from doc2
-    pipe.ingest_document(
-        "g:doc2", make_quads(spark, [iri_q("agent:b", vocab.EMAIL, "mailto:x@y.z", "g:doc2")])
+    store, _ = ingest(
+        store,
+        make_quads(spark, [iri_q("agent:b", vocab.EMAIL, "mailto:x@y.z", "g:doc2")]),
+        ["g:doc2"],
+        ifp,
     )
-    assert pipe.store.quads.filter(F.col("predicate") == vocab.SAME_AS).count() == 2
+    assert store.quads.filter(F.col("predicate") == vocab.SAME_AS).count() == 2
     # drop the last shared email → retract
-    pipe.ingest_document("g:doc2", make_quads(spark, []))
-    assert pipe.store.quads.filter(F.col("predicate") == vocab.SAME_AS).count() == 0
+    store, _ = ingest(store, make_quads(spark, []), ["g:doc2"], ifp)
+    assert store.quads.filter(F.col("predicate") == vocab.SAME_AS).count() == 0
 
 
 def test_rdfs_retraction_on_redelivery(spark):
@@ -164,9 +172,9 @@ def test_rdfs_retraction_on_redelivery(spark):
             iri_q("p:givenName", SUB_PROPERTY_OF, "p:name", "g:ontology"),
         ],
     )
-    pipe = EnrichmentPipeline(StatementStore(ontology), [counting_rdfs_enricher()])
-    pipe.ingest_document(
-        "g:doc",
+    rdfs = [counting_rdfs_enricher()]
+    store, _ = ingest(
+        StatementStore(ontology),
         make_quads(
             spark,
             [
@@ -174,29 +182,33 @@ def test_rdfs_retraction_on_redelivery(spark):
                 ("x", "p:givenName", "Ada", "literal", None, None, "g:doc"),
             ],
         ),
+        ["g:doc"],
+        rdfs,
     )
-    inferred = pipe.store.quads.filter(F.col("graph") == "urn:graph:rdfsInferencer")
+    inferred = store.quads.filter(F.col("graph") == "urn:graph:rdfsInferencer")
     got = {(r.subject, r.predicate, r.object_value) for r in inferred.collect()}
     assert ("x", vocab.RDF_TYPE, "c:Agent") in got and ("x", "p:name", "Ada") in got
 
     # redeliver without the type triple → derived supertype retracted,
     # subproperty-derived name stays
-    pipe.ingest_document(
-        "g:doc", make_quads(spark, [("x", "p:givenName", "Ada", "literal", None, None, "g:doc")])
+    store, _ = ingest(
+        store,
+        make_quads(spark, [("x", "p:givenName", "Ada", "literal", None, None, "g:doc")]),
+        ["g:doc"],
+        rdfs,
     )
-    inferred = pipe.store.quads.filter(F.col("graph") == "urn:graph:rdfsInferencer")
+    inferred = store.quads.filter(F.col("graph") == "urn:graph:rdfsInferencer")
     got = {(r.subject, r.predicate, r.object_value) for r in inferred.collect()}
     assert ("x", vocab.RDF_TYPE, "c:Agent") not in got
     assert ("x", "p:name", "Ada") in got
 
 
 def test_batched_multi_document_ingest(spark):
-    """One ingest_quads call carrying several documents replaces all their
+    """One ``ingest`` call carrying several documents replaces all their
     graphs with one vectorized set-difference and one enricher pass."""
     store = StatementStore(
         make_quads(spark, [iri_q("agent:old", vocab.EMAIL, "mailto:gone@y.z", "g:doc1")])
     )
-    pipe = EnrichmentPipeline(store, [counting_ifp_enricher()])
     batch = make_quads(
         spark,
         [
@@ -205,13 +217,13 @@ def test_batched_multi_document_ingest(spark):
             iri_q("agent:c", vocab.RDF_TYPE, "c:Person", "g:doc3"),
         ],
     )
-    diff = pipe.ingest_quads(batch)
+    store, diff = ingest(store, batch, enrichers=[counting_ifp_enricher()])
     # doc1's old content replaced, both new docs present, sameAs inferred
     assert diff.removed.filter(F.col("subject") == "agent:old").count() == 1
-    assert pipe.store.quads.filter(F.col("subject") == "agent:old").count() == 0
+    assert store.quads.filter(F.col("subject") == "agent:old").count() == 0
     sameas = {
         (r.subject, r.object_value)
-        for r in pipe.store.quads.filter(F.col("predicate") == vocab.SAME_AS).collect()
+        for r in store.quads.filter(F.col("predicate") == vocab.SAME_AS).collect()
     }
     assert sameas == {("agent:a", "agent:b"), ("agent:b", "agent:a")}
 
@@ -220,7 +232,6 @@ def test_batched_ingest_cross_graph_dedup(spark):
     """The same triple delivered by two batch documents lands once, in the
     lexicographically smallest graph (order-free analogue of sequential
     per-document ingest)."""
-    pipe = EnrichmentPipeline(StatementStore(make_quads(spark, [])))
     batch = make_quads(
         spark,
         [
@@ -228,7 +239,7 @@ def test_batched_ingest_cross_graph_dedup(spark):
             iri_q("x", vocab.RDF_TYPE, "c:Person", "g:docA"),
         ],
     )
-    diff = pipe.ingest_quads(batch)
+    _, diff = ingest(StatementStore(make_quads(spark, [])), batch)
     rows = diff.added.collect()
     assert len(rows) == 1 and rows[0].graph == "g:docA"
 
@@ -252,9 +263,8 @@ def test_owl_forward_chaining(spark):
             iri_q("p:ancestor", vocab.RDF_TYPE, TRANSITIVE_PROPERTY, "g:ontology"),
         ],
     )
-    pipe = EnrichmentPipeline(StatementStore(ontology), [owl_enricher])
-    pipe.ingest_document(
-        "g:doc",
+    store, _ = ingest(
+        StatementStore(ontology),
         make_quads(
             spark,
             [
@@ -266,10 +276,12 @@ def test_owl_forward_chaining(spark):
                 iri_q("c3", "p:ancestor", "c4", "g:doc"),
             ],
         ),
+        ["g:doc"],
+        [owl_enricher],
     )
     got = {
         (r.subject, r.predicate, r.object_value)
-        for r in pipe.store.quads.filter(F.col("graph") == OUTPUT_GRAPH).collect()
+        for r in store.quads.filter(F.col("graph") == OUTPUT_GRAPH).collect()
     }
     assert ("y", "p:hasPart", "x") in got  # inverseOf: x partOf y → y hasPart x
     assert ("z", "p:partOf", "y") in got  # inverseOf other direction
@@ -286,194 +298,11 @@ def test_owl_schema_addition_refires_rules(spark):
     from thymeflow_back_spark.enrichers.owl import SYMMETRIC_PROPERTY, owl_enricher
 
     base = make_quads(spark, [iri_q("a", "p:knows", "b", "g:doc")])
-    pipe = EnrichmentPipeline(StatementStore(base), [owl_enricher])
-    pipe.ingest_document(
-        "g:schema",
+    store, _ = ingest(
+        StatementStore(base),
         make_quads(spark, [iri_q("p:knows", vocab.RDF_TYPE, SYMMETRIC_PROPERTY, "g:schema")]),
+        ["g:schema"],
+        [owl_enricher],
     )
-    got = {
-        (r.subject, r.predicate, r.object_value) for r in pipe.store.quads.collect()
-    }
+    got = {(r.subject, r.predicate, r.object_value) for r in store.quads.collect()}
     assert ("b", "p:knows", "a") in got
-
-
-def test_streaming_pipeline_drive(spark, tmp_path):
-    staging = tmp_path / "staging"
-    checkpoint = tmp_path / "ckpt"
-    staging.mkdir()
-    doc = make_quads(spark, [iri_q("agent:a", vocab.EMAIL, "mailto:s@t.u", "g:s1")])
-    doc.write.mode("append").parquet(str(staging))
-    doc2 = make_quads(spark, [iri_q("agent:b", vocab.EMAIL, "mailto:s@t.u", "g:s2")])
-    doc2.write.mode("append").parquet(str(staging))
-
-    pipe = EnrichmentPipeline(StatementStore(make_quads(spark, [])), [ifp_enricher])
-    query = run_pipeline_stream(
-        pipe, quad_stream(spark, str(staging)), str(checkpoint), trigger={"availableNow": True}
-    )
-    query.awaitTermination(120)
-    sameas = pipe.store.quads.filter(F.col("predicate") == vocab.SAME_AS).count()
-    assert sameas == 2
-
-
-def test_debounce_quads_quiet_period(spark, tmp_path):
-    """DelayedBatch semantics: a graph's quads fold while data keeps
-    arriving and emit only after the quiet period passes."""
-    import time
-
-    from thymeflow_back_spark.streaming.jobs import debounce_quads
-
-    staging = tmp_path / "stage"
-    ckpt = tmp_path / "ck"
-    staging.mkdir()
-    make_quads(spark, [iri_q("a", "p:x", "1", "g:doc")]).write.mode("append").parquet(
-        str(staging)
-    )
-    stream = quad_stream(spark, str(staging))
-    query = (
-        debounce_quads(stream, quiet_period_ms=3000)
-        .writeStream.format("memory")
-        .queryName("debounced")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        # second delivery to the same graph inside the quiet window refolds
-        time.sleep(1.0)
-        t_second = time.time()
-        make_quads(spark, [iri_q("a", "p:y", "2", "g:doc")]).write.mode("append").parquet(
-            str(staging)
-        )
-        time.sleep(1.0)
-        early = spark.sql("select * from debounced").count()
-        # only meaningful while the quiet window is still open in wall time:
-        # on a loaded machine micro-batches can take seconds each, so by the
-        # time this check runs the 3 s window may have legitimately elapsed
-        # (observed under the 4-shard test runner) — emission then is
-        # CORRECT debounce behavior, not a bug
-        if time.time() - t_second < 2.0:
-            assert early == 0, "emitted before the quiet period elapsed"
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            if spark.sql("select * from debounced").count() >= 2:
-                break
-            time.sleep(0.5)
-        rows = spark.sql("select * from debounced").collect()
-        assert {(r.subject, r.predicate, r.object_value) for r in rows} == {
-            ("a", "p:x", "1"),
-            ("a", "p:y", "2"),
-        }
-        assert all(r.graph == "g:doc" for r in rows)
-    finally:
-        query.stop()
-
-
-def test_streaming_pipeline_with_debounce(spark, tmp_path):
-    """run_pipeline_stream with debounce_ms: the stateful quiet-period fold
-    sits between the source and foreachBatch; after the source goes quiet,
-    the folded document flows through the enricher chain exactly once."""
-    import time
-
-    staging = tmp_path / "staging"
-    checkpoint = tmp_path / "ckpt"
-    staging.mkdir()
-    make_quads(spark, [iri_q("agent:a", vocab.EMAIL, "mailto:s@t.u", "g:s1")]).write.mode(
-        "append"
-    ).parquet(str(staging))
-
-    pipe = EnrichmentPipeline(StatementStore(make_quads(spark, [])), [ifp_enricher])
-    query = run_pipeline_stream(
-        pipe,
-        quad_stream(spark, str(staging)),
-        str(checkpoint),
-        trigger={"processingTime": "500 milliseconds"},
-        debounce_ms=2000,
-    )
-    try:
-        # second delivery inside the quiet window folds into the same batch
-        # (if load stretches the window and it lands in a LATER batch, the
-        # IFP match against the store still yields the same 2 sameAs quads
-        # — the assertion is timing-independent, only the deadline isn't)
-        time.sleep(0.8)
-        make_quads(spark, [iri_q("agent:b", vocab.EMAIL, "mailto:s@t.u", "g:s2")]).write.mode(
-            "append"
-        ).parquet(str(staging))
-        # load-aware deadline: the processing-time debounce and the
-        # foreachBatch work crawl under a saturated box (the full-suite
-        # shard runs peg all 32 cores), which flaked the old fixed 45 s —
-        # an idle run still exits within seconds of the quiet period
-        import os as _os
-
-        deadline = time.time() + (150 if _os.getloadavg()[0] > 8 else 60)
-        while time.time() < deadline:
-            if pipe.store.quads.filter(F.col("predicate") == vocab.SAME_AS).count() == 2:
-                break
-            time.sleep(1.0)
-        assert pipe.store.quads.filter(F.col("predicate") == vocab.SAME_AS).count() == 2
-    finally:
-        query.stop()
-
-
-def test_streaming_stays_incremental(spark, tmp_path):
-    """Stateful streaming stay extraction: closed clusters emit as soon as a
-    later observation breaks them; the open cluster flushes on the
-    quiet-period timeout; the union equals the batch operator's output."""
-    import time
-
-    from thymeflow_back_spark.operators.staypoints import extract_stays
-    from thymeflow_back_spark.streaming.jobs import streaming_stays
-
-    staging = tmp_path / "locs"
-    ckpt = tmp_path / "ck2"
-    staging.mkdir()
-    schema = "user_id long, ts_us long, lon double, lat double, accuracy_m double"
-    minute = 60_000_000
-    # cluster A: 20 min dwell; jump; cluster B: 20 min dwell
-    batch1 = [(1, i * minute, 2.30, 48.80, 20.0) for i in range(0, 21, 5)]
-    batch2 = [(1, (60 + i) * minute, 2.50, 48.95, 20.0) for i in range(0, 21, 5)]
-    all_rows = batch1 + batch2
-    spark.createDataFrame(batch1, schema).write.mode("append").parquet(str(staging))
-
-    stream = spark.readStream.schema(schema).parquet(str(staging))
-    query = (
-        streaming_stays(stream, quiet_period_ms=4000)
-        .writeStream.format("memory")
-        .queryName("stays_stream")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        time.sleep(2.0)
-        # cluster A is still open — nothing must have been emitted yet
-        assert spark.sql("select * from stays_stream").count() == 0
-        spark.createDataFrame(batch2, schema).write.mode("append").parquet(str(staging))
-        # batch2 breaks cluster A → its stay emits WITHOUT waiting for the
-        # timeout; cluster B stays open until the quiet period passes
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            if spark.sql("select * from stays_stream").count() >= 1:
-                break
-            time.sleep(0.5)
-        assert spark.sql("select * from stays_stream").count() == 1
-        # quiet period → cluster B flushes via the state timeout
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            if spark.sql("select * from stays_stream").count() >= 2:
-                break
-            time.sleep(0.5)
-        got = [
-            (r.user_id, r.start_us, r.end_us, r.n_obs)
-            for r in spark.sql(
-                "select * from stays_stream order by start_us"
-            ).collect()
-        ]
-        batch_rows = [
-            (r.user_id, r.start_us, r.end_us, r.n_obs)
-            for r in extract_stays(spark.createDataFrame(all_rows, schema))
-            .orderBy("start_us")
-            .collect()
-        ]
-        assert got == batch_rows and len(got) == 2
-    finally:
-        query.stop()

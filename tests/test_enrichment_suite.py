@@ -96,7 +96,7 @@ def test_location_event_enricher(spark):
         OUTPUT_GRAPH,
         location_event_enricher,
     )
-    from thymeflow_back_spark.enrichers import EnrichmentPipeline
+    from thymeflow_back_spark.enrichers.pipeline import ingest
     from thymeflow_back_spark.rdf.model import XSD_DATETIME, XSD_DOUBLE
 
     def dt_q(s, p, o, g):
@@ -134,13 +134,15 @@ def test_location_event_enricher(spark):
                 num_q(f"geo:{ev}", vocab.LATITUDE, latlon[0], "g:cal"),
                 num_q(f"geo:{ev}", vocab.LONGITUDE, latlon[1], "g:cal"),
             ]
-    pipe = EnrichmentPipeline(
-        StatementStore(make_quads(spark, base)), [location_event_enricher]
+    store, _ = ingest(
+        StatementStore(make_quads(spark, base)),
+        make_quads(spark, events),
+        ["g:cal"],
+        [location_event_enricher],
     )
-    pipe.ingest_document("g:cal", make_quads(spark, events))
     located = {
         r.subject
-        for r in pipe.store.quads.filter(
+        for r in store.quads.filter(
             (F.col("graph") == OUTPUT_GRAPH) & (F.col("predicate") == vocab.LOCATION)
         ).collect()
     }

@@ -1,44 +1,11 @@
-"""Tests for entity resolution and stay-point extraction operators."""
+"""Tests for the stay-point extraction operator, local and on Spark."""
 
 from __future__ import annotations
 
 import numpy as np
 
 from thymeflow_back_spark.algorithms.staypoints import extract_stays as extract_stays_local
-from thymeflow_back_spark.operators.er import resolve_agents, soft_tfidf
 from thymeflow_back_spark.operators.staypoints import extract_stays
-
-
-def test_soft_tfidf_scoring():
-    idf = {"alice": 2.0, "wonders": 2.5, "wondrs": 2.5, "john": 1.5, "doe": 2.0, "does": 2.0}
-    high = soft_tfidf(["alice", "wonders"], ["alice", "wondrs"], idf)
-    swapped = soft_tfidf(["john", "doe"], ["does", "john"], idf)
-    low = soft_tfidf(["alice", "wonders"], ["john", "doe"], idf)
-    assert high > 0.9
-    assert swapped > 0.8
-    assert low < 0.1
-
-
-def test_resolve_agents_fixture(spark):
-    # FIXTURES.md §7-style corpus: typo'd and token-swapped duplicates match,
-    # distinct names don't.
-    agents = spark.createDataFrame(
-        [
-            ("a1", "Alice Wonders"),
-            ("a2", "Alic Wondrs"),
-            ("a3", "John Doe"),
-            ("a4", "Does John"),
-            ("a5", "Renée Müller"),
-            ("a6", "Renee Muller"),
-            ("a7", "Completely Different"),
-        ],
-        "agent_id string, name string",
-    )
-    pairs = {(r.a_id, r.b_id) for r in resolve_agents(agents, threshold=0.8).collect()}
-    assert ("a1", "a2") in pairs
-    assert ("a3", "a4") in pairs
-    assert ("a5", "a6") in pairs
-    assert all("a7" not in p for p in pairs)
 
 
 def _synthetic_track():

@@ -1,23 +1,12 @@
 """PARIS probabilistic ER tests (reference ParisEnricher.scala semantics:
-positive/negative evidence under functionality priors, iterated)."""
+positive/negative evidence under functionality priors, one step)."""
 
 from __future__ import annotations
 
-import math
-
 import pytest
-from pyspark.sql import functions as F
 
-from thymeflow_back_spark.enrichers.paris import (
-    DEFAULT_PRIORS,
-    exact_literal_eq,
-    paris_enricher,
-    paris_run,
-    paris_step,
-)
+from thymeflow_back_spark.enrichers.paris import DEFAULT_PRIORS, exact_literal_eq, paris_step
 from thymeflow_back_spark.rdf import vocab
-from thymeflow_back_spark.rdf.model import QUAD_SCHEMA
-from thymeflow_back_spark.rdf.store import Diff, StatementStore
 
 NAME, EMAIL = vocab.NAME, vocab.EMAIL
 INV_N, FUN_N = DEFAULT_PRIORS[NAME]
@@ -69,57 +58,3 @@ def test_no_shared_objects_no_candidates(spark):
         [("urn:a", NAME, "name:alice"), ("urn:b", NAME, "name:bob")],
     )
     assert paris_step(stmts, exact_literal_eq(stmts)).count() == 0
-
-
-def test_instance_equality_feedback_converges(spark):
-    """Iteration feeds instance equalities back as object equalities: c and
-    d share no literals but both point (via a quasi-functional relation) at
-    instances that round 1 proves equal."""
-    rel = "urn:knows"
-    priors = dict(DEFAULT_PRIORS)
-    priors[rel] = (0.95, 0.95)
-    stmts = _stmts(
-        spark,
-        [
-            ("urn:a", EMAIL, "email:shared@x.org"),
-            ("urn:b", EMAIL, "email:shared@x.org"),
-            ("urn:c", rel, "urn:a"),
-            ("urn:d", rel, "urn:b"),
-        ],
-    )
-    one = paris_run(stmts, exact_literal_eq(stmts), priors=priors, iterations=1)
-    assert {(r.x, r.xp) for r in one.collect()} == {("urn:a", "urn:b"), ("urn:b", "urn:a")}
-    full = paris_run(stmts, exact_literal_eq(stmts), priors=priors, iterations=5)
-    got = {(r.x, r.xp): r.prob for r in full.collect()}
-    assert ("urn:c", "urn:d") in got
-    # P(c,d) = invFun_rel · P(a,b) · (1 - fun_rel·(1 - P(a,b)))
-    p_ab = got[("urn:a", "urn:b")]
-    expected = (0.95 * p_ab) * (1.0 - 0.95 * (1.0 - p_ab))
-    assert got[("urn:c", "urn:d")] == pytest.approx(expected, rel=1e-6)
-
-
-def _q(s, p, o, g="urn:doc:1", otype="iri"):
-    return (s, p, o, otype, "http://www.w3.org/2001/XMLSchema#string" if otype == "literal" else None, None, g)
-
-
-def test_paris_enricher_end_to_end(spark):
-    rows = []
-    for iri, name, email in [
-        ("urn:a1", "Alice Wonders", "aw@corp.org"),
-        ("urn:a2", "Alice Wonders", "aw@corp.org"),
-        ("urn:b1", "Bob Builder", "bob@corp.org"),
-    ]:
-        rows.append(_q(iri, vocab.RDF_TYPE, vocab.AGENT))
-        rows.append(_q(iri, vocab.NAME, name, otype="literal"))
-        rows.append(_q(iri, vocab.EMAIL, f"mailto:{email}"))
-        rows.append(_q(f"mailto:{email}", vocab.NAME, email, otype="literal"))
-    store = StatementStore(spark.createDataFrame(rows, QUAD_SCHEMA))
-    diff = paris_enricher(store, Diff(store.quads.limit(0), store.quads.limit(0)))
-    got = {(r.subject, r.object_value) for r in diff.added.collect()}
-    assert got == {("urn:a1", "urn:a2"), ("urn:a2", "urn:a1")}
-
-    # differentFrom suppression
-    rows.append(_q("urn:a1", vocab.DIFFERENT_FROM, "urn:a2"))
-    store2 = StatementStore(spark.createDataFrame(rows, QUAD_SCHEMA))
-    diff2 = paris_enricher(store2, Diff(store2.quads.limit(0), store2.quads.limit(0)))
-    assert diff2.added.count() == 0

@@ -14,9 +14,9 @@ from thymeflow_back_spark.rdf.model import QUAD_SCHEMA, empty_quads
 from thymeflow_back_spark.rdf.store import StatementStore
 from thymeflow_back_spark.sources.sync_state import (
     dav_snapshot,
+    fetch_pass,
     imap_snapshot,
     snapshot_delta,
-    sync_pass,
 )
 from thymeflow_back_spark.sources.synchronizers import EmailSynchronizer
 from thymeflow_back_spark.supervisor import Supervisor
@@ -95,18 +95,16 @@ def test_multi_round_sync_through_store(spark):
 
     # round 1: initial full sync of 2 messages
     cur1 = imap_snapshot(spark, {("acc", "imap://inbox"): (1, [1, 2])})
-    store, diff, snap = sync_pass(
-        empty, none, cur1, _fake_server_fetcher({"1": "one", "2": "two"})
-    )
+    quads, graphs = fetch_pass(none, cur1, _fake_server_fetcher({"1": "one", "2": "two"}))
+    store, diff = empty.add_documents(quads, graphs=graphs)
     store = store.materialize()
     assert store.quads.count() == 2
     assert diff.added.count() == 2 and diff.removed.count() == 0
 
     # round 2: message 1 deleted, message 3 arrives, message 2 unchanged
     cur2 = imap_snapshot(spark, {("acc", "imap://inbox"): (1, [2, 3])})
-    store, diff, snap = sync_pass(
-        store, snap, cur2, _fake_server_fetcher({"2": "two", "3": "three"})
-    )
+    quads, graphs = fetch_pass(cur1, cur2, _fake_server_fetcher({"2": "two", "3": "three"}))
+    store, diff = store.add_documents(quads, graphs=graphs)
     store = store.materialize()
     values = {r.object_value for r in store.quads.collect()}
     assert values == {"two", "three"}
@@ -116,9 +114,8 @@ def test_multi_round_sync_through_store(spark):
 
     # round 3: UID-validity reset — same UIDs, changed content server-side
     cur3 = imap_snapshot(spark, {("acc", "imap://inbox"): (2, [2, 3])})
-    store, diff, snap = sync_pass(
-        store, snap, cur3, _fake_server_fetcher({"2": "TWO'", "3": "three"})
-    )
+    quads, graphs = fetch_pass(cur2, cur3, _fake_server_fetcher({"2": "TWO'", "3": "three"}))
+    store, diff = store.add_documents(quads, graphs=graphs)
     store = store.materialize()
     values = {r.object_value for r in store.quads.collect()}
     assert values == {"TWO'", "three"}
@@ -131,11 +128,13 @@ def test_dav_changed_etag_replaces_document_graph(spark):
     empty = StatementStore(spark.createDataFrame([], QUAD_SCHEMA))
     none = dav_snapshot(spark, {})
     cur1 = dav_snapshot(spark, {("acc", "dav://card/"): [("a.vcf", "e1")]})
-    store, _, snap = sync_pass(empty, none, cur1, _fake_server_fetcher({"a.vcf": "Alice"}))
+    quads, graphs = fetch_pass(none, cur1, _fake_server_fetcher({"a.vcf": "Alice"}))
+    store, _ = empty.add_documents(quads, graphs=graphs)
     store = store.materialize()
 
     cur2 = dav_snapshot(spark, {("acc", "dav://card/"): [("a.vcf", "e2")]})
-    store, diff, _ = sync_pass(store, snap, cur2, _fake_server_fetcher({"a.vcf": "Alicia"}))
+    quads, graphs = fetch_pass(cur1, cur2, _fake_server_fetcher({"a.vcf": "Alicia"}))
+    store, diff = store.add_documents(quads, graphs=graphs)
     assert {r.object_value for r in store.quads.collect()} == {"Alicia"}
     assert {r.object_value for r in diff.removed.collect()} == {"Alice"}
 

@@ -1,8 +1,8 @@
-"""String similarity primitives: Levenshtein, Jaro, Jaro-Winkler.
+"""String edit distance: Levenshtein.
 
 Reference capability: EntityResolution.scala:188-202 (Lucene's metrics).
-Implemented from the public algorithm definitions; used as the secondary
-metric inside soft-TF-IDF scoring.
+Implemented from the public algorithm definition; AgentMatch's soft-TF-IDF
+scoring (``er_scoring``) uses it as the secondary metric.
 """
 
 from __future__ import annotations
@@ -22,46 +22,3 @@ def levenshtein(a: str, b: str) -> int:
             cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
         prev = cur
     return prev[-1]
-
-
-def jaro(a: str, b: str) -> float:
-    if a == b:
-        return 1.0
-    la, lb = len(a), len(b)
-    if la == 0 or lb == 0:
-        return 0.0
-    window = max(la, lb) // 2 - 1
-    match_a = [False] * la
-    match_b = [False] * lb
-    matches = 0
-    for i in range(la):
-        lo, hi = max(0, i - window), min(lb, i + window + 1)
-        for j in range(lo, hi):
-            if not match_b[j] and a[i] == b[j]:
-                match_a[i] = match_b[j] = True
-                matches += 1
-                break
-    if matches == 0:
-        return 0.0
-    transpositions = 0
-    k = 0
-    for i in range(la):
-        if match_a[i]:
-            while not match_b[k]:
-                k += 1
-            if a[i] != b[k]:
-                transpositions += 1
-            k += 1
-    t = transpositions / 2
-    m = matches
-    return (m / la + m / lb + (m - t) / m) / 3
-
-
-def jaro_winkler(a: str, b: str, prefix_scale: float = 0.1, max_prefix: int = 4) -> float:
-    j = jaro(a, b)
-    prefix = 0
-    for ca, cb in zip(a[:max_prefix], b[:max_prefix]):
-        if ca != cb:
-            break
-        prefix += 1
-    return j + prefix * prefix_scale * (1 - j)

@@ -58,6 +58,10 @@ from ..update.updater import WriteBack, apply_update
 
 _XSD = "http://www.w3.org/2001/XMLSchema#"
 
+# Seconds a connection may block on one socket read or write: a client that
+# stops sending is disconnected, so it cannot pin a handler thread forever.
+REQUEST_TIMEOUT_S = 30
+
 
 @dataclass
 class SparqlResult:
@@ -484,6 +488,8 @@ class SparqlEndpoint:
         endpoint = self
 
         class Handler(BaseHTTPRequestHandler):
+            timeout = REQUEST_TIMEOUT_S  # http.server closes the connection on TimeoutError
+
             def log_message(self, *args):  # quiet test runs
                 pass
 
@@ -561,8 +567,13 @@ class SparqlEndpoint:
                     n = -1
                 if n < 0:
                     return self._respond(400, "text/plain", f"bad Content-Length {length!r}")
+                data = self.rfile.read(n)
+                if len(data) < n:  # the client closed early: run none of it
+                    return self._respond(
+                        400, "text/plain", f"body is {len(data)} bytes, Content-Length {n}"
+                    )
                 try:
-                    raw = self.rfile.read(n).decode("utf-8")
+                    raw = data.decode("utf-8")
                 except UnicodeDecodeError:
                     return self._respond(400, "text/plain", "request body is not UTF-8")
                 ctype = (self.headers.get("Content-Type") or "").split(";")[0].strip()

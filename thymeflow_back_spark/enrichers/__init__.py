@@ -3,23 +3,20 @@
 Reference architecture (SURVEY.md §3.2): each enricher consumes the
 StatementSetDiff flowing out of document ingestion, reads the store, and
 writes its inferences into its own named graph. Here an enricher is a pure
-function ``(store, diff) -> Diff`` — the returned diff is applied to the
-store by the pipeline and appended to the flowing diff, preserving the
-reference's stage-chaining semantics with exactly-once application.
+function ``(store, diff) -> Diff`` — ``pipeline.ingest`` applies the
+returned diff to the store and appends it to the flowing diff, preserving
+the reference's stage-chaining semantics with exactly-once application.
 """
 
 from .counting import CountingInferencer
-from .ifp import counting_ifp_enricher, ifp_enricher
+from .ifp import counting_ifp_enricher
 from .owl import owl_enricher
 from .rdfs import counting_rdfs_enricher, rdfs_enricher
-from .pipeline import EnrichmentPipeline
 
 __all__ = [
     "CountingInferencer",
     "counting_ifp_enricher",
     "counting_rdfs_enricher",
-    "ifp_enricher",
     "owl_enricher",
     "rdfs_enricher",
-    "EnrichmentPipeline",
 ]

@@ -42,7 +42,7 @@ DerivationFn = Callable[[DataFrame, DataFrame, StatementStore], DataFrame]
 class CountingInferencer:
     """Stateful enricher wrapper adding ref-counted retraction to a
     derivation rule set. Drop-in for the ``(store, diff) -> Diff`` enricher
-    protocol of EnrichmentPipeline."""
+    protocol of ``pipeline.ingest``."""
 
     def __init__(self, derivations: DerivationFn):
         self.derivations = derivations

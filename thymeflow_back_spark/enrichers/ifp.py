@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..rdf import vocab
 from ..rdf.model import QUAD_COLUMNS
-from ..rdf.store import Diff, StatementStore
+from ..rdf.store import StatementStore
 from .counting import CountingInferencer
 
 IFP_PREDICATES = (vocab.EMAIL, vocab.TELEPHONE, vocab.URL)
@@ -94,14 +94,3 @@ def ifp_derivations(
 def counting_ifp_enricher() -> CountingInferencer:
     """IFP enricher with ref-counted retraction (the pipeline default)."""
     return CountingInferencer(ifp_derivations)
-
-
-def ifp_enricher(store: StatementStore, diff: Diff) -> Diff:
-    """Stateless add-only form (monotone per batch; no retraction state)."""
-    added = ifp_derivations(diff.added, store.quads, store).drop("n")
-    # only new inferences (not already in the store)
-    added = added.join(
-        store.quads.select(*QUAD_COLUMNS), on=list(QUAD_COLUMNS), how="left_anti"
-    )
-    removed = store.quads.filter(F.lit(False))
-    return Diff(added, removed)

@@ -1,7 +1,7 @@
 """PARIS probabilistic entity resolution (reference ParisEnricher.scala:
 41-280, after Suchanek/Abiteboul/Senellart's PARIS paper).
 
-Instance-equality probabilities are iterated from statement evidence under
+Instance-equality probabilities are computed from statement evidence under
 property functionality priors:
 
 - positive evidence (inverse functionality): two instances sharing equal
@@ -10,16 +10,16 @@ property functionality priors:
 - negative evidence (functionality): a functional property whose object
   values differ is evidence against —
   P⁻(x,x') = Π over x-statements (1 - fun(p)·Π(1 - eq(y,y'))).
-- P(x,x') = P⁺ · P⁻, iterated (object equalities may themselves be
-  instance equalities from the previous round).
+- P(x,x') = P⁺ · P⁻. The reference iterates, feeding instance equalities
+  back as object equalities; ``paris_step`` is one iteration, the form the
+  catalog's ``q_paris_agents`` checks against its SQL oracle.
 
-Spark shape: each iteration is two join+aggregate passes in LOG space
-(products become SUM(log), exp at the end), evaluated only on candidate
-pairs (instances connected through at least one positively-equal object on
-a prior-carrying property) — never the instance cross product. Pairs whose
+Spark shape: a step is two join+aggregate passes in LOG space (products
+become SUM(log), exp at the end), evaluated only on candidate pairs
+(instances connected through at least one positively-equal object on a
+prior-carrying property) — never the instance cross product. Pairs whose
 objects never match simply don't appear (their unmatched factors are 1).
-Literal equalities come either from exact value identity (the SQL-checkable
-mode) or from the soft-TF-IDF scorer used by AgentMatch.
+Literal equalities come from exact value identity (``exact_literal_eq``).
 
 Default priors are the reference's measured values: schema:name
 invFun 0.9700722394220846 / fun 0.8043465064044194, email invFun 0.99 /
@@ -32,9 +32,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..rdf import vocab
-from ..rdf.store import Diff, StatementStore
-
-OUTPUT_GRAPH = "urn:graph:parisEnricher"
 
 DEFAULT_PRIORS: dict[str, tuple[float, float]] = {
     # prop -> (inverse_functionality, functionality)
@@ -153,110 +150,3 @@ def paris_step(
         "xp",
         ((1.0 - F.exp("pos_log")) * F.exp("neg_log")).alias("prob"),
     )
-
-
-def paris_run(
-    stmts: DataFrame,
-    literal_eq: DataFrame,
-    priors: dict[str, tuple[float, float]] = DEFAULT_PRIORS,
-    iterations: int = 10,
-) -> DataFrame:
-    """Iterate paris_step, feeding instance equalities back as object
-    equalities (for statements whose objects are instances). Converges in
-    one round when all objects are literals — the loop exits early when a
-    round's probabilities stop changing (>1e-9)."""
-    instance_eq = None
-    result = None
-    for _ in range(iterations):
-        object_eq = literal_eq
-        if instance_eq is not None:
-            object_eq = literal_eq.unionByName(
-                instance_eq.select(
-                    F.col("x").alias("y1"), F.col("xp").alias("y2"), F.col("prob").alias("eq")
-                ).filter(F.col("eq") > 0)
-            )
-        new = paris_step(stmts, object_eq, priors).localCheckpoint(eager=True)
-        if result is not None:
-            delta = (
-                new.alias("n")
-                .join(result.alias("o"), ["x", "xp"], "full")
-                .select(
-                    F.max(
-                        F.abs(
-                            F.coalesce(F.col("n.prob"), F.lit(0.0))
-                            - F.coalesce(F.col("o.prob"), F.lit(0.0))
-                        )
-                    ).alias("d")
-                )
-                .first()["d"]
-            )
-            if delta is not None and delta < 1e-9:
-                return new
-        result, instance_eq = new, new
-    return result
-
-
-def paris_agent_statements(store: StatementStore) -> DataFrame:
-    """Agent name/email statements as (x, p, y) with per-VALUE literal ids
-    (agentNamesQuery / agentEmailAddressesQuery: ?agent schema:name ?name;
-    ?agent schema:email/schema:name ?emailAddress)."""
-    agents = store.quads.filter(
-        (F.col("predicate") == vocab.RDF_TYPE) & (F.col("object_value") == vocab.AGENT)
-    ).select(F.col("subject").alias("x"))
-    names = (
-        store.quads.filter(F.col("predicate") == vocab.NAME)
-        .join(agents, agents["x"] == F.col("subject"), "left_semi")
-        .select(
-            F.col("subject").alias("x"),
-            F.lit(vocab.NAME).alias("p"),
-            F.concat(F.lit("name:"), F.col("object_value")).alias("y"),
-        )
-    )
-    email_nodes = store.quads.filter(F.col("predicate") == vocab.EMAIL).select(
-        F.col("subject").alias("x"), F.col("object_value").alias("mailto")
-    )
-    addr = store.quads.filter(F.col("predicate") == vocab.NAME).select(
-        F.col("subject").alias("mailto"), F.col("object_value").alias("address")
-    )
-    emails = (
-        email_nodes.join(agents, "x", "left_semi")
-        .join(addr, "mailto")
-        .select(
-            "x",
-            F.lit(vocab.EMAIL).alias("p"),
-            F.concat(F.lit("email:"), F.col("address")).alias("y"),
-        )
-    )
-    return names.unionByName(emails).dropDuplicates()
-
-
-def paris_enricher(
-    store: StatementStore,
-    diff: Diff,
-    persistence_threshold: float = 0.9,
-    iterations: int = 10,
-) -> Diff:
-    """Enricher adapter: exact-literal PARIS over agents → symmetric
-    personal:sameAs quads above the persistence threshold, differentFrom
-    suppressed (ParisEnricher.scala:173-180)."""
-    stmts = paris_agent_statements(store)
-    pairs = paris_run(stmts, exact_literal_eq(stmts), iterations=iterations)
-    pairs = pairs.filter(F.col("prob") >= persistence_threshold)
-    different = store.quads.filter(F.col("predicate") == vocab.DIFFERENT_FROM).select(
-        F.col("subject").alias("x"), F.col("object_value").alias("xp")
-    )
-    sym = different.unionByName(different.select(F.col("xp").alias("x"), F.col("x").alias("xp")))
-    pairs = pairs.join(sym, ["x", "xp"], "left_anti")
-    added = (
-        pairs.select(
-            F.col("x").alias("subject"),
-            F.lit(vocab.SAME_AS).alias("predicate"),
-            F.col("xp").alias("object_value"),
-        )
-        .withColumn("object_type", F.lit("iri"))
-        .withColumn("object_datatype", F.lit(None).cast("string"))
-        .withColumn("object_lang", F.lit(None).cast("string"))
-        .withColumn("graph", F.lit(OUTPUT_GRAPH))
-        .dropDuplicates()
-    )
-    return Diff(added=added, removed=added.limit(0))

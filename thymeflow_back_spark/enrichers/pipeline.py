@@ -1,12 +1,12 @@
-"""EnrichmentPipeline: document ingestion → ordered enricher chain.
+"""The ingest round: document ingestion → ordered enricher chain.
 
 Parity with reference Pipeline.scala:37-42 + Thymeflow.scala:56-63: each
 ingested document produces a diff; enrichers run in order, each seeing the
 store state left by its predecessors; their inferences are applied to the
 store and appended to the flowing diff. ``ingest`` is that round — one
-document replace, one materialization, one pass of the chain — shared by
-``EnrichmentPipeline.ingest_quads`` (the foreachBatch entry point for
-streaming) and the supervisor's sync rounds.
+document replace, one materialization, one pass of the chain — and the
+only way data enters the store with enrichment: the supervisor's sync
+rounds run it.
 """
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..rdf.store import Diff, StatementStore
 
@@ -49,24 +48,3 @@ def ingest(
         store = store.apply_diff(extra).materialize()
         diff = diff.union(extra)
     return store, diff
-
-
-class EnrichmentPipeline:
-    def __init__(self, store: StatementStore, enrichers: Sequence[Enricher] = ()):
-        self.store = store
-        self.enrichers = list(enrichers)
-
-    def ingest_document(self, graph: str, statements: DataFrame) -> Diff:
-        """Replace one document graph, run the enricher chain, return the
-        total effective diff."""
-        return self.ingest_quads(
-            statements.withColumn("graph", F.lit(graph)), graphs=[graph]
-        )
-
-    def ingest_quads(self, quads: DataFrame, graphs: list[str] | None = None) -> Diff:
-        """Batch entry point (``ingest``): replace ALL document graphs
-        present in the batch with one vectorized set-difference, then run
-        the enricher chain ONCE over the combined diff — the foreachBatch
-        entry point for Structured Streaming."""
-        self.store, diff = ingest(self.store, quads, graphs, self.enrichers)
-        return diff

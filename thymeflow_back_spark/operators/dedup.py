@@ -431,9 +431,9 @@ def jaccard_pairs(
     Output: (a_id, b_id, n_common, jaccard) for pairs with jaccard >= threshold.
 
     ``max_doc_freq``: when set, shingles occurring in more than this many
-    documents are excluded from CANDIDATE BLOCKING (the ER module's hot-key
-    cap, operators/er.py — a boilerplate-heavy corpus would otherwise make
-    one stop-shingle block quadratic). The Jaccard value itself stays EXACT:
+    documents are excluded from CANDIDATE BLOCKING (a hot-key cap — a
+    boilerplate-heavy corpus would otherwise make one stop-shingle block
+    quadratic). The Jaccard value itself stays EXACT:
     candidates are re-verified against the full shingle sets. The only
     approximation is recall — a pair whose every common shingle is hot is
     missed, the standard stop-word trade-off.

@@ -1,9 +1,10 @@
-"""Entity-resolution queries: token-blocked name-similarity join.
+"""Entity-resolution queries: token-blocked name-similarity join, and one
+PARIS step over synthetic agent facets.
 
-The full soft-TF-IDF pipeline (operators/er.py) uses Python scoring and is
-pytest-verified; this catalog entry exercises the same blocking-join shape
-with an engine-native integer metric (levenshtein) so it has a bit-exact
-SQL oracle.
+AgentMatch (enrichers/agent_match.py) scores candidates with Python
+soft-TF-IDF and is pytest-verified; ``q_er_part_names`` exercises the same
+token-blocking join shape with an engine-native integer metric
+(levenshtein) so it has a bit-exact SQL oracle.
 """
 
 from __future__ import annotations

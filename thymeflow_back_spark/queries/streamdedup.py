@@ -178,7 +178,7 @@ def _memory_sink_stream(
     "10-minute tumbling-window count whose state carries across batches; "
     "the complete-mode result must hash-match the plain batch GROUP BY "
     "over the same rows — proving the incremental state machine computes "
-    "exactly the batch answer (streaming/jobs.py windowed aggregation).",
+    "exactly the batch answer.",
 )
 def q_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "event_type")

@@ -40,7 +40,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..rdf.model import QUAD_SCHEMA, local_relation
-from ..rdf.store import Diff, StatementStore
 
 SNAPSHOT_COLUMNS = ("source", "collection", "collection_version", "item_id", "item_version")
 SNAPSHOT_SCHEMA = StructType(
@@ -236,23 +235,3 @@ def fetch_pass(
     quads = fetch_quads(_split(changed).to_fetch, fetcher, batch_size=batch_size)
     graphs = changed.select(doc_iri_col(F.col("collection"), F.col("item_id")).alias("graph"))
     return quads, graphs
-
-
-def sync_pass(
-    store: StatementStore,
-    previous: DataFrame,
-    current: DataFrame,
-    fetcher: Fetcher,
-    batch_size: int = 100,
-) -> tuple[StatementStore, Diff, DataFrame]:
-    """One incremental synchronization pass.
-
-    Returns (new_store, effective_diff, next_snapshot). Removed items'
-    document graphs are replaced with the empty set (negation/user edits in
-    other graphs survive — same path as an empty re-delivery); fetched items
-    go through the batched document-replace, so a re-fetched changed item is
-    an idempotent graph replacement. The fetch runs once, here.
-    """
-    quads, graphs = fetch_pass(previous, current, fetcher, batch_size=batch_size)
-    new_store, diff = store.add_documents(quads, graphs=graphs)
-    return new_store, diff, current

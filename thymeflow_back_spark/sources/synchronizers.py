@@ -50,7 +50,7 @@ from ..rdf.store import Diff, StatementStore
 from .eml import eml_to_quads
 from .facebook import facebook_to_quads
 from .ical import ical_apply_diff, ical_to_quads
-from .sync_state import dav_snapshot, fetch_pass, imap_snapshot, sync_pass
+from .sync_state import dav_snapshot, fetch_pass, imap_snapshot
 from .vcard import vcard_apply_diff, vcard_to_quads
 
 # ---------------------------------------------------------------------------
@@ -97,9 +97,8 @@ class _SnapshotSynchronizer:
     def sync(
         self, store: StatementStore, previous: DataFrame
     ) -> tuple[StatementStore, Diff, DataFrame]:
-        return sync_pass(
-            store, previous, self.current_snapshot(), self._fetcher(), self.fetch_batch
-        )
+        quads, graphs, current = self.fetch(previous)
+        return (*store.add_documents(quads, graphs=graphs), current)
 
 
 class EmailSynchronizer(_SnapshotSynchronizer):

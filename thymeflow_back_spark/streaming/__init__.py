@@ -1,3 +1,4 @@
-from .jobs import quad_stream, run_pipeline_stream, windowed_event_counts
-
-__all__ = ["quad_stream", "run_pipeline_stream", "windowed_event_counts"]
+"""Structured Streaming jobs of the catalog: incremental near-dup detection
+and decontamination, connected components, heavy hitters, drift, IVF ANN
+and classifier statistics over micro-batches. Each catalog query imports
+its own module."""
