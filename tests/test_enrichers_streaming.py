@@ -1,6 +1,6 @@
-"""Ingest-round tests: IFP inference across documents, RDFS and OWL
-forward chaining, ref-counted retraction on re-delivery, and batched
-multi-document ingest, all through ``pipeline.ingest``."""
+"""Ingest-round tests: IFP inference across documents and its retraction
+on re-delivery, RDFS and OWL forward chaining, and batched multi-document
+ingest, all through ``pipeline.ingest``."""
 
 from __future__ import annotations
 import pytest
@@ -10,11 +10,7 @@ pytestmark = pytest.mark.slow
 
 from pyspark.sql import functions as F
 
-from thymeflow_back_spark.enrichers import (
-    counting_ifp_enricher,
-    counting_rdfs_enricher,
-    rdfs_enricher,
-)
+from thymeflow_back_spark.enrichers import ifp_enricher, rdfs_enricher
 from thymeflow_back_spark.enrichers.ifp import OUTPUT_GRAPH as IFP_GRAPH
 from thymeflow_back_spark.enrichers.pipeline import ingest
 from thymeflow_back_spark.enrichers.rdfs import SUB_CLASS_OF, SUB_PROPERTY_OF, DOMAIN
@@ -28,7 +24,7 @@ def iri_q(s, p, o, g):
 
 
 def test_ifp_across_documents(spark):
-    ifp = [counting_ifp_enricher()]
+    ifp = [ifp_enricher]
     store = StatementStore(make_quads(spark, []))
     doc1 = make_quads(spark, [iri_q("agent:a", vocab.EMAIL, "mailto:x@y.z", "g:doc1")])
     store, _ = ingest(store, doc1, ["g:doc1"], ifp)
@@ -52,7 +48,7 @@ def test_ifp_respects_differentfrom(spark):
         ],
     )
     doc2 = make_quads(spark, [iri_q("agent:b", vocab.EMAIL, "mailto:x@y.z", "g:doc2")])
-    store, _ = ingest(StatementStore(base), doc2, ["g:doc2"], [counting_ifp_enricher()])
+    store, _ = ingest(StatementStore(base), doc2, ["g:doc2"], [ifp_enricher])
     assert store.quads.filter(F.col("predicate") == vocab.SAME_AS).count() == 0
 
 
@@ -73,7 +69,7 @@ def test_rdfs_forward_chaining(spark):
             ("x", "p:givenName", "Ada", "literal", None, None, "g:doc"),
         ],
     )
-    store, _ = ingest(StatementStore(ontology), doc, ["g:doc"], [rdfs_enricher])
+    store, diff = ingest(StatementStore(ontology), doc, ["g:doc"], [rdfs_enricher])
     got = {
         (r.subject, r.predicate, r.object_value)
         for r in store.quads.filter(F.col("graph") == "urn:graph:rdfsInferencer").collect()
@@ -82,13 +78,15 @@ def test_rdfs_forward_chaining(spark):
     assert ("x", vocab.RDF_TYPE, "c:Thing") in got  # transitive subclass
     assert ("x", "p:name", "Ada") in got  # subproperty
     assert ("x", vocab.RDF_TYPE, "c:Named") in got  # domain of inferred prop
+    # what the store already holds is not added again
+    assert rdfs_enricher(store, diff).added.count() == 0
 
 
 def test_ifp_retraction_on_redelivery(spark):
     """Re-delivering a document MINUS its email triple retracts the
-    IFP-derived sameAs pair (reference InferenceCountingInferencer.scala:
-    20-46 — ref-counted derivations, retract at zero)."""
-    ifp = [counting_ifp_enricher()]
+    IFP-derived sameAs pair: the agent's pairs are rederived from the
+    store, which no longer holds the premise."""
+    ifp = [ifp_enricher]
     store = StatementStore(make_quads(spark, []))
     store, _ = ingest(
         store,
@@ -123,8 +121,8 @@ def test_ifp_retraction_on_redelivery(spark):
 
 def test_ifp_multi_support_survives_single_retraction(spark):
     """Two shared emails support one sameAs pair; removing one premise must
-    NOT retract the inference (count 2 → 1, not 0)."""
-    ifp = [counting_ifp_enricher()]
+    NOT retract the inference, since the other still derives it."""
+    ifp = [ifp_enricher]
     store = StatementStore(make_quads(spark, []))
     store, _ = ingest(
         store,
@@ -164,45 +162,6 @@ def test_ifp_multi_support_survives_single_retraction(spark):
     assert store.quads.filter(F.col("predicate") == vocab.SAME_AS).count() == 0
 
 
-def test_rdfs_retraction_on_redelivery(spark):
-    ontology = make_quads(
-        spark,
-        [
-            iri_q("c:Person", SUB_CLASS_OF, "c:Agent", "g:ontology"),
-            iri_q("p:givenName", SUB_PROPERTY_OF, "p:name", "g:ontology"),
-        ],
-    )
-    rdfs = [counting_rdfs_enricher()]
-    store, _ = ingest(
-        StatementStore(ontology),
-        make_quads(
-            spark,
-            [
-                iri_q("x", vocab.RDF_TYPE, "c:Person", "g:doc"),
-                ("x", "p:givenName", "Ada", "literal", None, None, "g:doc"),
-            ],
-        ),
-        ["g:doc"],
-        rdfs,
-    )
-    inferred = store.quads.filter(F.col("graph") == "urn:graph:rdfsInferencer")
-    got = {(r.subject, r.predicate, r.object_value) for r in inferred.collect()}
-    assert ("x", vocab.RDF_TYPE, "c:Agent") in got and ("x", "p:name", "Ada") in got
-
-    # redeliver without the type triple → derived supertype retracted,
-    # subproperty-derived name stays
-    store, _ = ingest(
-        store,
-        make_quads(spark, [("x", "p:givenName", "Ada", "literal", None, None, "g:doc")]),
-        ["g:doc"],
-        rdfs,
-    )
-    inferred = store.quads.filter(F.col("graph") == "urn:graph:rdfsInferencer")
-    got = {(r.subject, r.predicate, r.object_value) for r in inferred.collect()}
-    assert ("x", vocab.RDF_TYPE, "c:Agent") not in got
-    assert ("x", "p:name", "Ada") in got
-
-
 def test_batched_multi_document_ingest(spark):
     """One ``ingest`` call carrying several documents replaces all their
     graphs with one vectorized set-difference and one enricher pass."""
@@ -217,7 +176,7 @@ def test_batched_multi_document_ingest(spark):
             iri_q("agent:c", vocab.RDF_TYPE, "c:Person", "g:doc3"),
         ],
     )
-    store, diff = ingest(store, batch, enrichers=[counting_ifp_enricher()])
+    store, diff = ingest(store, batch, enrichers=[ifp_enricher])
     # doc1's old content replaced, both new docs present, sameAs inferred
     assert diff.removed.filter(F.col("subject") == "agent:old").count() == 1
     assert store.quads.filter(F.col("subject") == "agent:old").count() == 0

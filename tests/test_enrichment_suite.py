@@ -84,6 +84,26 @@ def test_primary_facet_election(spark):
         for r in diff.added.filter(F.col("graph") == PF_GRAPH).collect()
     }
     assert got == {("a", "b"), ("b", "b")}
+    # re-electing over the elected store changes nothing
+    again = primary_facet_enricher(store.apply_diff(diff), diff)
+    assert again.added.count() == 0 and again.removed.count() == 0
+
+
+def test_primary_facet_retracts_elections_without_sameas(spark):
+    """With the last sameAs gone, every primaryFacet edge is stale: the
+    enricher removes the whole graph and adds nothing."""
+    quads = make_quads(
+        spark,
+        [
+            iri_q("a", vocab.PRIMARY_FACET, "b", PF_GRAPH),
+            iri_q("b", vocab.PRIMARY_FACET, "b", PF_GRAPH),
+            lit_q("a", "p:name", "Ay", "g:doc"),
+        ],
+    )
+    store = StatementStore(quads)
+    diff = primary_facet_enricher(store, Diff(quads.limit(0), quads.limit(0)))
+    assert diff.added.count() == 0
+    assert {(r.subject, r.object_value) for r in diff.removed.collect()} == {("a", "b"), ("b", "b")}
 
 
 # --- location-event enricher --------------------------------------------------

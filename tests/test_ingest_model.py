@@ -1,10 +1,9 @@
-"""``ingest`` with the counting IFP enricher checked against a pure-Python
-set model (reference Pipeline.scala:61-93 and
-InferenceCountingInferencer.scala:20-46). Each round re-delivers one to
-three document graphs: the batch replaces them under the four add rules of
-``add_documents``, then the IFP sameAs pairs are ref-counted from the
-premises the batch added and removed. The store and both sides of the
-round's diff are compared after every round."""
+"""``ingest`` with the IFP enricher checked against a pure-Python set model
+(reference Pipeline.scala:61-93). Each round re-delivers one to three
+document graphs: the batch replaces them under the four add rules of
+``add_documents``, then the IFP graph becomes the IFP rule applied to the
+post-round store, minus the pairs a differentFrom vetoes. The store and
+both sides of the round's diff are compared after every round."""
 
 from __future__ import annotations
 
@@ -13,7 +12,7 @@ from collections import Counter
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
-from thymeflow_back_spark.enrichers.ifp import IFP_PREDICATES, OUTPUT_GRAPH, counting_ifp_enricher
+from thymeflow_back_spark.enrichers.ifp import IFP_PREDICATES, OUTPUT_GRAPH, ifp_enricher
 from thymeflow_back_spark.enrichers.pipeline import ingest
 from thymeflow_back_spark.rdf import vocab
 from thymeflow_back_spark.rdf.model import NEG_PREFIX, QUAD_SCHEMA, XSD_STRING, local_relation
@@ -89,52 +88,27 @@ def model_add_documents(store, new, graphs):
     return (store - removed) | added, added, removed
 
 
-def ifp_values(store):
-    return {(s, p, o) for s, p, o, t, *_ in store if p in IFP_PREDICATES and t == "iri"}
-
-
-def instances(premises, universe, different):
-    """Derivations per agent pair: one per unordered pair of premises that
-    share a property and value, unless differentFrom vetoes the pair."""
-    found = {
-        (min(s, t), max(s, t), p, o)
-        for s, p, o in premises
-        for t, q, u in universe
-        if (q, u) == (p, o) and s != t
+def ifp_graph(store):
+    """The IFP rule on ``store``: agents sharing a premise value are sameAs
+    both ways, unless a differentFrom between them vetoes the pair."""
+    values = {(s, p, o) for s, p, o, t, *_ in store if p in IFP_PREDICATES and t == "iri"}
+    different = {(min(s, o), max(s, o)) for s, p, o, *_ in store if p == DIFFERENT}
+    pairs = {
+        (min(s, t), max(s, t)) for s, p, o in values for t, q, u in values if (q, u) == (p, o) and s != t
     }
-    return Counter((a, b) for a, b, _, _ in found if (a, b) not in different)
+    return {
+        (x, SAME, y, "iri", None, None, OUTPUT_GRAPH)
+        for a, b in pairs - different
+        for x, y in ((a, b), (b, a))
+    }
 
 
-def same_as(pairs):
-    return {(x, SAME, y, "iri", None, None, OUTPUT_GRAPH) for a, b in pairs for x, y in ((a, b), (b, a))}
-
-
-class IfpModel:
-    """Ref-counted IFP: increments from new premises against the store
-    after the batch, decrements from gone premises against the store
-    before it; a pair is inferred while its count is positive."""
-
-    def __init__(self):
-        self.counts = Counter()
-
-    def step(self, pre, post):
-        different = {(min(s, o), max(s, o)) for s, p, o, *_ in post if p == DIFFERENT}
-        before, after = ifp_values(pre), ifp_values(post)
-        counts = Counter(self.counts)
-        counts.update(instances(after - before, after, different))
-        counts.subtract(instances(before - after, before, different))
-        counts = Counter({k: n for k, n in counts.items() if n > 0})
-        old, new = same_as(self.counts), same_as(counts)
-        self.counts = counts
-        return new - old, old - new
-
-
-def model_ingest(store, ifp, deliveries):
+def model_ingest(store, deliveries):
     """One ``ingest`` round: (store, added, removed)."""
     new = {(*t, g) for g, triples in deliveries.items() for t in triples}
     post, added, removed = model_add_documents(store, new, deliveries)
-    inferred, retracted = ifp.step(store, post)
-    return (post - retracted) | inferred, added | inferred, removed | retracted
+    old, inferred = {x for x in post if x[6] == OUTPUT_GRAPH}, ifp_graph(post)
+    return (post - old) | inferred, added | (inferred - old), removed | (old - inferred)
 
 
 # -- the implementation ------------------------------------------------------
@@ -170,13 +144,16 @@ deliveries = st.dictionaries(
           {DOC1: set()}, {DOC3: {iri("a", DIFFERENT, "b")}}])
 # both premises of a pair gone in one batch
 @example([{DOC1: {email("a")}, DOC2: {email("b")}}, {DOC1: set(), DOC2: set()}, {DOC3: {email("c")}}])
+# withdrawing the differentFrom that vetoed a pair brings the pair back
+@example([{DOC1: {email("a")}, DOC2: {email("b")}, DOC3: {iri("a", DIFFERENT, "b")}}, {DOC3: set()},
+          {DOC1: {email("a")}}])
 def test_ingest_matches_set_model(spark, rounds):
-    store, ifp = StatementStore(local_relation(spark, [], QUAD_SCHEMA)), counting_ifp_enricher()
-    m_store, m_ifp = set(), IfpModel()
+    store, m_store = StatementStore(local_relation(spark, [], QUAD_SCHEMA)), set()
     for deliveries in rounds:
         rows = sorted({(*t, g) for g, triples in deliveries.items() for t in triples}, key=str)
-        store, diff = ingest(store, local_relation(spark, rows, QUAD_SCHEMA), sorted(deliveries), [ifp])
-        m_store, m_added, m_removed = model_ingest(m_store, m_ifp, deliveries)
+        store, diff = ingest(store, local_relation(spark, rows, QUAD_SCHEMA), sorted(deliveries),
+                             [ifp_enricher])
+        m_store, m_added, m_removed = model_ingest(m_store, deliveries)
         assert _rows(store.quads) == Counter(m_store)
         assert _rows(diff.added) == Counter(m_added)
         assert _rows(diff.removed) == Counter(m_removed)
@@ -186,21 +163,20 @@ def _plan_length(df) -> int:
     return len(df._jdf.queryExecution().optimizedPlan().toString())
 
 
-def test_counting_ifp_rounds_keep_bounded_lineage(spark):
+def test_ifp_rounds_keep_bounded_lineage(spark):
     """Ten ``ingest`` rounds, each replacing one document's premise so
-    sameAs pairs come and go: neither the store's plan nor the counting
-    inferencer's ``counts`` plan grows with the round number."""
-    store, ifp = StatementStore(local_relation(spark, [], QUAD_SCHEMA)), counting_ifp_enricher()
-    m_store, m_ifp = set(), IfpModel()
-    store_plans, count_plans = [], []
+    sameAs pairs come and go: the store's plan does not grow with the
+    round number."""
+    store, m_store = StatementStore(local_relation(spark, [], QUAD_SCHEMA)), set()
+    store_plans = []
     for i in range(10):
         deliveries = {DOCS[i % 3]: {email(f"agent{i}")}}
         rows = [(*t, g) for g, triples in deliveries.items() for t in triples]
-        store, _ = ingest(store, local_relation(spark, rows, QUAD_SCHEMA), sorted(deliveries), [ifp])
-        m_store, _, _ = model_ingest(m_store, m_ifp, deliveries)
+        store, _ = ingest(store, local_relation(spark, rows, QUAD_SCHEMA), sorted(deliveries),
+                          [ifp_enricher])
+        m_store, _, _ = model_ingest(m_store, deliveries)
         store_plans.append(_plan_length(store.quads))
-        count_plans.append(_plan_length(ifp.counts))
     assert _rows(store.quads) == Counter(m_store)
-    assert len(m_ifp.counts) == 3  # the last three agents share the value
+    # the last three agents share the value: three pairs, both ways
+    assert len({x for x in m_store if x[6] == OUTPUT_GRAPH}) == 6
     assert max(store_plans) <= store_plans[0] + 50
-    assert max(count_plans) <= count_plans[0] + 50

@@ -283,12 +283,12 @@ class FakePagedGraphApi:
 def test_facebook_synchronizer_folds_pages(spark):
     sync = FacebookSynchronizer(spark, "acc", FakePagedGraphApi())
     store = StatementStore(empty_quads(spark))
-    store, diff = sync.sync(store)
+    store, diff = store.add_documents(*sync.fetch())
     values = {r.object_value for r in store.quads.collect()}
     assert {"Ada", "Lovelace", "Demo Day", "Launch", "Charles Babbage"} <= values
     assert "mailto:ada@example.org" in values
     # one document graph for the whole export
     assert store.quads.select("graph").distinct().count() == 1
     # re-sync is idempotent
-    store2, diff2 = sync.sync(store)
+    store2, diff2 = store.add_documents(*sync.fetch())
     assert diff2.added.count() == 0 and diff2.removed.count() == 0

@@ -59,9 +59,9 @@ from ..functions.text_norm import normalize_text, tokenize
 from ..operators.closure import connected_components
 from ..rdf import vocab
 from ..rdf.store import Diff, StatementStore
+from .ifp import OUTPUT_GRAPH as IFP_GRAPH, different_pairs, same_as_quads
 
 OUTPUT_GRAPH = "urn:graph:agentMatchEnricher"
-IFP_GRAPH = "urn:graph:ifpInferencer"
 
 # free-mail domains whose local parts say nothing about name structure
 # (reference EmailProviderDomainList)
@@ -478,14 +478,10 @@ def agent_match_pairs(
 
         scored = pairs.withColumn("prob", score("a_parts", "b_parts"))
 
-    different = store.quads.filter(F.col("predicate") == vocab.DIFFERENT_FROM).select(
-        F.least("subject", "object_value").alias("a"),
-        F.greatest("subject", "object_value").alias("b"),
-    )
     return (
         scored.filter(F.col("prob") >= threshold)
         .select("a", "b", "prob")
-        .join(different, ["a", "b"], "left_anti")
+        .join(different_pairs(store), ["a", "b"], "left_anti")
     )
 
 
@@ -496,21 +492,5 @@ def agent_match_enricher(
     AgentMatch output graph. Add-only, like the reference (its TODO notes
     old sameAs are not retracted either)."""
     pairs = agent_match_pairs(store, solve_mode=solve_mode, **kwargs)
-    fwd = pairs.select(
-        F.col("a").alias("subject"),
-        F.lit(vocab.SAME_AS).alias("predicate"),
-        F.col("b").alias("object_value"),
-    )
-    bwd = pairs.select(
-        F.col("b").alias("subject"),
-        F.lit(vocab.SAME_AS).alias("predicate"),
-        F.col("a").alias("object_value"),
-    )
-    added = (
-        fwd.unionByName(bwd)
-        .withColumn("object_type", F.lit("iri"))
-        .withColumn("object_datatype", F.lit(None).cast("string"))
-        .withColumn("object_lang", F.lit(None).cast("string"))
-        .withColumn("graph", F.lit(OUTPUT_GRAPH))
-    )
+    added = same_as_quads(pairs, OUTPUT_GRAPH)
     return Diff(added=added, removed=added.limit(0))

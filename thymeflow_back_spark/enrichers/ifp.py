@@ -2,16 +2,24 @@
 
 Parity with reference InverseFunctionalPropertyInferencer.scala:37-53:
 agents sharing an email/telephone/url OBJECT value are inferred sameAs
-(symmetric pairs), writing into the enricher's own graph. Incremental
-discipline: join DIFF-side subjects against the whole store — never
-store×store — so each batch's cost is proportional to the batch.
-An asserted differentFrom suppresses the inference (the reference's
-isDifferentFrom guard, AbstractEnricher.scala:17-21).
+(symmetric pairs), written into the enricher's own graph. An asserted
+differentFrom vetoes the pair (the reference's isDifferentFrom guard,
+AbstractEnricher.scala:17-21).
 
-``ifp_derivations`` is the rule expressed with derivation multiplicities
-(one instance per unordered premise pair), which the CountingInferencer
-runs on both added and removed premises for exact ref-counted retraction
-(reference InferenceCountingInferencer.scala:20-46).
+Incremental discipline: ``ifp_enricher`` takes the agents a round's diff
+touches — subjects of added or removed premises, both ends of added or
+removed differentFrom quads — rederives their pairs against the post-round
+store (diff × store, never store × store) and replaces its graph's rows for
+those agents, so each round's cost follows the round.
+
+The store is the only state. The reference instead keeps a count of
+derivations per inference (its inference-counting inferencer, lines 20-46;
+SURVEY.md, "Reference counting"). Counts are right only if every change is
+seen exactly once, and a veto folded into the counts when a premise changes
+is not lifted when the differentFrom goes, so the same documents can give
+different stores by delivery order. Rederiving needs no count for
+multi-support either: a pair with a second shared value survives losing
+the first, because the second is still in the store.
 """
 
 from __future__ import annotations
@@ -21,8 +29,7 @@ from pyspark.sql import functions as F
 
 from ..rdf import vocab
 from ..rdf.model import QUAD_COLUMNS
-from ..rdf.store import StatementStore
-from .counting import CountingInferencer
+from ..rdf.store import Diff, StatementStore, _anti
 
 IFP_PREDICATES = (vocab.EMAIL, vocab.TELEPHONE, vocab.URL)
 OUTPUT_GRAPH = "urn:graph:ifpInferencer"
@@ -38,59 +45,75 @@ def _ifp_spv(df: DataFrame) -> DataFrame:
     )
 
 
-def ifp_derivations(
-    premises: DataFrame, universe: DataFrame, store: StatementStore
-) -> DataFrame:
-    """IFP rule with derivation multiplicities.
+def different_pairs(store: StatementStore) -> DataFrame:
+    """(a, b) with a < b for every asserted differentFrom, either way round:
+    the agent pairs no sameAs may join."""
+    return store.quads.filter(F.col("predicate") == vocab.DIFFERENT_FROM).select(
+        F.least("subject", "object_value").alias("a"),
+        F.greatest("subject", "object_value").alias("b"),
+    )
 
-    A derivation instance is an unordered premise pair ((a,p,v),(b,p,v));
-    each instance derives sameAs(a,b) and sameAs(b,a). Returns quad rows
-    plus ``n`` = instances per quad, so two agents sharing two distinct
-    emails keep their sameAs when one email is retracted.
-    """
-    d = _ifp_spv(premises).alias("d")
-    s = _ifp_spv(universe).alias("s")
-    instances = (
-        d.join(
-            s,
+
+def same_as_quads(pairs: DataFrame, graph: str) -> DataFrame:
+    """Both orientations of each (a, b) pair as sameAs quads in ``graph``."""
+    return (
+        pairs.select(F.col("a").alias("subject"), F.col("b").alias("object_value"))
+        .unionByName(pairs.select(F.col("b").alias("subject"), F.col("a").alias("object_value")))
+        .select(
+            "subject",
+            F.lit(vocab.SAME_AS).alias("predicate"),
+            "object_value",
+            F.lit("iri").alias("object_type"),
+            F.lit(None).cast("string").alias("object_datatype"),
+            F.lit(None).cast("string").alias("object_lang"),
+            F.lit(graph).alias("graph"),
+        )
+    )
+
+
+def ifp_enricher(store: StatementStore, diff: Diff) -> Diff:
+    """Replace the IFP graph's rows for the agents ``diff`` touches with the
+    IFP rule rederived for them over ``store`` (the post-round store)."""
+    changed = diff.added.unionByName(diff.removed)
+    vetoes = changed.filter(F.col("predicate") == vocab.DIFFERENT_FROM)
+    touched = (
+        _ifp_spv(changed).select("subject")
+        .unionByName(vetoes.select("subject"))
+        .unionByName(vetoes.select(F.col("object_value").alias("subject")))
+        .dropDuplicates()
+    )
+
+    values = _ifp_spv(store.quads)
+    mine = values.join(touched, "subject", "left_semi")
+    pairs = (
+        mine.alias("d")
+        .join(
+            values.alias("s"),
             (F.col("d.predicate") == F.col("s.predicate"))
             & (F.col("d.object_value") == F.col("s.object_value"))
             & (F.col("d.subject") != F.col("s.subject")),
         )
         .select(
-            F.least(F.col("d.subject"), F.col("s.subject")).alias("a"),
-            F.greatest(F.col("d.subject"), F.col("s.subject")).alias("b"),
-            F.col("d.predicate").alias("predicate"),
-            F.col("d.object_value").alias("object_value"),
+            F.least("d.subject", "s.subject").alias("a"),
+            F.greatest("d.subject", "s.subject").alias("b"),
         )
         .dropDuplicates()
+        .join(different_pairs(store), ["a", "b"], "left_anti")
     )
-    # differentFrom suppression (both orientations collapse to (least, greatest));
-    # applied to increments and decrements alike so the counts stay symmetric
-    different = store.quads.filter(F.col("predicate") == vocab.DIFFERENT_FROM).select(
-        F.least(F.col("subject"), F.col("object_value")).alias("a"),
-        F.greatest(F.col("subject"), F.col("object_value")).alias("b"),
-    )
-    instances = instances.join(different, on=["a", "b"], how="left_anti")
+    inferred = same_as_quads(pairs, OUTPUT_GRAPH)
 
-    pair_counts = instances.groupBy("a", "b").agg(F.count("*").alias("n"))
-    fwd = pair_counts.select(
-        F.col("a").alias("subject"), F.col("b").alias("object_value"), "n"
+    ifp = store.graph(OUTPUT_GRAPH)
+    current = (
+        ifp.join(touched, "subject", "left_semi")
+        .unionByName(ifp.join(touched.withColumnRenamed("subject", "object_value"),
+                              "object_value", "left_semi"))
+        .dropDuplicates()
     )
-    bwd = pair_counts.select(
-        F.col("b").alias("subject"), F.col("a").alias("object_value"), "n"
-    )
-    return (
-        fwd.unionByName(bwd)
-        .withColumn("predicate", F.lit(vocab.SAME_AS))
-        .withColumn("object_type", F.lit("iri"))
-        .withColumn("object_datatype", F.lit(None).cast("string"))
-        .withColumn("object_lang", F.lit(None).cast("string"))
-        .withColumn("graph", F.lit(OUTPUT_GRAPH))
-        .select(*QUAD_COLUMNS, "n")
-    )
+    return Diff(_anti(inferred, current, QUAD_COLUMNS), _anti(current, inferred, QUAD_COLUMNS))
 
 
-def counting_ifp_enricher() -> CountingInferencer:
-    """IFP enricher with ref-counted retraction (the pipeline default)."""
-    return CountingInferencer(ifp_derivations)
+def counting_ifp_enricher():
+    """Returns ``ifp_enricher``. Kept only because the benchmark's set-up
+    (``perfbench/pkb.py``) imports this name; delete it with the benchmark
+    change that stops importing it."""
+    return ifp_enricher

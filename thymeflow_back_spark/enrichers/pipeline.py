@@ -6,7 +6,9 @@ store state left by its predecessors; their inferences are applied to the
 store and appended to the flowing diff. ``ingest`` is that round — one
 document replace, one materialization, one pass of the chain — and the
 only way data enters the store with enrichment: the supervisor's sync
-rounds run it.
+rounds run it. Enrichers keep no state of their own, so the store a round
+leaves depends only on the store it started from and the documents it
+delivered.
 """
 
 from __future__ import annotations

@@ -15,7 +15,7 @@ from pyspark.sql.window import Window
 from ..operators.closure import connected_components
 from ..rdf import vocab
 from ..rdf.model import QUAD_COLUMNS
-from ..rdf.store import Diff, StatementStore
+from ..rdf.store import Diff, StatementStore, _anti
 
 OUTPUT_GRAPH = "urn:graph:primaryFacet"
 
@@ -24,9 +24,10 @@ def primary_facet_enricher(store: StatementStore, diff: Diff) -> Diff:
     sameas = store.quads.filter(
         (F.col("predicate") == vocab.SAME_AS) & (F.col("object_type") == "iri")
     ).select(F.col("subject").alias("src"), F.col("object_value").alias("dst"))
+    current = store.graph(OUTPUT_GRAPH)
     if sameas.isEmpty():
-        empty = store.quads.filter(F.lit(False))
-        return Diff(empty, empty)
+        # no class left: every election of the graph is stale
+        return Diff(current.limit(0), current)
 
     comps = connected_components(sameas)  # (node, component)
     # descriptive-triple count per facet (triples with the facet as subject)
@@ -61,7 +62,4 @@ def primary_facet_enricher(store: StatementStore, diff: Diff) -> Diff:
         .select(*QUAD_COLUMNS)
     )
     # replace the enricher graph wholesale: remove stale elections, add fresh
-    current = store.graph(OUTPUT_GRAPH)
-    added = edges.join(current, on=list(QUAD_COLUMNS), how="left_anti")
-    removed = current.join(edges, on=list(QUAD_COLUMNS), how="left_anti")
-    return Diff(added, removed)
+    return Diff(_anti(edges, current, QUAD_COLUMNS), _anti(current, edges, QUAD_COLUMNS))

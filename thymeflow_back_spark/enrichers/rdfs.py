@@ -7,6 +7,9 @@ time. Spark shape: a semi-naïve fixpoint — each round joins only the LAST
 round's delta against the (transitively closed) ontology, so rule firing
 cost tracks the new facts, not the store. The ontology (schema triples) is
 small and broadcast.
+
+``rdfs_enricher`` is add-only: a withdrawn premise leaves its consequences
+in place. Its one caller is the catalog's ``q_rdf_rdfs_closure``.
 """
 
 from __future__ import annotations
@@ -18,8 +21,7 @@ from ..operators.cachereg import pin
 from ..operators.closure import transitive_closure_local
 from ..rdf import vocab
 from ..rdf.model import QUAD_COLUMNS
-from ..rdf.store import Diff, StatementStore
-from .counting import CountingInferencer
+from ..rdf.store import Diff, StatementStore, _anti
 
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"
 SUB_CLASS_OF = RDFS + "subClassOf"
@@ -29,17 +31,11 @@ RANGE = RDFS + "range"
 OUTPUT_GRAPH = "urn:graph:rdfsInferencer"
 
 
-def rdfs_derivations(
-    premises: DataFrame, universe: DataFrame, store: StatementStore
-) -> DataFrame:
-    """RDFS consequences of ``premises`` with derivation multiplicities.
-
-    Each (premise, rule-application) is one derivation instance; the
-    returned ``n`` counts instances per derived quad. Rules are single-
-    premise given the ontology (treated as static schema state, like the
-    reference's startup-loaded ontology graph), so running this on added
-    and removed premises symmetrically yields exact ref-counts for the
-    CountingInferencer."""
+def rdfs_derivations(premises: DataFrame, store: StatementStore) -> DataFrame:
+    """RDFS consequences of ``premises``, one row per derived quad. Rules
+    are single-premise given the ontology, read from ``store`` and treated
+    as static schema state, like the reference's startup-loaded ontology
+    graph."""
     # the schema filter feeds FOUR consumers (subclass, subproperty,
     # domain, range); in an enrich over a derived quad relation (e.g. the
     # tpch quad encoding) each consumer would otherwise re-derive the
@@ -155,25 +151,16 @@ def rdfs_derivations(
     )
     return (
         derived.unionByName(derived2)
-        .groupBy("subject", "predicate", "object_value", "object_type")
-        .agg(F.count("*").alias("n"))
+        .dropDuplicates()
         .withColumn("object_datatype", F.lit(None).cast("string"))
         .withColumn("object_lang", F.lit(None).cast("string"))
         .withColumn("graph", F.lit(OUTPUT_GRAPH))
-        .select(*QUAD_COLUMNS, "n")
+        .select(*QUAD_COLUMNS)
     )
-
-
-def counting_rdfs_enricher() -> CountingInferencer:
-    """RDFS enricher with ref-counted retraction (the pipeline default)."""
-    return CountingInferencer(rdfs_derivations)
 
 
 def rdfs_enricher(store: StatementStore, diff: Diff) -> Diff:
-    """Stateless add-only form: materialize RDFS consequences of the diff's
-    added statements (monotone per batch; no retraction state)."""
-    new_quads = rdfs_derivations(diff.added, store.quads, store).drop("n")
-    new_quads = new_quads.join(
-        store.quads.select(*QUAD_COLUMNS), on=list(QUAD_COLUMNS), how="left_anti"
-    )
+    """The RDFS consequences of the diff's added statements that the store
+    does not hold yet."""
+    new_quads = _anti(rdfs_derivations(diff.added, store), store.quads, QUAD_COLUMNS)
     return Diff(new_quads, store.quads.filter(F.lit(False)))

@@ -13,9 +13,9 @@ avg/rate as derived sum/count): retractions are sums with sign -1, so
 ``state' = state + agg(added) - agg(removed)``, one shuffle over the
 diff, one over the (group-sized) state union. Non-additive aggregates
 (min/max under retraction, distinct counts) are NOT expressible this way
-— on retraction they need a rescan or an auxiliary structure
-(ref-counts: enrichers/counting.py) — so the API takes explicit sum
-expressions and counts, nothing else, the same honesty rule as
+— on retraction they need a rescan of the touched groups (as
+enrichers/ifp.py rederives the agents a round touches) — so the API
+takes explicit sum expressions and counts, nothing else, the same honesty rule as
 operators/skew.py salted_agg.
 
 Measures should be exact types (decimal/long): the merge adds and

@@ -308,7 +308,3 @@ class FacebookSynchronizer:
                 StructType([StructField("graph", StringType())]),
             ),
         )
-
-    def sync(self, store: StatementStore) -> tuple[StatementStore, Diff]:
-        quads, graphs = self.fetch()
-        return store.add_documents(quads, graphs=graphs)
