@@ -154,7 +154,7 @@ def test_location_event_enricher(spark):
                 num_q(f"geo:{ev}", vocab.LATITUDE, latlon[0], "g:cal"),
                 num_q(f"geo:{ev}", vocab.LONGITUDE, latlon[1], "g:cal"),
             ]
-    store, _ = ingest(
+    store, diff = ingest(
         StatementStore(make_quads(spark, base)),
         make_quads(spark, events),
         ["g:cal"],
@@ -167,6 +167,40 @@ def test_location_event_enricher(spark):
         ).collect()
     }
     assert located == {"event:near", "event:nogeo"}
+    # the store holds the matches (IRI quads, NULL datatype and lang): a
+    # re-run over it reports none of them as added
+    assert location_event_enricher(store, diff).added.count() == 0
+
+
+def test_owl_rerun_adds_nothing(spark):
+    """Re-running the OWL enricher over a store that holds its output
+    reports nothing as added: its diff is exactly what the store lacks."""
+    from thymeflow_back_spark.enrichers.owl import (
+        INVERSE_OF,
+        OUTPUT_GRAPH,
+        TRANSITIVE_PROPERTY,
+        owl_enricher,
+    )
+    from thymeflow_back_spark.enrichers.pipeline import ingest
+
+    ontology = [
+        iri_q("p:hasPart", INVERSE_OF, "p:partOf", "g:ontology"),
+        iri_q("p:ancestor", vocab.RDF_TYPE, TRANSITIVE_PROPERTY, "g:ontology"),
+    ]
+    doc = [
+        iri_q("x", "p:partOf", "y", "g:doc"),
+        iri_q("c1", "p:ancestor", "c2", "g:doc"),
+        iri_q("c2", "p:ancestor", "c3", "g:doc"),
+    ]
+    store, diff = ingest(
+        StatementStore(make_quads(spark, ontology)), make_quads(spark, doc), ["g:doc"], [owl_enricher]
+    )
+    derived = {
+        (r.subject, r.predicate, r.object_value)
+        for r in store.quads.filter(F.col("graph") == OUTPUT_GRAPH).collect()
+    }
+    assert derived == {("y", "p:hasPart", "x"), ("c1", "p:ancestor", "c3")}
+    assert owl_enricher(store, diff).added.count() == 0
 
 
 # --- updater ------------------------------------------------------------------

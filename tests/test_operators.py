@@ -260,40 +260,6 @@ def test_top_k_per_group_deterministic(spark):
     assert got == {("g1", 1), ("g2", 4)}
 
 
-def test_graphml_serialization(spark):
-    """GraphML export of a CC-style node/edge set (reference GraphML.scala):
-    well-formed XML, typed keys, escaped attribute text."""
-    import xml.etree.ElementTree as ET
-
-    from thymeflow_back_spark.operators.graphml import graphml_string
-
-    nodes = spark.createDataFrame(
-        [("a", "A & B", 3), ("b", '<quoted> "x"', 1), ("c", None, 2)],
-        "id string, label string, weight bigint",
-    )
-    edges = spark.createDataFrame(
-        [("a", "b", 0.5), ("b", "c", 1.25)],
-        "src string, dst string, cost double",
-    )
-    text = graphml_string(nodes, edges, graph_id="CC", directed=True)
-    root = ET.fromstring(text)  # parses ⇒ escaping is correct
-    ns = "{http://graphml.graphdrawing.org/xmlns}"
-    keys = {k.get("id"): (k.get("for"), k.get("attr.type")) for k in root.findall(f"{ns}key")}
-    assert keys == {"label": ("node", "string"), "weight": ("node", "long"),
-                    "cost": ("edge", "double")}
-    graph = root.find(f"{ns}graph")
-    assert graph.get("edgedefault") == "directed"
-    node_els = {n.get("id"): n for n in graph.findall(f"{ns}node")}
-    assert set(node_els) == {"a", "b", "c"}
-    assert node_els["a"].find(f"{ns}data").text == "A & B"
-    assert node_els["b"].find(f"{ns}data").text == '<quoted> "x"'
-    # NULL attribute → no data element for it (weight remains)
-    c_data = {d.get("key"): d.text for d in node_els["c"].findall(f"{ns}data")}
-    assert c_data == {"weight": "2"}
-    edge_els = {(e.get("source"), e.get("target")) for e in graph.findall(f"{ns}edge")}
-    assert edge_els == {("a", "b"), ("b", "c")}
-
-
 def test_salted_join_and_agg_match_plain(spark):
     """Salting preserves semantics: a skewed fact×dim join and a skewed
     aggregation produce exactly the plain results, just spread over more

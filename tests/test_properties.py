@@ -1,55 +1,124 @@
-"""Property-based tests (hypothesis): serializer/parser round-trips and
+"""Property-based tests (hypothesis): the N-Triples writer's round trip and
 scalar-function invariants that unit goldens can't sweep.
 
-Driver-side properties run pure-Python helpers (parse_rdf, the term
-escaper, phone normalization) so thousands of examples stay cheap; Spark
-jobs are reserved for one representative columnar batch per property.
+Driver-side properties run pure-Python helpers (phone normalization, the
+SPARQL parser) so thousands of examples stay cheap; Spark jobs are reserved
+for one columnar batch per property.
 """
 
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from thymeflow_back_spark.functions.phone import display_phone, normalize_phone
-from thymeflow_back_spark.rdf.io import _term_str, parse_rdf
+from thymeflow_back_spark.rdf.io import serialize_ntriples
+from thymeflow_back_spark.rdf.model import XSD_STRING, make_quads
 
-# --- N-Triples escape/parse round-trip ---------------------------------------
+# --- N-Triples: what the endpoint serves reads back as the quads ------------
+# Hypothesis draws the quads; each property serializes all of them in one
+# Spark batch through ``serialize_ntriples`` and reads the lines back with a
+# reader of the N-Triples subset the serializer emits.
 
-_literal_text = st.text(
-    alphabet=st.characters(
-        blacklist_categories=("Cs",),  # no lone surrogates
-        max_codepoint=0x2FFF,
+_NT_TERM = r'<[^<>"\s]*>|_:[A-Za-z0-9]+'
+_NT_LINE = re.compile(
+    rf'({_NT_TERM}) <([^<>"\s]*)> '
+    rf'(?:({_NT_TERM})|"((?:[^"\\\n\r]|\\[\\"nrt])*)"(?:@([A-Za-z]+(?:-[A-Za-z0-9]+)*)|\^\^<([^<>"\s]*)>)?) \.'
+)
+_NT_UNESCAPE = {"\\": "\\", '"': '"', "n": "\n", "r": "\r", "t": "\t"}
+
+
+def _nt_term(text: str) -> tuple[str, str]:
+    return (text, "bnode") if text.startswith("_:") else (text[1:-1], "iri")
+
+
+def _read_ntriples(line: str) -> tuple:
+    """One N-Triples line → (subject, predicate, value, type, datatype, lang)."""
+    m = _NT_LINE.fullmatch(line)
+    assert m, f"not an N-Triples line: {line!r}"
+    subj, pred, term, text, lang, dtype = m.groups()
+    subject = _nt_term(subj)[0]
+    if term is not None:
+        return (subject, pred, *_nt_term(term), None, None)
+    value = re.sub(r"\\(.)", lambda e: _NT_UNESCAPE[e.group(1)], text)
+    if lang is None and dtype is None:
+        dtype = XSD_STRING
+    return (subject, pred, value, "literal", dtype, lang)
+
+
+def _expected(quad: tuple) -> tuple:
+    """What N-Triples keeps of a quad: no graph; a language tag wins over a
+    datatype; a plain literal is an xsd:string."""
+    s, p, o, otype, dtype, lang, _ = quad
+    if otype != "literal":
+        return (s, p, o, otype, None, None)
+    if lang is not None:
+        return (s, p, o, otype, None, lang)
+    return (s, p, o, otype, dtype or XSD_STRING, None)
+
+
+def _drawn(strategy, n: int = 300) -> list:
+    """``n`` examples Hypothesis draws from ``strategy``."""
+    out = []
+
+    @settings(max_examples=n, deadline=None, database=None)
+    @given(strategy)
+    def draw(x):
+        out.append(x)
+
+    draw()
+    return out
+
+
+def _assert_roundtrip(spark, quads: list[tuple]) -> None:
+    lines = [r.line for r in serialize_ntriples(make_quads(spark, quads)).collect()]
+    got = Counter(_read_ntriples(line) for line in lines)
+    want = Counter(_expected(q) for q in quads)
+    assert got == want, (
+        f"missing {list((want - got).elements())[:3]}, extra {list((got - want).elements())[:3]}"
+    )
+
+
+_iri = st.from_regex(r"urn:[a-zA-Z0-9._:/#-]{1,30}", fullmatch=True)
+_bnode = st.from_regex(r"_:[A-Za-z0-9]{1,12}", fullmatch=True)
+_text = st.text(
+    alphabet=st.one_of(
+        st.sampled_from('"\\\n\r\t\'@^<>. '),
+        st.characters(blacklist_categories=("Cs",)),  # no lone surrogates
     ),
     max_size=40,
 )
-
-_iri = st.from_regex(r"urn:[a-zA-Z0-9._:-]{1,30}", fullmatch=True)
-
-
-@settings(max_examples=300, deadline=None)
-@given(s=_iri, p=_iri, text=_literal_text, lang=st.sampled_from([None, "en", "pt-BR"]))
-def test_ntriples_roundtrip_literals(s, p, text, lang):
-    """serialize(term) → parse → identical (subject, predicate, object)."""
-    dtype = None if lang else "http://www.w3.org/2001/XMLSchema#string"
-    line = (
-        f"<{s}> <{p}> " + _term_str(text, "literal", dtype, lang) + " ."
-    )
-    quads = parse_rdf(line, default_graph="g")
-    assert len(quads) == 1
-    qs, qp, qo, otype, qdtype, qlang, _ = quads[0]
-    assert (qs, qp, qo, otype) == (s, p, text, "literal")
-    assert qlang == lang
+_lang = st.from_regex(r"[a-zA-Z]{1,8}(-[a-zA-Z0-9]{1,8}){0,2}", fullmatch=True)
 
 
-@settings(max_examples=200, deadline=None)
-@given(s=_iri, p=_iri, o=_iri)
-def test_ntriples_roundtrip_iris(s, p, o):
-    line = f"<{s}> <{p}> <{o}> ."
-    [(qs, qp, qo, otype, *_rest)] = parse_rdf(line, default_graph="g")
-    assert (qs, qp, qo, otype) == (s, p, o, "iri")
+def _literal(s=_iri, text=_text, dtype=st.just(XSD_STRING), lang=st.none()):
+    return st.tuples(s, _iri, text, st.just("literal"), dtype, lang, st.just("g"))
+
+
+def test_ntriples_roundtrip_literals(spark):
+    """Quotes, backslashes, line breaks, tabs and non-ASCII text survive."""
+    _assert_roundtrip(spark, _drawn(_literal()))
+
+
+def test_ntriples_roundtrip_lang_and_datatypes(spark):
+    """Language tags (whatever datatype rides along), xsd:string, other
+    datatypes and untyped literals."""
+    tagged = _literal(dtype=st.sampled_from([None, XSD_STRING]), lang=_lang)
+    typed = _literal(dtype=st.one_of(st.none(), st.just(XSD_STRING), _iri))
+    _assert_roundtrip(spark, _drawn(st.one_of(tagged, typed)))
+
+
+def test_ntriples_roundtrip_bnode_subjects(spark):
+    """Blank-node subjects, with IRI, blank-node and literal objects."""
+    resources = st.tuples(
+        _bnode,
+        _iri,
+        st.one_of(st.tuples(_iri, st.just("iri")), st.tuples(_bnode, st.just("bnode"))),
+    ).map(lambda t: (t[0], t[1], *t[2], None, None, "g"))
+    _assert_roundtrip(spark, _drawn(st.one_of(resources, _literal(s=_bnode))))
 
 
 # --- phone normalization invariants ------------------------------------------

@@ -11,7 +11,6 @@ from thymeflow_back_spark.functions.geo import haversine_m, vincenty_m
 from thymeflow_back_spark.functions.phone import (
     display_phone,
     normalize_phone,
-    normalize_phone_col,
     phone_class,
 )
 from thymeflow_back_spark.rdf import vocab
@@ -43,14 +42,6 @@ def test_phone_normalization():
     assert phone_class("cell") == vocab.CELLPHONE_NUMBER
     assert phone_class("work") == vocab.PHONE_NUMBER
     assert phone_class(None) == vocab.PHONE_NUMBER
-
-
-def test_phone_normalization_column(spark):
-    df = spark.createDataFrame(
-        [("(607) 555-0100",), ("+33 1 23 45 67 89",), ("12",)], "raw string"
-    )
-    got = [r.tel for r in df.select(normalize_phone_col(F.col("raw")).alias("tel")).collect()]
-    assert got == ["tel:+16075550100", "tel:+33123456789", None]
 
 
 def test_vcard_phone_types_and_address_hierarchy():

@@ -92,38 +92,6 @@ def test_location_history_converter_day_graphs():
     assert any(r[1] == vocab.VELOCITY for r in quads)
 
 
-def test_mint_col_matches_mint(spark):
-    """Column-side UUID5 minting is bit-identical to the Python path, so the
-    per-file and distributed location-history converters agree on IRIs."""
-    from thymeflow_back_spark.sources.common import mint, mint_col
-
-    names = ["archive.json:2016-03-12", "a:b", "ünïcode:值", ""]
-    df = spark.createDataFrame([(n,) for n in names], "name string")
-    got = {
-        r.name: r.iri
-        for r in df.select("name", mint_col("location-day", F.col("name")).alias("iri")).collect()
-    }
-    for n in names:
-        assert got[n] == mint("location-day", n)
-
-
-def test_location_history_df_matches_row_path(spark):
-    """The distributed spark.read.json path mints the same graph/subject IRIs
-    as the per-file converter (two archives must not collide into one graph)."""
-    from thymeflow_back_spark.sources.location_history import location_history_df
-
-    path = str(FIXTURES / "location_history.json")
-    row_quads = location_history_to_quads((FIXTURES / "location_history.json").read_bytes(), path)
-    df_quads = location_history_df(spark, path).collect()
-    row_keys = {(r[0], r[1], r[6]) for r in row_quads}
-    df_keys = {(r.subject, r.predicate, r.graph) for r in df_quads}
-    # same subjects and graphs from both paths (velocity/heading only exist
-    # on the row path's wider field set; compare the common predicates)
-    common = {k for k in row_keys if k[1] not in (vocab.VELOCITY, vocab.ANGLE)}
-    assert {k[0] for k in common} == {k[0] for k in df_keys}
-    assert {k[2] for k in common} == {k[2] for k in df_keys}
-
-
 def test_scan_and_convert_with_zip(spark, tmp_path):
     # bundle the fixtures into a zip next to a loose .eml — both must convert
     zpath = tmp_path / "bundle.zip"

@@ -16,10 +16,10 @@ surface Spark-first:
 - ``operators``  — interval joins, sessionization, top-k, dedup (exact /
                    MinHash-LSH / SimHash / n-gram Jaccard), similarity search,
                    text analysis, closure/connected components.
-- ``functions``  — scalar function library (geo, temporal, text normalization,
-                   deterministic ID minting) as JVM-side column expressions.
-- ``algorithms`` — per-group local algorithms (text alignment, min-cost flow,
-                   bipartite matching, stay-point clustering) used inside
+- ``functions``  — scalar function library (geodesy, phone normalization,
+                   text folding and tokenization).
+- ``algorithms`` — per-group local algorithms (bipartite matching, name
+                   scoring, stay-point clustering, stemming) used inside
                    Pandas UDFs.
 - ``queries``    — the declared query catalog: every entry has a Spark
                    implementation and (where SQL-expressible) a DuckDB oracle.

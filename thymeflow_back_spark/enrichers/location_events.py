@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..operators.location_events import match_events_to_stays
 from ..rdf import vocab
 from ..rdf.model import QUAD_COLUMNS
-from ..rdf.store import Diff, StatementStore
+from ..rdf.store import Diff, StatementStore, _anti
 
 OUTPUT_GRAPH = "urn:graph:locationEventEnricher"
 
@@ -91,7 +91,7 @@ def location_event_enricher(store: StatementStore, diff: Diff) -> Diff:
         match_events_to_stays(events, new_stays)
     ).select("event_id", "stay_id").dropDuplicates()
 
-    added = (
+    added = _anti(
         matches.select(
             F.col("event_id").alias("subject"),
             F.lit(vocab.LOCATION).alias("predicate"),
@@ -100,8 +100,8 @@ def location_event_enricher(store: StatementStore, diff: Diff) -> Diff:
             F.lit(None).cast("string").alias("object_datatype"),
             F.lit(None).cast("string").alias("object_lang"),
             F.lit(OUTPUT_GRAPH).alias("graph"),
-        )
-        .select(*QUAD_COLUMNS)
-        .join(store.quads.select(*QUAD_COLUMNS), on=list(QUAD_COLUMNS), how="left_anti")
+        ),
+        store.quads,
+        QUAD_COLUMNS,
     )
     return Diff(added, empty.removed)

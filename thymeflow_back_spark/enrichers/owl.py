@@ -202,6 +202,8 @@ def owl_enricher(store: StatementStore, diff: Diff, max_iterations: int = 25) ->
             "raise max_iterations"
         )
 
+    # every round anti-joins against ``known``, which holds every IRI triple
+    # of the store, so nothing in derived_all is in the store already
     added = (
         derived_all.withColumn("object_type", F.lit("iri"))
         .withColumn("object_datatype", F.lit(None).cast("string"))
@@ -209,8 +211,5 @@ def owl_enricher(store: StatementStore, diff: Diff, max_iterations: int = 25) ->
         .withColumn("graph", F.lit(OUTPUT_GRAPH))
         .select(*QUAD_COLUMNS)
         .dropDuplicates(list(QUAD_COLUMNS))
-        # keep only quads genuinely new to the store (derived_all is already
-        # new at the triple level; the graph column narrows it to our graph)
-        .join(store.quads.select(*QUAD_COLUMNS), on=list(QUAD_COLUMNS), how="left_anti")
     )
     return Diff(added, store.quads.filter(F.lit(False)))

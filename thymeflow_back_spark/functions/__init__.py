@@ -1,15 +1,5 @@
-from .geo import haversine_m, parse_geo_uri, format_geo_uri
-from .temporal import duration_millis, iso_duration
-from .text_norm import normalize_text, tokenize
-from .ids import uuid5_iri
-
-__all__ = [
-    "haversine_m",
-    "parse_geo_uri",
-    "format_geo_uri",
-    "duration_millis",
-    "iso_duration",
-    "normalize_text",
-    "tokenize",
-    "uuid5_iri",
-]
+"""Scalar function library: geodesy (``geo``), E.164 phone
+normalization (``phone``) and text folding and tokenization
+(``text_norm``). Each caller imports the module it uses; the SPARQL
+``personal:duration*`` functions live with the compiler
+(``plans/sparql.py``)."""

@@ -1,11 +1,10 @@
-"""Geodesic / geo-URI scalar functions as JVM-side column expressions.
+"""Geodesic scalar functions as JVM-side column expressions.
 
 Reference surface: Haversine point metric
 (spatial/geographic/metric/models/WGS84SphereHaversinePointMetric.scala, used
 by LocationEventEnricher.scala:89-95 for the ≤1 km predicate), the WGS84
 ellipsoid metric (the reference's Vincenty/Karney-backed
-WGS84GeodeticPointMetric; ``vincenty_m`` here) and geo: URI format/parse
-(utils/GeoCoordinatesConverter.scala:24-60). Everything is pure column
+WGS84GeodeticPointMetric; ``vincenty_m`` here). Everything is pure column
 arithmetic — Vincenty's iteration is unrolled a fixed number of times
 (λ converges quadratically; 8 unrolls ≈ libgeodesic precision for
 non-antipodal points), so even the ellipsoid metric stays inside
@@ -141,26 +140,3 @@ def karney_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
         )
 
     return _karney(lat1, lon1, lat2, lon2)
-
-
-# geo:lat,lon[,alt][;u=acc]  (RFC 5870 subset, same shape the reference emits)
-_GEO_RE = r"^geo:(-?[0-9.]+),(-?[0-9.]+)(?:,(-?[0-9.]+))?(?:;u=([0-9.]+))?$"
-
-
-def parse_geo_uri(uri: Column) -> Column:
-    """Parse a geo: URI into struct(lat, lon, alt, acc) of doubles."""
-    return F.struct(
-        F.regexp_extract(uri, _GEO_RE, 1).cast("double").alias("lat"),
-        F.regexp_extract(uri, _GEO_RE, 2).cast("double").alias("lon"),
-        F.nullif(F.regexp_extract(uri, _GEO_RE, 3), F.lit("")).cast("double").alias("alt"),
-        F.nullif(F.regexp_extract(uri, _GEO_RE, 4), F.lit("")).cast("double").alias("acc"),
-    )
-
-
-def format_geo_uri(lat: Column, lon: Column, alt: Column | None = None, acc: Column | None = None) -> Column:
-    uri = F.concat(F.lit("geo:"), lat.cast("string"), F.lit(","), lon.cast("string"))
-    if alt is not None:
-        uri = F.when(alt.isNotNull(), F.concat(uri, F.lit(","), alt.cast("string"))).otherwise(uri)
-    if acc is not None:
-        uri = F.when(acc.isNotNull(), F.concat(uri, F.lit(";u="), acc.cast("string"))).otherwise(uri)
-    return uri

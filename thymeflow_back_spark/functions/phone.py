@@ -16,17 +16,11 @@ self-contained E.164 normalizer covering its contract surface:
   carrier metadata this is the honest signal available.
 - numbers that normalize to fewer than 6 or more than 15 digits (E.164
   max) are rejected (reference logs-and-drops invalid numbers).
-
-Both a per-value Python function (converter path) and a column expression
-(bulk path) are provided; the column form is pure JVM regexp work.
 """
 
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 DEFAULT_COUNTRY_CODE = "1"
 
@@ -69,18 +63,3 @@ def phone_class(type_param: str | None) -> str:
     if type_param and "cell" in type_param.lower():
         return vocab.CELLPHONE_NUMBER
     return vocab.PHONE_NUMBER
-
-
-def normalize_phone_col(col: Column, default_country_code: str = DEFAULT_COUNTRY_CODE) -> Column:
-    """Column-expression twin of ``normalize_phone`` (NULL on invalid)."""
-    v = F.regexp_replace(F.trim(col), r"(?i)^tel:", "")
-    v = F.regexp_replace(v, r"[\s\-(). /]", "")
-    digits = (
-        F.when(v.startswith("+"), v.substr(F.lit(2), F.length(v)))
-        .when(v.startswith("00"), v.substr(F.lit(3), F.length(v)))
-        .when(v.startswith("011"), v.substr(F.lit(4), F.length(v)))
-        .when(v.startswith("0"), F.concat(F.lit(default_country_code), v.substr(F.lit(2), F.length(v))))
-        .otherwise(F.concat(F.lit(default_country_code), v))
-    )
-    valid = digits.rlike(r"^[0-9]{6,15}$")
-    return F.when(valid, F.concat(F.lit("tel:+"), digits))

@@ -3,18 +3,13 @@
 Reference surface: diacritics-removal + lowercase normalization
 (utilities/text/Normalization.scala, memoized at EntityResolution.scala:15)
 and punctuation/space tokenization (EntityResolution.scala:39-40,123-125).
-ASCII-range diacritics fold via translate (JVM-side); full Unicode NFD fold
-available as a pandas UDF for the ER pipeline where fidelity matters.
+Common-Latin diacritics fold via translate, JVM-side.
 """
 
 from __future__ import annotations
 
-import unicodedata
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 _ACCENTED = "àáâãäåçèéêëìíîïñòóôõöùúûüýÿÀÁÂÃÄÅÇÈÉÊËÌÍÎÏÑÒÓÔÕÖÙÚÛÜÝ"
 _PLAIN = "aaaaaaceeeeiiiinooooouuuuyyAAAAAACEEEEIIIINOOOOOUUUUY"
@@ -23,28 +18,6 @@ _PLAIN = "aaaaaaceeeeiiiinooooouuuuyyAAAAAACEEEEIIIINOOOOOUUUUY"
 def normalize_text(col: Column) -> Column:
     """Lowercase + common-Latin diacritics fold (JVM-side, codegen-friendly)."""
     return F.lower(F.translate(col, _ACCENTED, _PLAIN))
-
-
-def _nfd_fold(x: str | None) -> str | None:
-    if x is None:
-        return None
-    return "".join(
-        c for c in unicodedata.normalize("NFD", x.lower()) if not unicodedata.combining(c)
-    )
-
-
-def normalize_text_unicode() -> "pandas_udf":
-    """Full Unicode NFD diacritics fold (Arrow-vectorized fallback).
-
-    Built lazily — pandas_udf type resolution needs an active SparkSession,
-    so the decorator cannot run at import time.
-    """
-
-    @pandas_udf("string")
-    def _udf(s: pd.Series) -> pd.Series:
-        return s.map(_nfd_fold)
-
-    return _udf
 
 
 def tokenize(col: Column) -> Column:

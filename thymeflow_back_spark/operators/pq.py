@@ -75,20 +75,6 @@ def _plan_key(df: DataFrame) -> tuple:
     return (df.semanticHash(), str(df.schema))
 
 
-def _sub(vec: Column, j: int, sub_d: int) -> Column:
-    return F.slice(vec, j * sub_d + 1, sub_d)
-
-
-def _chain_sum(terms: list[Column]) -> Column:
-    """Left-to-right chained sum. Bit-identical to the ordered fold from
-    0.0 (operators/similarity.dot / DuckDB list_dot_product): IEEE addition
-    has 0.0 + a == a exactly, so dropping the leading zero changes nothing."""
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
 def _dot_col(x: Column, c: Column) -> Column:
     """x · c over two array COLUMNS: the ordered fold from 0.0 (IEEE:
     0.0 + a == a exactly, products fold in element order), bit-identical to
@@ -104,13 +90,6 @@ def _dot_col(x: Column, c: Column) -> Column:
     codebooks travel as one-row broadcast relations (codebook_row)."""
     return F.aggregate(
         F.zip_with(x, c, lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
-def _self_dot(x: Column, sub_d: int) -> Column:
-    """x · x as explicit arithmetic (same fold order as dot())."""
-    return _chain_sum(
-        [F.element_at(x, i + 1) * F.element_at(x, i + 1) for i in range(sub_d)]
     )
 
 

@@ -1731,8 +1731,9 @@ def _fn_duration_millis(start: str, end: str) -> str:
 
 
 def _fn_duration(start: str, end: str) -> str:
-    """end − start as an ISO-8601 dayTimeDuration (PnDTnHnMn.nnnS), the SQL
-    form of functions/temporal.py's ``iso_duration``."""
+    """end − start as an ISO-8601 dayTimeDuration (PnDTnHnMn.nnnS): days,
+    then hours, minutes and fractional seconds, each part present only
+    when non-zero (seconds always), negated as a whole."""
     us = f"(unix_micros(to_timestamp({end})) - unix_micros(to_timestamp({start})))"
     a = f"abs({us})"
 

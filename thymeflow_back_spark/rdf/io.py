@@ -1,632 +1,19 @@
-"""RDF I/O: NTriples / NQuads / Turtle / TriG / RDF/XML / TriX parsing
-and serialization.
+"""N-Triples serialization of quads, the CONSTRUCT/DESCRIBE answer format
+of the SPARQL endpoint (``api.service.quads_ntriples``).
 
-The reference delegates wire formats to RDF4J Rio (reference build.sbt:66-76;
-RepositoryFactory.scala:201-245 loads the bundled Turtle ontology at startup;
-FileSynchronization.scala persists the user graph to a TriG file). Spark
-shape:
-
-- PARSE: one recursive-descent parser for the TriG superset (Turtle is TriG
-  without graph blocks; NTriples/NQuads are line-oriented subsets — the
-  parser also accepts the NQuads 4th-term graph position). Files parse
-  per-file inside ``mapInPandas`` over a binaryFile scan — RDF text formats
-  are not line-splittable once prefixes/multiline literals exist, so the
-  parallelism unit is the file, which matches the workload (many documents,
-  each small). A single huge .nt/.nq dump instead goes through
-  ``load_nquads_lines`` (``spark.read.text`` — byte-range splittable).
-- SERIALIZE: N-Triples/N-Quads are pure column expressions (escaping via
-  chained ``regexp_replace`` — JVM-side, whole-stage codegen, no Python in
-  the hot path). Turtle/TriG serialization groups by graph via
-  ``applyInPandas`` (per-graph documents — the reference's unit too).
+The line is a pure column expression: escaping is chained
+``regexp_replace``, so it runs JVM-side inside whole-stage codegen with no
+Python in the path. Parsing RDF text formats is not part of the program:
+the reference's FileSynchronizer dispatches eml/ics/vcf/zip/json only
+(SURVEY.md §2.1), and no entry point loads RDF files.
 """
 
 from __future__ import annotations
 
-import os
-import re
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
-from .model import QUAD_COLUMNS, QUAD_SCHEMA, XSD
-
-RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-XSD_STRING = XSD + "string"
-
-# --- tokenizer ---------------------------------------------------------------
-
-_TOKEN = re.compile(
-    r"""
-      (?P<ws>\s+|\#[^\n]*)
-    | (?P<iri><[^<>"{}|^`\\\s]*>)
-    | (?P<long_lit>\"\"\"(?:[^"\\]|\\.|\"(?!\"\")|\"\"(?!\"))*\"\"\"|'''(?:[^'\\]|\\.|'(?!'')|''(?!'))*''')
-    | (?P<lit>"(?:[^"\\\n]|\\.)*"|'(?:[^'\\\n]|\\.)*')
-    | (?P<langtag>@[a-zA-Z]+(?:-[a-zA-Z0-9]+)*)
-    | (?P<dtype>\^\^)
-    | (?P<bnode>_:[^\s;,.)\]}]+)
-    | (?P<num>[+-]?(?:\d+\.\d*|\.\d+|\d+)(?:[eE][+-]?\d+)?)
-    | (?P<punct>[.;,\[\]()\{\}])
-    | (?P<pname>[^\s;,.\[\]()\{\}]+)
-    """,
-    re.VERBOSE,
-)
-
-_ESCAPES = {"t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f", '"': '"', "'": "'", "\\": "\\"}
-
-
-def _unescape(s: str) -> str:
-    out: list[str] = []
-    i = 0
-    while i < len(s):
-        c = s[i]
-        if c == "\\" and i + 1 < len(s):
-            e = s[i + 1]
-            if e == "u":
-                out.append(chr(int(s[i + 2 : i + 6], 16)))
-                i += 6
-                continue
-            if e == "U":
-                out.append(chr(int(s[i + 2 : i + 10], 16)))
-                i += 10
-                continue
-            out.append(_ESCAPES.get(e, e))
-            i += 2
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
-
-
-class RdfParseError(ValueError):
-    pass
-
-
-class _Parser:
-    """Recursive-descent TriG parser (Turtle/NTriples/NQuads compatible)."""
-
-    def __init__(self, text: str, default_graph: str, base: str | None = None):
-        self.tokens: list[tuple[str, str]] = []
-        for m in _TOKEN.finditer(text):
-            kind = m.lastgroup
-            if kind != "ws":
-                self.tokens.append((kind, m.group()))
-        self.pos = 0
-        self.prefixes: dict[str, str] = {}
-        self.base = base or ""
-        self.default_graph = default_graph
-        self.quads: list[tuple] = []
-        self._bnode_n = 0
-
-    # -- token helpers --
-    def _peek(self) -> tuple[str, str] | None:
-        return self.tokens[self.pos] if self.pos < len(self.tokens) else None
-
-    def _next(self) -> tuple[str, str]:
-        t = self._peek()
-        if t is None:
-            raise RdfParseError("unexpected end of input")
-        self.pos += 1
-        return t
-
-    def _expect(self, value: str) -> None:
-        kind, tok = self._next()
-        if tok != value:
-            raise RdfParseError(f"expected {value!r}, got {tok!r}")
-
-    def _fresh_bnode(self) -> str:
-        self._bnode_n += 1
-        return f"_:gen{self._bnode_n}"
-
-    # -- term parsing --
-    def _resolve_iri(self, raw: str) -> str:
-        iri = _unescape(raw[1:-1])
-        if self.base and not re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", iri):
-            return self.base + iri
-        return iri
-
-    def _resolve_pname(self, tok: str) -> str:
-        prefix, _, local = tok.partition(":")
-        if prefix not in self.prefixes:
-            raise RdfParseError(f"undefined prefix {prefix!r} in {tok!r}")
-        # PN_LOCAL escapes (\~ \. etc.)
-        return self.prefixes[prefix] + re.sub(r"\\(.)", r"\1", local)
-
-    def _term(self, kind: str, tok: str):
-        """Returns (value, otype, dtype, lang); may consume more tokens."""
-        if kind == "iri":
-            return (self._resolve_iri(tok), "iri", None, None)
-        if kind == "bnode":
-            return (tok, "bnode", None, None)
-        if kind in ("lit", "long_lit"):
-            body = tok[3:-3] if kind == "long_lit" else tok[1:-1]
-            value = _unescape(body)
-            nxt = self._peek()
-            if nxt and nxt[0] == "langtag":
-                self._next()
-                return (value, "literal", XSD_STRING, nxt[1][1:])
-            if nxt and nxt[0] == "dtype":
-                self._next()
-                dkind, dtok = self._next()
-                if dkind == "iri":
-                    dt = self._resolve_iri(dtok)
-                elif dkind == "pname":
-                    dt = self._resolve_pname(dtok)
-                else:
-                    raise RdfParseError(f"bad datatype token {dtok!r}")
-                return (value, "literal", dt, None)
-            return (value, "literal", XSD_STRING, None)
-        if kind == "num":
-            if "e" in tok.lower():
-                return (tok, "literal", XSD + "double", None)
-            if "." in tok:
-                return (tok, "literal", XSD + "decimal", None)
-            return (tok, "literal", XSD + "integer", None)
-        if kind == "pname":
-            if tok == "a":
-                return (RDF_NS + "type", "iri", None, None)
-            if tok in ("true", "false"):
-                return (tok, "literal", XSD + "boolean", None)
-            return (self._resolve_pname(tok), "iri", None, None)
-        raise RdfParseError(f"unexpected token {tok!r}")
-
-    def _object(self, graph: str):
-        kind, tok = self._next()
-        if tok == "[":
-            node = self._fresh_bnode()
-            if self._peek() and self._peek()[1] != "]":
-                self._predicate_object_list(node, graph)
-            self._expect("]")
-            return (node, "bnode", None, None)
-        if tok == "(":
-            return (self._collection(graph), "bnode", None, None)
-        return self._term(kind, tok)
-
-    def _collection(self, graph: str) -> str:
-        """RDF collection ( a b c ) → rdf:first/rest chain."""
-        items = []
-        while True:
-            nxt = self._peek()
-            if nxt is None:
-                raise RdfParseError("unterminated collection")
-            if nxt[1] == ")":
-                self._next()
-                break
-            items.append(self._object(graph))
-        if not items:
-            return RDF_NS + "nil"
-        head = self._fresh_bnode()
-        node = head
-        for i, (value, otype, dtype, lang) in enumerate(items):
-            self._emit(node, RDF_NS + "first", value, otype, dtype, lang, graph)
-            nxt_node = self._fresh_bnode() if i + 1 < len(items) else RDF_NS + "nil"
-            nxt_type = "bnode" if i + 1 < len(items) else "iri"
-            self._emit(node, RDF_NS + "rest", nxt_node, nxt_type, None, None, graph)
-            node = nxt_node
-        return head
-
-    def _emit(self, s, p, o, otype, dtype, lang, graph):
-        self.quads.append((s, p, o, otype, dtype if otype == "literal" else None, lang, graph))
-
-    # -- grammar --
-    def _predicate_object_list(self, subject: str, graph: str) -> None:
-        while True:
-            kind, tok = self._next()
-            predicate = self._term(kind, tok)[0]
-            while True:
-                value, otype, dtype, lang = self._object(graph)
-                self._emit(subject, predicate, value, otype, dtype, lang, graph)
-                nxt = self._peek()
-                if nxt and nxt[1] == ",":
-                    self._next()
-                    continue
-                break
-            nxt = self._peek()
-            if nxt and nxt[1] == ";":
-                self._next()
-                # tolerate trailing ';' before '.' / ']' / '}'
-                nxt = self._peek()
-                if nxt and nxt[1] in (".", "]", "}"):
-                    break
-                continue
-            break
-
-    def _subject(self, graph: str) -> tuple[str, str]:
-        kind, tok = self._next()
-        if tok == "[":
-            node = self._fresh_bnode()
-            if self._peek() and self._peek()[1] != "]":
-                self._predicate_object_list(node, graph)
-            self._expect("]")
-            return node, "bnode"
-        if tok == "(":
-            return self._collection(graph), "bnode"
-        value, otype, _, _ = self._term(kind, tok)
-        return value, otype
-
-    def _triples(self, graph: str, allow_graph_term: bool) -> None:
-        subject, _ = self._subject(graph)
-        nxt = self._peek()
-        if nxt and nxt[1] == "{":  # TriG: <g> { ... } block
-            self._next()
-            while self._peek() and self._peek()[1] != "}":
-                self._triples(subject, allow_graph_term=False)
-            self._expect("}")
-            return
-        # single-statement parse: predicate + object, then either the NQuads
-        # graph term, a ';'/',' continuation, or '.'
-        self._predicate_object_list_or_nquads(subject, graph, allow_graph_term)
-
-    def _predicate_object_list_or_nquads(
-        self, subject: str, graph: str, allow_graph_term: bool
-    ) -> None:
-        kind, tok = self._next()
-        predicate = self._term(kind, tok)[0]
-        value, otype, dtype, lang = self._object(graph)
-        nxt = self._peek()
-        if allow_graph_term and nxt and nxt[0] in ("iri", "bnode"):
-            gkind, gtok = self._next()
-            g = self._resolve_iri(gtok) if gkind == "iri" else gtok
-            self._emit(subject, predicate, value, otype, dtype, lang, g)
-            self._expect(".")
-            return
-        self._emit(subject, predicate, value, otype, dtype, lang, graph)
-        while True:
-            nxt = self._peek()
-            if nxt and nxt[1] == ",":
-                self._next()
-                value, otype, dtype, lang = self._object(graph)
-                self._emit(subject, predicate, value, otype, dtype, lang, graph)
-                continue
-            if nxt and nxt[1] == ";":
-                self._next()
-                if self._peek() and self._peek()[1] not in (".", "]", "}"):
-                    self._predicate_object_list(subject, graph)
-                break
-            break
-        nxt = self._peek()
-        if nxt and nxt[1] == ".":
-            self._next()
-
-    def parse(self) -> list[tuple]:
-        while (t := self._peek()) is not None:
-            kind, tok = t
-            low = tok.lower()
-            if low in ("@prefix", "prefix"):
-                self._next()
-                _, name = self._next()
-                _, iri = self._next()
-                self.prefixes[name.rstrip(":")] = self._resolve_iri(iri)
-                if low == "@prefix":
-                    self._expect(".")
-                elif self._peek() and self._peek()[1] == ".":
-                    self._next()
-                continue
-            if low in ("@base", "base"):
-                self._next()
-                _, iri = self._next()
-                self.base = _unescape(iri[1:-1])
-                if low == "@base":
-                    self._expect(".")
-                elif self._peek() and self._peek()[1] == ".":
-                    self._next()
-                continue
-            if low == "graph":  # TriG: GRAPH <g> { ... }
-                self._next()
-                gkind, gtok = self._next()
-                g = self._resolve_iri(gtok) if gkind == "iri" else self._resolve_pname(gtok)
-                self._expect("{")
-                while self._peek() and self._peek()[1] != "}":
-                    self._triples(g, allow_graph_term=False)
-                self._expect("}")
-                continue
-            if tok == "{":  # TriG: anonymous default-graph block
-                self._next()
-                while self._peek() and self._peek()[1] != "}":
-                    self._triples(self.default_graph, allow_graph_term=False)
-                self._expect("}")
-                continue
-            self._triples(self.default_graph, allow_graph_term=True)
-        return self.quads
-
-
-def parse_rdf(text: str, default_graph: str, base: str | None = None) -> list[tuple]:
-    """Parse NTriples/NQuads/Turtle/TriG text into quad tuples
-    (QUAD_COLUMNS order). Format is auto-covered: the grammar accepts the
-    union of the four."""
-    return _Parser(text, default_graph, base).parse()
-
-
-# --- RDF/XML + TriX (the rest of the reference's Rio bundle,
-# build.sbt:66-76: rio-rdfxml / rio-trix) ------------------------------------
-
-_XML_NS = "http://www.w3.org/XML/1998/namespace"
-_TRIX_NS = "http://www.w3.org/2004/03/trix/trix-1/"
-
-
-def _xml_tag_iri(tag: str) -> str:
-    """ElementTree's '{ns}local' Clark notation → concatenated IRI."""
-    return tag[1:].replace("}", "", 1) if tag.startswith("{") else tag
-
-
-class _RdfXmlParser:
-    """RDF/XML subset parser (stdlib ElementTree — no external entity
-    resolution, so no XXE surface): rdf:RDF roots, rdf:Description and
-    typed node elements, rdf:about/ID/nodeID subjects, property elements
-    with rdf:resource/nodeID, nested node elements, parseType
-    Resource/Literal/Collection, rdf:li containers, rdf:datatype and
-    xml:lang literals, and property attributes. Covers what RDF4J's
-    rio-rdfxml emits; exotica (reification attributes rdf:ID on property
-    elements, rdf:aboutEach) are out of scope."""
-
-    def __init__(self, default_graph: str, base: str | None = None):
-        self.graph = default_graph
-        self.base = base or ""
-        self.quads: list[tuple] = []
-        self._n = 0
-
-    def _fresh(self) -> str:
-        self._n += 1
-        return f"_:rx{self._n}"
-
-    def _resolve(self, iri: str) -> str:
-        if self.base and not re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", iri):
-            # RFC 3986 reference resolution (rdf:about="alice" against
-            # base http://e.org/data.rdf is http://e.org/alice, NOT
-            # string concatenation); fragments and "" resolve to the
-            # base document as the spec requires. urljoin only resolves
-            # against hierarchical schemes it knows — for the rest (urn:,
-            # tag:, ...) it returns the reference unchanged, so fall back
-            # to concatenation rather than emit a relative, base-less IRI.
-            from urllib.parse import urljoin
-
-            resolved = urljoin(self.base, iri)
-            if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", resolved):
-                return resolved
-            return self.base + iri
-        return iri
-
-    def _emit(self, s, p, o, otype, dtype=None, lang=None) -> None:
-        self.quads.append(
-            (s, p, o, otype, dtype if otype == "literal" else None, lang, self.graph)
-        )
-
-    def parse(self, text: str) -> list[tuple]:
-        import xml.etree.ElementTree as ET
-
-        root = ET.fromstring(text)
-        root_lang = root.get(f"{{{_XML_NS}}}lang") or None
-        if _xml_tag_iri(root.tag) == RDF_NS + "RDF":
-            base = root.get(f"{{{_XML_NS}}}base")
-            if base:
-                self.base = base
-            for child in root:
-                self._node_element(child, root_lang)
-        else:
-            self._node_element(root, root_lang)
-        return self.quads
-
-    def _subject_of(self, el) -> str:
-        about = el.get(f"{{{RDF_NS}}}about")
-        if about is not None:
-            return self._resolve(about)
-        rid = el.get(f"{{{RDF_NS}}}ID")
-        if rid is not None:
-            return self._resolve("#" + rid)
-        nid = el.get(f"{{{RDF_NS}}}nodeID")
-        if nid is not None:
-            return "_:" + nid
-        return self._fresh()
-
-    @staticmethod
-    def _scoped_lang(el, lang: str | None) -> str | None:
-        # xml:lang inherits from ancestor elements (RDF/XML section 6);
-        # xml:lang="" cancels an inherited language
-        own = el.get(f"{{{_XML_NS}}}lang")
-        if own is not None:
-            return own or None
-        return lang
-
-    def _node_element(self, el, lang: str | None = None) -> str:
-        lang = self._scoped_lang(el, lang)
-        s = self._subject_of(el)
-        tag = _xml_tag_iri(el.tag)
-        if tag != RDF_NS + "Description":
-            self._emit(s, RDF_NS + "type", tag, "iri")
-        for attr, value in el.attrib.items():
-            iri = _xml_tag_iri(attr)
-            if iri.startswith(RDF_NS) or iri.startswith(_XML_NS):
-                continue  # syntax attributes, xml:lang/base
-            # property attribute shorthand: <ex:Thing ex:name="x"/>
-            self._emit(s, iri, value, "literal", XSD_STRING, lang)
-        self._property_elements(s, el, lang)
-        return s
-
-    def _property_elements(self, s: str, el, lang: str | None = None) -> None:
-        li_n = 0
-        for prop in el:
-            p = _xml_tag_iri(prop.tag)
-            if p == RDF_NS + "li":  # container membership sugar
-                li_n += 1
-                p = f"{RDF_NS}_{li_n}"
-            self._property_value(s, p, prop, lang)
-
-    def _property_value(self, s: str, p: str, el, lang: str | None = None) -> None:
-        import xml.etree.ElementTree as ET
-
-        res = el.get(f"{{{RDF_NS}}}resource")
-        if res is not None:
-            self._emit(s, p, self._resolve(res), "iri")
-            return
-        nid = el.get(f"{{{RDF_NS}}}nodeID")
-        if nid is not None:
-            self._emit(s, p, "_:" + nid, "bnode")
-            return
-        lang = self._scoped_lang(el, lang)
-        ptype = el.get(f"{{{RDF_NS}}}parseType")
-        children = list(el)
-        if ptype == "Resource":
-            b = self._fresh()
-            self._emit(s, p, b, "bnode")
-            self._property_elements(b, el, lang)
-            return
-        if ptype == "Literal":
-            xml_text = (el.text or "") + "".join(
-                ET.tostring(c, encoding="unicode") for c in children
-            )
-            self._emit(s, p, xml_text, "literal", RDF_NS + "XMLLiteral")
-            return
-        if ptype == "Collection":
-            node = self._fresh() if children else RDF_NS + "nil"
-            self._emit(s, p, node, "bnode" if children else "iri")
-            for i, child in enumerate(children):
-                o = self._node_element(child, lang)
-                self._emit(node, RDF_NS + "first", o, "bnode" if o.startswith("_:") else "iri")
-                last = i + 1 == len(children)
-                nxt = RDF_NS + "nil" if last else self._fresh()
-                self._emit(node, RDF_NS + "rest", nxt, "iri" if last else "bnode")
-                node = nxt
-            return
-        if children:  # nested node element
-            o = self._node_element(children[0], lang)
-            self._emit(s, p, o, "bnode" if o.startswith("_:") else "iri")
-            return
-        dtype = el.get(f"{{{RDF_NS}}}datatype")
-        self._emit(s, p, el.text or "", "literal", dtype or XSD_STRING,
-                   None if dtype else lang)
-
-
-def parse_rdfxml(text: str, default_graph: str, base: str | None = None) -> list[tuple]:
-    """Parse RDF/XML text into quad tuples (QUAD_COLUMNS order)."""
-    return _RdfXmlParser(default_graph, base).parse(text)
-
-
-def parse_trix(text: str, default_graph: str) -> list[tuple]:
-    """Parse TriX (W3C member submission XML quads format — RDF4J
-    rio-trix parity). Each <graph> holds an optional <uri> name followed
-    by <triple> elements of three terms: uri / id (bnode) /
-    plainLiteral [@xml:lang] / typedLiteral @datatype."""
-    import xml.etree.ElementTree as ET
-
-    root = ET.fromstring(text)
-    quads: list[tuple] = []
-
-    def term(el):
-        tag = _xml_tag_iri(el.tag).removeprefix(_TRIX_NS)
-        text_ = el.text or ""
-        if tag == "uri":
-            # pretty-printed TriX indents inside <uri>/<id>; RDF4J Rio
-            # collapses that ignorable whitespace — match it (literal
-            # element text stays verbatim, whitespace is significant there)
-            return (text_.strip(), "iri", None, None)
-        if tag == "id":
-            text_ = text_.strip()
-            value = text_ if text_.startswith("_:") else "_:" + text_
-            return (value, "bnode", None, None)
-        if tag == "plainLiteral":
-            lang = el.get(f"{{{_XML_NS}}}lang")
-            return (text_, "literal", XSD_STRING, lang)
-        if tag == "typedLiteral":
-            return (text_, "literal", el.get("datatype"), None)
-        raise RdfParseError(f"TriX: unexpected term element {tag!r}")
-
-    graphs = [el for el in root if _xml_tag_iri(el.tag).removeprefix(_TRIX_NS) == "graph"]
-    for graph_el in graphs:
-        children = list(graph_el)
-        graph = default_graph
-        first = (
-            _xml_tag_iri(children[0].tag).removeprefix(_TRIX_NS) if children else None
-        )
-        if first == "uri":
-            graph = (children[0].text or "").strip() or default_graph
-            children = children[1:]
-        elif first == "id":
-            # bnode-named graph (legal per the TriX DTD; RDF4J's TriXWriter
-            # emits this for bnode contexts)
-            name = (children[0].text or "").strip()
-            if name:
-                graph = name if name.startswith("_:") else "_:" + name
-            children = children[1:]
-        for triple in children:
-            terms = [term(t) for t in triple]
-            if len(terms) != 3:
-                raise RdfParseError("TriX: triple needs exactly 3 terms")
-            (s, _, _, _), (pred, pkind, _, _), (o, otype, dtype, lang) = terms
-            if pkind != "iri":
-                raise RdfParseError("TriX: predicate must be a uri")
-            quads.append(
-                (s, pred, o, otype, dtype if otype == "literal" else None, lang, graph)
-            )
-    return quads
-
-
-RDF_EXTENSIONS = (".nt", ".nq", ".ttl", ".trig", ".rdf", ".rdfs", ".owl", ".trix", ".rj")
-
-
-def rdf_file_to_quads(content: bytes, path: str) -> list[tuple]:
-    """Converter-registry entry: one RDF file → quads, format picked by
-    extension (.rdf/.rdfs/.owl → RDF/XML, .trix → TriX, .rj → RDF-JSON,
-    rest → the TriG superset). Triples without an explicit graph land in a per-document
-    graph minted from the path (the reference wraps each loaded file in a
-    document context)."""
-    from ..sources.common import doc_graph
-
-    text = content.decode("utf-8")
-    graph = doc_graph(path)
-    low = path.lower()
-    if low.endswith((".rdf", ".rdfs", ".owl")):
-        # Rio parity: relative IRIs (rdf:ID="me", rdf:about="#me") resolve
-        # against the DOCUMENT location when the file sets no xml:base —
-        # without a base, '#me' from two different files would collide on
-        # one subject and the store would hold non-absolute IRIs
-        # absolutize bare paths first: 'file://' + 'data/a.owl' would parse
-        # 'data' as a URI AUTHORITY, not a path segment — abspath guarantees
-        # the leading '/' and the file:///... form
-        base = (
-            path
-            if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", path)
-            else "file://" + os.path.abspath(path)
-        )
-        return parse_rdfxml(text, default_graph=graph, base=base)
-    if low.endswith(".trix"):
-        return parse_trix(text, default_graph=graph)
-    if low.endswith(".rj"):
-        return parse_rdfjson(text, default_graph=graph)
-    return parse_rdf(text, default_graph=graph)
-
-
-def load_rdf(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
-    """Distributed RDF load: binaryFile scan + per-file parse in mapInPandas."""
-    from ..sources.files import convert_to_quads, scan_files
-
-    files = scan_files(spark, path, glob=glob)
-    extra = {ext: rdf_file_to_quads for ext in RDF_EXTENSIONS}
-    return convert_to_quads(files, extra=extra)
-
-
-def load_nquads_lines(
-    spark: SparkSession, path: str, default_graph: str = "urn:graph:default"
-) -> DataFrame:
-    """Line-splittable bulk path for .nt/.nq: ``spark.read.text`` splits ONE
-    huge file across tasks (binaryFile cannot), each Arrow batch parses as a
-    single chunk. This is the 100 TB ingest shape for dumps like Wikidata
-    truthy — parallelism is bytes, not files."""
-
-    def parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            text = "\n".join(
-                line for line in pdf["value"] if line.strip() and not line.lstrip().startswith("#")
-            )
-            rows = parse_rdf(text, default_graph=default_graph)
-            yield pd.DataFrame(rows, columns=list(QUAD_SCHEMA.names))
-        yield pd.DataFrame(columns=list(QUAD_SCHEMA.names))
-
-    return spark.read.text(path).mapInPandas(parse_batch, QUAD_SCHEMA)
-
-
-# --- serialization (N-Triples/N-Quads: pure column expressions) ---------------
+from .model import XSD_STRING
 
 
 def _escape_col(c: Column) -> Column:
@@ -673,304 +60,3 @@ def serialize_ntriples(quads: DataFrame) -> DataFrame:
             F.lit("."),
         ).alias("line")
     )
-
-
-def serialize_nquads(quads: DataFrame) -> DataFrame:
-    return quads.select(
-        F.concat_ws(
-            " ",
-            _subject_col(),
-            F.concat(F.lit("<"), F.col("predicate"), F.lit(">")),
-            _term_col(),
-            F.concat(F.lit("<"), F.col("graph"), F.lit(">")),
-            F.lit("."),
-        ).alias("line")
-    )
-
-
-# --- Turtle / TriG serialization (per-graph documents) ------------------------
-
-GRAPH_TEXT_SCHEMA = StructType(
-    [StructField("graph", StringType(), False), StructField("text", StringType(), False)]
-)
-
-
-def _term_str(value: str, otype: str, dtype: str | None, lang: str | None) -> str:
-    if otype == "iri":
-        return f"<{value}>"
-    if otype == "bnode":
-        return value
-    body = value.replace("\\", "\\\\").replace('"', '\\"').replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")
-    if lang:
-        return f'"{body}"@{lang}'
-    if dtype and dtype != XSD_STRING:
-        return f'"{body}"^^<{dtype}>'
-    return f'"{body}"'
-
-
-def _graph_turtle(pdf: pd.DataFrame) -> str:
-    parts: list[str] = []
-    pdf = pdf.sort_values(["subject", "predicate", "object_value"], kind="mergesort")
-    for subject, g in pdf.groupby("subject", sort=True):
-        s = subject if subject.startswith("_:") else f"<{subject}>"
-        po = [
-            f"<{r.predicate}> "
-            + _term_str(r.object_value, r.object_type, r.object_datatype, r.object_lang)
-            for r in g.itertuples()
-        ]
-        parts.append(s + " " + " ;\n    ".join(po) + " .")
-    return "\n".join(parts) + ("\n" if parts else "")
-
-
-def serialize_turtle_per_graph(quads: DataFrame) -> DataFrame:
-    """Quads → (graph, text) with one Turtle document per named graph.
-    Per-graph grouping matches the pipeline's unit of replacement; graphs
-    serialize in parallel."""
-
-    def emit(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({"graph": [key[0]], "text": [_graph_turtle(pdf)]})
-
-    return quads.groupBy("graph").applyInPandas(emit, GRAPH_TEXT_SCHEMA)
-
-
-def serialize_trig(quads: DataFrame) -> str:
-    """Quads → a single TriG document string (driver-side; meant for the
-    small user graph file, not corpus export — use serialize_nquads +
-    write.text for bulk)."""
-    rows = serialize_turtle_per_graph(quads).orderBy("graph").collect()
-    blocks = [f"<{r['graph']}> {{\n{_indent(r['text'])}}}" for r in rows]
-    return "\n".join(blocks) + ("\n" if blocks else "")
-
-
-def _indent(text: str) -> str:
-    return "".join(f"    {line}\n" for line in text.splitlines())
-
-
-# --- FileSynchronization: user-graph TriG persistence -------------------------
-
-
-def save_graphs_trig(quads: DataFrame, path: str) -> None:
-    """Persist graphs to a TriG file (reference FileSynchronization.scala:
-    the user graph is saved to disk on every update and reloaded at
-    startup)."""
-    with open(path, "w", encoding="utf-8") as f:
-        f.write(serialize_trig(quads))
-
-
-def load_graphs_trig(spark: SparkSession, path: str, default_graph: str = "urn:graph:user") -> DataFrame:
-    with open(path, encoding="utf-8") as f:
-        text = f.read()
-    rows = parse_rdf(text, default_graph=default_graph)
-    return spark.createDataFrame(rows, QUAD_SCHEMA) if rows else spark.createDataFrame([], QUAD_SCHEMA)
-
-
-def load_ontology(
-    spark: SparkSession, path: str, graph: str = "urn:graph:ontology"
-) -> DataFrame:
-    """Load a Turtle ontology file into the given schema graph — the
-    startup path that feeds the RDFS/OWL forward chainers (reference
-    RepositoryFactory.scala:201-245 loads rdfs-ontology.ttl via Rio)."""
-    return load_graphs_trig(spark, path, default_graph=graph)
-
-
-# --- RDF/XML serialization (pure column expressions) --------------------------
-
-
-def _xml_escape_col(c: Column, attr: bool = False) -> Column:
-    c = F.regexp_replace(c, "&", "&amp;")
-    c = F.regexp_replace(c, "<", "&lt;")
-    c = F.regexp_replace(c, ">", "&gt;")
-    if attr:
-        c = F.regexp_replace(c, '"', "&quot;")
-    return c
-
-
-RDFXML_HEADER = (
-    '<?xml version="1.0" encoding="UTF-8"?>',
-    f'<rdf:RDF xmlns:rdf="{RDF_NS}">',
-)
-RDFXML_FOOTER = ("</rdf:RDF>",)
-
-
-def serialize_rdfxml(quads: DataFrame) -> DataFrame:
-    """Quads → (section, line) RDF/XML body lines, ordered by ``section``
-    (Rio rdfxml writer parity, build.sbt:66-76 — the write half of
-    parse_rdfxml).
-
-    One self-contained ``<rdf:Description>`` element PER TRIPLE: the
-    predicate's namespace is declared on the property element itself, so
-    every line is independent — a pure codegen'd string projection with no
-    per-subject grouping, concatenable in any order between the fixed
-    header (section 0) and footer (section 2). Verbose but valid, and the
-    shape that distributes: write with ``df.orderBy("section").write.text``
-    or prepend/append the header/footer driver-side.
-
-    Known format limitation (inherent to RDF/XML, not this writer): a
-    predicate IRI must split into namespace + XML-NCName local part at the
-    last non-NCName character ('/', '#', or ':' — the ':' split is what
-    makes urn: predicates like urn:personal:sameAs serializable, RDF4J
-    XMLUtil parity); predicates whose trailing run is not a valid NCName
-    (e.g. ending in ':', or digit-leading) produce invalid XML, as in
-    every RDF/XML writer.
-    """
-    spark = quads.sparkSession
-    local = F.regexp_extract(F.col("predicate"), "([^/#:]+)$", 1)
-    ns = F.expr("substring(predicate, 1, length(predicate) - length(regexp_extract(predicate, '([^/#:]+)$', 1)))")
-    subj_attr = F.when(
-        F.col("subject").startswith("_:"),
-        F.concat(F.lit('rdf:nodeID="'), _xml_escape_col(F.expr("substring(subject, 3)"), True), F.lit('"')),
-    ).otherwise(
-        F.concat(F.lit('rdf:about="'), _xml_escape_col(F.col("subject"), True), F.lit('"'))
-    )
-    open_el = F.concat(F.lit("<p:"), local, F.lit(' xmlns:p="'), _xml_escape_col(ns, True), F.lit('"'))
-    obj_iri = F.concat(
-        open_el, F.lit(' rdf:resource="'), _xml_escape_col(F.col("object_value"), True), F.lit('"/>')
-    )
-    obj_bnode = F.concat(
-        open_el, F.lit(' rdf:nodeID="'),
-        _xml_escape_col(F.expr("substring(object_value, 3)"), True), F.lit('"/>'),
-    )
-    lit_attrs = (
-        F.when(
-            F.col("object_lang").isNotNull(),
-            F.concat(F.lit(' xml:lang="'), _xml_escape_col(F.col("object_lang"), True), F.lit('"')),
-        )
-        .when(
-            F.col("object_datatype").isNotNull() & (F.col("object_datatype") != XSD_STRING),
-            F.concat(F.lit(' rdf:datatype="'), _xml_escape_col(F.col("object_datatype"), True), F.lit('"')),
-        )
-        .otherwise(F.lit(""))
-    )
-    obj_lit = F.concat(
-        open_el, lit_attrs, F.lit(">"),
-        _xml_escape_col(F.col("object_value")),
-        F.lit("</p:"), local, F.lit(">"),
-    )
-    prop = (
-        F.when(F.col("object_type") == "iri", obj_iri)
-        .when(F.col("object_type") == "bnode", obj_bnode)
-        .otherwise(obj_lit)
-    )
-    body = quads.select(
-        F.lit(1).alias("section"),
-        F.concat(
-            F.lit("<rdf:Description "), subj_attr, F.lit(">"), prop, F.lit("</rdf:Description>")
-        ).alias("line"),
-    )
-    header = spark.createDataFrame(
-        [(0, ln) for ln in RDFXML_HEADER] + [(2, ln) for ln in RDFXML_FOOTER],
-        "section int, line string",
-    )
-    return body.unionByName(header)
-
-
-def rdfxml_string(quads: DataFrame) -> str:
-    """Whole-document RDF/XML text (small-graph debug helper — collects;
-    the distributed path is serialize_rdfxml + write.text)."""
-    rows = serialize_rdfxml(quads).orderBy("section", "line").collect()
-    return "\n".join(r.line for r in rows) + "\n"
-
-
-# --- RDF-JSON (W3C Note; RDF4J rio-rdfjson parity, build.sbt:69) --------------
-
-
-def parse_rdfjson(text: str, default_graph: str) -> list[tuple]:
-    """Parse RDF-JSON ('RDF 1.1 JSON Alternate Serialization' W3C Note) —
-    the last Rio format in the reference's bundle (build.sbt:69,
-    rdf4j-rio-rdfjson). Shape: {subject: {predicate: [{value, type,
-    lang?, datatype?}, ...]}}; subjects starting '_:' are bnodes; object
-    type is 'uri' | 'literal' | 'bnode'. The format is triple-scoped, so
-    every statement lands in ``default_graph`` (RDF4J's parser likewise
-    attributes all statements to the supplied context)."""
-    import json
-
-    try:
-        data = json.loads(text)
-    except json.JSONDecodeError as exc:
-        raise RdfParseError(f"RDF-JSON: {exc}") from exc
-    if not isinstance(data, dict):
-        raise RdfParseError("RDF-JSON: top level must be an object")
-    quads: list[tuple] = []
-    for subject, preds in data.items():
-        if not isinstance(preds, dict):
-            raise RdfParseError(f"RDF-JSON: subject {subject!r} must map to an object")
-        for predicate, objs in preds.items():
-            if not isinstance(objs, list):
-                raise RdfParseError(
-                    f"RDF-JSON: predicate {predicate!r} must map to an array"
-                )
-            for obj in objs:
-                if not isinstance(obj, dict):
-                    raise RdfParseError(f"RDF-JSON: object {obj!r} must be an object")
-                kind = obj.get("type")
-                value = obj.get("value")
-                if not isinstance(value, str) or kind not in ("uri", "literal", "bnode"):
-                    raise RdfParseError(f"RDF-JSON: bad object entry {obj!r}")
-                if kind == "uri":
-                    quads.append(
-                        (subject, predicate, value, "iri", None, None, default_graph)
-                    )
-                elif kind == "bnode":
-                    v = value if value.startswith("_:") else "_:" + value
-                    quads.append(
-                        (subject, predicate, v, "bnode", None, None, default_graph)
-                    )
-                else:
-                    lang = obj.get("lang")
-                    dtype = obj.get("datatype")
-                    # lang literals store XSD_STRING + lang, matching the
-                    # TriX/Turtle parsers' representation
-                    quads.append(
-                        (
-                            subject,
-                            predicate,
-                            value,
-                            "literal",
-                            XSD_STRING if (lang or not dtype) else dtype,
-                            lang,
-                            default_graph,
-                        )
-                    )
-    return quads
-
-
-def _graph_rdfjson(pdf: pd.DataFrame) -> str:
-    import json
-
-    pdf = pdf.sort_values(
-        ["subject", "predicate", "object_type", "object_value"], kind="mergesort"
-    )
-    out: dict[str, dict[str, list[dict]]] = {}
-    for r in pdf.itertuples():
-        o: dict[str, str] = {
-            "value": r.object_value,
-            "type": "uri" if r.object_type == "iri" else r.object_type,
-        }
-        if r.object_type == "literal":
-            if r.object_lang:
-                o["lang"] = r.object_lang
-            elif r.object_datatype and r.object_datatype != XSD_STRING:
-                o["datatype"] = r.object_datatype
-        out.setdefault(r.subject, {}).setdefault(r.predicate, []).append(o)
-    return json.dumps(out, ensure_ascii=False, indent=2)
-
-
-def serialize_rdfjson(quads: DataFrame) -> DataFrame:
-    """Quads → (graph, text) with one RDF-JSON document per named graph
-    (the pipeline's unit of replacement — same contract as
-    serialize_turtle_per_graph); graphs serialize in parallel. Keys are
-    emitted in sorted (subject, predicate) order so the document is
-    deterministic for diffing and hashing."""
-
-    def emit(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({"graph": [key[0]], "text": [_graph_rdfjson(pdf)]})
-
-    return quads.groupBy("graph").applyInPandas(emit, GRAPH_TEXT_SCHEMA)
-
-
-def rdfjson_string(quads: DataFrame) -> str:
-    """Whole-store single RDF-JSON document (collects — the graph-scoped
-    distributed path is serialize_rdfjson). RDF-JSON cannot express
-    contexts, so graphs merge, exactly as RDF4J's RDFJSONWriter flattens
-    them."""
-    return _graph_rdfjson(quads.toPandas()) + "\n"

@@ -65,13 +65,6 @@ def is_negation(predicate: str) -> bool:
     return predicate.startswith(NEG_PREFIX) or predicate in _SPECIAL_NEGATION
 
 
-def unnegate(predicate: str) -> str:
-    """Inverse of ``negate`` for predicates ``is_negation`` accepts."""
-    if predicate in _SPECIAL_NEGATION:
-        return _SPECIAL_NEGATION[predicate]
-    return predicate[len(NEG_PREFIX):]
-
-
 def local_relation(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
     """Driver-side rows as a LocalRelation, built through Arrow: scans run
     in the JVM and the optimizer knows the relation is tiny. A DataFrame

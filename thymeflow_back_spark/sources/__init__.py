@@ -1,13 +1,11 @@
-"""Sources: file-system scan + format converters producing quad DataFrames.
+"""Sources: the synchronizers and the per-format converters they feed.
 
-The reference's synchronizer/converter registry (SURVEY.md §2.1) maps to:
-``scan_files`` (binaryFile scan + extension dispatch, zip expansion) feeding
-per-format converters (email/vCard/iCal/location-history), each a pure
-``bytes → quad rows`` function executed inside mapInPandas. Every converted
-artifact becomes one named graph (document semantics), so re-ingestion is an
-idempotent graph replacement via StatementStore.add_document.
+The reference's synchronizer/converter registry (SURVEY.md §2.1) maps to
+the IMAP/CardDAV/CalDAV/Facebook synchronizers (``synchronizers.py``, with the
+fetch-once snapshot diff of ``sync_state.py``) and the file scan
+(``files.py``), each feeding per-format converters (email/vCard/iCal/
+location-history) that are pure ``bytes → quad rows`` functions. Every
+converted artifact becomes one named graph (document semantics), so
+re-ingestion is an idempotent graph replacement in the store. Each caller
+imports the module it uses.
 """
-
-from .files import scan_files, convert_to_quads
-
-__all__ = ["scan_files", "convert_to_quads"]

@@ -4,9 +4,6 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from ..rdf.model import XSD_STRING
 
 # Fixed engine namespace for name-based UUIDs (deterministic re-ingestion →
@@ -16,33 +13,6 @@ _NS = uuid.uuid5(uuid.NAMESPACE_URL, "urn:thymeflow-back-spark")
 
 def mint(kind: str, content: str) -> str:
     return f"urn:uuid:{uuid.uuid5(_NS, f'{kind}:{content}')}"
-
-
-def mint_col(kind: str, content: Column) -> Column:
-    """Column-expression twin of ``mint`` — bit-identical RFC 4122 v5 UUIDs
-    (sha1 over namespace bytes + name, version nibble forced to 5, variant
-    high bits to 10), so the distributed and per-file ingestion paths mint
-    the SAME graph/subject IRIs and per-document replace stays coherent."""
-    h = F.sha1(
-        F.concat(
-            F.lit(bytearray(_NS.bytes)),
-            F.encode(F.concat(F.lit(f"{kind}:"), content), "UTF-8"),
-        )
-    )
-    return F.concat(
-        F.lit("urn:uuid:"),
-        F.substring(h, 1, 8),
-        F.lit("-"),
-        F.substring(h, 9, 4),
-        F.lit("-5"),
-        F.substring(h, 14, 3),
-        F.lit("-"),
-        # variant nibble: (n & 0b0011) | 0b1000 as a hex-digit translation
-        F.translate(F.substring(h, 17, 1), "0123456789abcdef", "89ab89ab89ab89ab"),
-        F.substring(h, 18, 3),
-        F.lit("-"),
-        F.substring(h, 21, 12),
-    )
 
 
 def doc_graph(path: str) -> str:

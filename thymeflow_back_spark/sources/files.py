@@ -3,8 +3,13 @@
 Spark shape of the reference FileSynchronizer (SURVEY.md §2.1): the
 directory walk is `spark.read.format("binaryFile")` (distributed, pruned by
 pathGlobFilter), zip members are expanded inside mapInPandas, and each file
-(or zip member) is routed to a converter by extension. Output is the quads
-DataFrame; one graph per artifact.
+(or zip member) is routed to a converter by extension. The extensions are
+the reference's: eml, ics, vcf, zip and json (location history); like the
+reference, RDF files are not dispatched. Output is the quads DataFrame; one
+graph per artifact.
+
+No entry point scans files yet; the live PKB's file source (ROADMAP item 1)
+is the caller this waits for.
 """
 
 from __future__ import annotations
@@ -24,20 +29,17 @@ Converter = Callable[[bytes, str], list[tuple]]
 
 
 def _registry() -> dict[str, Converter]:
-    from ..rdf.io import RDF_EXTENSIONS, rdf_file_to_quads
     from .eml import eml_to_quads
     from .ical import ical_to_quads
     from .location_history import location_history_to_quads
     from .vcard import vcard_to_quads
 
-    registry: dict[str, Converter] = {
+    return {
         ".eml": eml_to_quads,
         ".vcf": vcard_to_quads,
         ".ics": ical_to_quads,
         ".json": location_history_to_quads,
     }
-    registry.update({ext: rdf_file_to_quads for ext in RDF_EXTENSIONS})
-    return registry
 
 
 def scan_files(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:

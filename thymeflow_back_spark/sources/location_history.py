@@ -5,9 +5,8 @@ Capability parity with the reference's GoogleLocationHistoryConverter
 velocity/heading/accuracy, grouped into ONE DOCUMENT GRAPH PER DAY so a
 day's track replaces atomically on re-sync.
 
-Two paths: ``location_history_to_quads`` (bytes → rows, for the file
-dispatcher) and ``location_history_df`` (distributed spark.read.json for
-large archives — the scale path).
+``location_history_to_quads`` turns one archive's bytes into quad rows
+for the file dispatcher (sources/files.py).
 """
 
 from __future__ import annotations
@@ -15,14 +14,9 @@ from __future__ import annotations
 import json
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
 from ..rdf import vocab
-from ..rdf.model import QUAD_SCHEMA, XSD_DATETIME, XSD_DOUBLE
-from .common import mint, mint_col, q
-
-_DT = "http://www.w3.org/2001/XMLSchema#double"
+from ..rdf.model import XSD_DATETIME, XSD_DOUBLE
+from .common import mint, q
 
 
 def _point_quads(rec: dict, path: str) -> list[tuple]:
@@ -64,45 +58,3 @@ def location_history_to_quads(content: bytes, path: str) -> list[tuple]:
     for rec in locations:
         rows.extend(_point_quads(rec, path))
     return rows
-
-
-def location_history_df(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed variant: explode locations[] with spark.read.json, build
-    quads columnar-side (no Python per record)."""
-    raw = spark.read.option("multiLine", "true").json(path)
-    pts = raw.select(F.explode("locations").alias("r")).select(
-        (F.col("r.timestampMs").cast("bigint")).alias("ts_ms"),
-        (F.col("r.latitudeE7").cast("double") / 1e7).alias("lat"),
-        (F.col("r.longitudeE7").cast("double") / 1e7).alias("lon"),
-        F.col("r.accuracy").cast("double").alias("accuracy"),
-    )
-    dt = F.timestamp_millis(F.col("ts_ms"))
-    day = F.date_format(dt, "yyyy-MM-dd")
-    # identical IRIs to the per-file path (_point_quads): same mint inputs →
-    # same graphs, so the two ingestion paths agree and two archives that
-    # share a day don't collide into one graph
-    p_iri = mint_col("location", F.concat(F.lit(f"{path}:"), F.col("ts_ms")))
-    g_iri = mint_col("location-day", F.concat(F.lit(f"{path}:"), day))
-
-    def quad(pred: str, obj, otype: str, dtype: str | None) -> DataFrame:
-        return pts.select(
-            p_iri.alias("subject"),
-            F.lit(pred).alias("predicate"),
-            obj.cast("string").alias("object_value"),
-            F.lit(otype).alias("object_type"),
-            (F.lit(dtype) if dtype else F.lit(None)).cast("string").alias("object_datatype"),
-            F.lit(None).cast("string").alias("object_lang"),
-            g_iri.alias("graph"),
-        )
-
-    parts = [
-        quad(vocab.RDF_TYPE, F.lit(vocab.LOCATION_POINT), "iri", None),
-        quad(vocab.TIME, F.date_format(dt, "yyyy-MM-dd'T'HH:mm:ss.SSSXXX"), "literal", XSD_DATETIME),
-        quad(vocab.LATITUDE, F.col("lat"), "literal", XSD_DOUBLE),
-        quad(vocab.LONGITUDE, F.col("lon"), "literal", XSD_DOUBLE),
-        quad(vocab.UNCERTAINTY, F.col("accuracy"), "literal", XSD_DOUBLE),
-    ]
-    out = parts[0]
-    for part in parts[1:]:
-        out = out.unionByName(part)
-    return out.filter(F.col("object_value").isNotNull()).select(*QUAD_SCHEMA.names)

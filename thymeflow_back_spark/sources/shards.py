@@ -17,8 +17,7 @@ Everything is a pure function of the (id, weight) key set: re-running the
 writer on any cluster layout produces byte-identical bin membership,
 sequence numbers, and file-per-bin structure (asserted in
 tests/test_shards.py). The write-once ``ensure`` idiom matches the other
-derived layouts (sources/bucketed.py, sources/timeparted.py, operators/
-ivf.py's cell index).
+derived layouts (sources/timeparted.py, operators/ivf.py's cell index).
 
 Scale note: one file per bin is the contract a k-worker training job wants
 (worker i streams ``bin=i``); at 100 TB per-file size is corpus/k, so k is

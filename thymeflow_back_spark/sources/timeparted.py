@@ -8,9 +8,8 @@ verified on q_regional_revenue's orders scan, round 6), so no row-group
 min/max skipping happens: at 100 TB a two-year predicate on the time
 dimension still READS every row group, filtering rows after decode.
 
-The engine-level answer is the same write-once idiom as the bucketed join
-tables (sources/bucketed.py) and the IVF cell index (operators/ivf.py's
-``ivf_write_index``): pay one full scan to materialize a DERIVED layout
+The engine-level answer is the same write-once idiom as the IVF cell index
+(operators/ivf.py's ``ivf_write_index``): pay one full scan to materialize a DERIVED layout
 partitioned by a calendar bucket of the timestamp, after which every
 time-ranged query prunes whole partition DIRECTORIES at planning time —
 ``.explain`` shows the range on the partition column under
