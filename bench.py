@@ -166,8 +166,7 @@ def main() -> None:
 
     set_shingle_cache(True)
     # same opt-in for the PQ index: codebooks + code table are build-once
-    # artifacts (ivf_write_index materializes the IVF equivalent to
-    # parquet) — re-training them per rep times index construction, not
+    # artifacts — re-training them per rep times index construction, not
     # search
     from thymeflow_back_spark.operators.pq import set_pq_cache
 

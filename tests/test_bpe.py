@@ -274,27 +274,6 @@ def test_model_cache_opt_in(spark):
         B.set_bpe_model_cache(False)
 
 
-def test_save_load_merges_roundtrip(tmp_path):
-    from thymeflow_back_spark.operators.bpe import (
-        bpe_vocab,
-        bytes_to_unicode,
-        load_merges,
-        save_merges,
-    )
-
-    merges = [("Ġ", "l"), ("Ġl", "ow"), ("e", "r")]
-    p = str(tmp_path / "model.json")
-    save_merges(merges, p, mode="byte")
-    got, mode = load_merges(p)
-    assert got == merges and mode == "byte"
-    vocab = bpe_vocab(merges, mode="byte")
-    assert len(vocab) == 256 + 3
-    assert vocab[:256] == list(bytes_to_unicode().values())
-    assert vocab[-3:] == ["Ġl", "Ġlow", "er"]
-    # no stranded temp files from the atomic publish
-    assert [f for f in __import__("os").listdir(tmp_path)] == ["model.json"]
-
-
 def test_bpe_encode_merge_shipping_modes_identical(spark):
     """The closure-literal and broadcast-variable merge shipping must be
     bit-identical (the coreset.py centers_mode contract applied to the

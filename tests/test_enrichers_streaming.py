@@ -10,7 +10,8 @@ pytestmark = pytest.mark.slow
 
 from pyspark.sql import functions as F
 
-from thymeflow_back_spark.enrichers import ifp_enricher, rdfs_enricher
+from thymeflow_back_spark.enrichers.ifp import ifp_enricher
+from thymeflow_back_spark.enrichers.rdfs import rdfs_enricher
 from thymeflow_back_spark.enrichers.ifp import OUTPUT_GRAPH as IFP_GRAPH
 from thymeflow_back_spark.enrichers.pipeline import ingest
 from thymeflow_back_spark.enrichers.rdfs import SUB_CLASS_OF, SUB_PROPERTY_OF, DOMAIN

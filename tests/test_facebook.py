@@ -11,7 +11,6 @@ from thymeflow_back_spark.sources.facebook import (
     _convert_birthday,
     facebook_to_quads,
 )
-from thymeflow_back_spark.sources.files import convert_to_quads
 
 EXPORT = {
     "id": "100001",
@@ -93,12 +92,3 @@ def test_birthday_fallbacks():
     assert _convert_birthday("1815") == ("1815", "http://www.w3.org/2001/XMLSchema#gYear")
     assert _convert_birthday("12/10") == ("--12-10", "http://www.w3.org/2001/XMLSchema#gMonthDay")
     assert _convert_birthday("not a date") is None
-
-
-def test_distributed_scan_path(spark, tmp_path):
-    (tmp_path / "me.fbjson").write_text(json.dumps(EXPORT))
-    files = spark.read.format("binaryFile").load(str(tmp_path))
-    quads = convert_to_quads(files, extra={".fbjson": facebook_to_quads})
-    rows = quads.collect()
-    assert len(rows) == len(facebook_to_quads(json.dumps(EXPORT).encode(), "any"))
-    assert len({r.graph for r in rows}) == 1

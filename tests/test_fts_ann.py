@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from thymeflow_back_spark.algorithms.stemmer import porter_stem
 from thymeflow_back_spark.operators.ann import srp_candidate_pairs, srp_near_dup
-from thymeflow_back_spark.operators.fts import build_index, match_query, partial_match
+from thymeflow_back_spark.operators.fts import build_index, match_query
 
 
 def test_porter_stem_basics():
@@ -36,20 +36,6 @@ def test_fts_reference_golden(spark):
     assert got["Doe"] == {"e1", "e2"}
     assert got["Alice"] == {"e3", "e4"}
     assert got["Wonders"] == {"e3"}
-
-
-def test_partial_match_ngrams(spark):
-    corpus = spark.createDataFrame(
-        [("e1", "cafe de flore"), ("e2", "flore gardens")], "entity_id string, text string"
-    )
-    texts = spark.createDataFrame(
-        [("t1", "meet at Cafe de Flore at noon")], "text_id string, text string"
-    )
-    index = build_index(corpus, "entity_id", "text")
-    got = {(r.ngram, r.entity_id) for r in partial_match(index, texts, "text_id", "text").collect()}
-    assert ("cafe de flore", "e1") in got
-    assert ("flore", "e2") in got
-    assert not any(ng == "at noon" for ng, _ in got)
 
 
 def test_srp_ann_recall_vs_bruteforce(spark):
@@ -148,39 +134,13 @@ def test_semantic_dedup_prunes_within_cluster(spark):
             assert out[r["dup_of"]]["keep"] == 1
 
 
-def test_partial_match_repeated_ngram(spark):
-    """An n-gram occurring MORE THAN ONCE in a text must still match: the
-    occurrence count used to leak into the matched-words == n gate and
-    silently drop every repeated n-gram."""
-    corpus = spark.createDataFrame(
-        [("e1", "and"), ("e2", "cafe flore")], "entity_id string, text string"
-    )
-    texts = spark.createDataFrame(
-        [
-            ("t1", "stop and go and stop"),
-            ("t2", "cafe flore cafe flore"),
-        ],
-        "text_id string, text string",
-    )
-    index = build_index(corpus, "entity_id", "text")
-    got = {
-        (r.text_id, r.ngram, r.entity_id)
-        for r in partial_match(index, texts, "text_id", "text").collect()
-    }
-    assert ("t1", "and", "e1") in got
-    assert ("t2", "cafe flore", "e2") in got
-
-
 def test_semantic_dedup_chain_resolves_to_keeper(spark):
     """Chain 0~1, 1~2 with 0!~2: both 1 and 2 are pruned (order-free
-    chain-pruning), 2's raw dup_of is the pruned 1, and
-    resolve_representatives redirects it to the root keeper 0."""
+    chain-pruning), 1 points at the keeper 0 and 2's dup_of is the pruned
+    1."""
     import math
 
-    from thymeflow_back_spark.operators.semdedup import (
-        resolve_representatives,
-        semantic_dedup,
-    )
+    from thymeflow_back_spark.operators.semdedup import semantic_dedup
 
     def unit(theta):
         return [math.cos(theta), math.sin(theta), 0.0, 0.0]
@@ -198,19 +158,6 @@ def test_semantic_dedup_chain_resolves_to_keeper(spark):
     assert raw[0]["keep"] == 1 and raw[0]["dup_of"] == -1
     assert raw[1]["keep"] == 0 and raw[1]["dup_of"] == 0
     assert raw[2]["keep"] == 0 and raw[2]["dup_of"] == 1  # pruned target
-
-    resolved = {
-        r["vec_id"]: r
-        for r in resolve_representatives(
-            semantic_dedup(
-                df, "vec_id", "embedding", threshold=0.9, n_cells=1, refine_iters=0
-            )
-        ).collect()
-    }
-    assert resolved[1]["dup_of"] == 0
-    assert resolved[2]["dup_of"] == 0  # chain collapsed to the keeper
-    assert resolved[0]["dup_of"] == -1
-    assert {v["keep"] for v in resolved.values()} == {0, 1}
 
 
 def test_jl_rerank_recall_dominates_jl_only(spark):

@@ -57,60 +57,3 @@ def test_ivf_deterministic(spark):
     r2 = refine_centroids(emb, "vec_id", "embedding", c2, iterations=1)
     assert r1 == r2
     assert r1 != c1  # refinement moved the means
-
-
-def test_ivf_partitioned_index_prunes_and_matches(spark, tmp_path):
-    """The materialized cell-partitioned index returns the same top-k as the
-    in-memory path, and the probe's scan carries a partition filter on cell
-    (only the probed partitions are read — the 100 TB layout)."""
-    import random
-
-    from thymeflow_back_spark.operators.ivf import (
-        ivf_probe_index,
-        ivf_topk,
-        ivf_write_index,
-    )
-
-    rnd = random.Random(3)
-    corpus = spark.createDataFrame(
-        [(i, [rnd.gauss(0, 1) for _ in range(8)]) for i in range(300)],
-        "vec_id long, embedding array<double>",
-    )
-    queries = corpus.limit(5)
-    path = str(tmp_path / "ivf_index")
-    ivf_write_index(corpus, "vec_id", "embedding", path, n_cells=8, refine_iters=1)
-
-    got = ivf_probe_index(
-        spark, path, queries, "vec_id", "embedding", k=3, n_probe=2
-    )
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
-
-    expect = ivf_topk(
-        corpus, queries, "vec_id", "embedding", k=3, n_cells=8, n_probe=2,
-        refine_iters=1,
-    )
-    a = {(r.q_id, r.c_id, r.rank) for r in got.collect()}
-    b = {(r.q_id, r.c_id, r.rank) for r in expect.collect()}
-    assert a == b and len(a) == 15
-
-
-def test_ivf_sq8_index_layout_and_recall(spark, tmp_path):
-    from thymeflow_back_spark.operators.ivf import ivf_probe_index, ivf_write_index
-
-    emb = load(spark, SF, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    raw_path = str(tmp_path / "ivf_raw")
-    sq_path = str(tmp_path / "ivf_sq8")
-    ivf_write_index(emb, "vec_id", "embedding", raw_path, n_cells=8)
-    ivf_write_index(emb, "vec_id", "embedding", sq_path, n_cells=8, sq8=True)
-
-    stored = spark.read.parquet(sq_path)
-    assert "c_vec" not in stored.columns  # no float vectors on disk
-    assert dict(stored.dtypes)["codes"] == "array<tinyint>"  # 1 byte/dim
-
-    raw = _pairs(ivf_probe_index(spark, raw_path, queries, "vec_id", "embedding", K))
-    quant = _pairs(ivf_probe_index(spark, sq_path, queries, "vec_id", "embedding", K))
-    assert len(quant) == len(raw)
-    overlap = len(raw & quant) / len(raw)
-    assert overlap >= 0.8, f"SQ8 recall collapsed: {overlap}"

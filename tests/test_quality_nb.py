@@ -111,40 +111,6 @@ def test_partitioning_invariance(spark):
     assert outs[0] == outs[1]
 
 
-def test_model_artifact_round_trip(spark, tmp_path):
-    """save -> load -> classify must be bit-identical to serving from the
-    live training DataFrames (quantized-integer weights make the artifact
-    platform-exact)."""
-    from thymeflow_back_spark.operators.quality_nb import (
-        load_nb_model,
-        save_nb_model,
-    )
-
-    df, weights, prior = _model(spark)
-    path = str(tmp_path / "qnb.json")
-    save_nb_model(weights, prior, path, B)
-    w2, p2, b2 = load_nb_model(spark, path)
-    assert b2 == B
-    live = sorted(
-        (r.doc_id, r.score_q, r.pred)
-        for r in nb_classify(df, "doc_id", "text", weights, prior, B).collect()
-    )
-    loaded = sorted(
-        (r.doc_id, r.score_q, r.pred)
-        for r in nb_classify(df, "doc_id", "text", w2, p2, b2).collect()
-    )
-    assert live == loaded
-    # refuse a foreign artifact
-    import json
-    import pytest as _pytest
-
-    bad = str(tmp_path / "bad.json")
-    with open(bad, "w") as f:
-        json.dump({"format": "other"}, f)
-    with _pytest.raises(ValueError, match="not a qnb-model"):
-        load_nb_model(spark, bad)
-
-
 def test_bernoulli_weights_match_closed_form(spark):
     """delta_q / c_q / prior_q must equal the hand-computed Bernoulli NB
     terms (Laplace +1/+2, absent side folded into one constant)."""

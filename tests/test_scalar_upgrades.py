@@ -1,13 +1,8 @@
 """Scalar-function parity upgrades: E.164 phone normalization + classes,
-postal-address place hierarchy, Vincenty ellipsoid distance, and the vCard
-diff write-back inverse."""
+postal-address place hierarchy, and the vCard diff write-back inverse."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from thymeflow_back_spark.functions.geo import haversine_m, vincenty_m
 from thymeflow_back_spark.functions.phone import (
     display_phone,
     normalize_phone,
@@ -94,79 +89,3 @@ def test_vcard_apply_diff_roundtrip():
     assert (card, vocab.EMAIL, "mailto:grace@navy.mil") in spo
     assert (card, vocab.NAME, "Amazing Grace") in spo
     assert not any(o == "tel:+16075550100" for _, _, o in spo)
-
-
-def test_vincenty_against_known_distances(spark):
-    # Paris (48.8566, 2.3522) ↔ NYC (40.7128, -74.0060): WGS84 geodesic
-    # 5 852 935.29 m (converged Vincenty; the sphere gives 5 837 240)
-    df = spark.createDataFrame(
-        [
-            (48.8566, 2.3522, 40.7128, -74.0060, 5852935.29),
-            (0.0, 0.0, 0.0, 1.0, 111319.49),  # 1° of longitude at the equator
-            (50.0, 10.0, 50.0, 10.0, 0.0),  # identical points
-        ],
-        "lat1 double, lon1 double, lat2 double, lon2 double, expected double",
-    )
-    rows = df.select(
-        vincenty_m(F.col("lat1"), F.col("lon1"), F.col("lat2"), F.col("lon2")).alias("v"),
-        haversine_m(F.col("lat1"), F.col("lon1"), F.col("lat2"), F.col("lon2")).alias("h"),
-        "expected",
-    ).collect()
-    for r in rows:
-        assert r.v == pytest.approx(r.expected, rel=2e-4), r
-    # ellipsoid vs sphere differ by up to ~0.5%
-    assert rows[0].v != pytest.approx(rows[0].h, rel=1e-4)
-
-
-def test_karney_geodesic(spark):
-    """Karney-formulation WGS84 inverse (algorithms/geodesic.py; reference
-    KarneyGeodeticCalculator wraps GeographicLib): published-constant
-    goldens, Vincenty agreement where Vincenty converges, and robustness
-    in the nearly-antipodal zone where Vincenty's iteration fails."""
-    import math
-    import random
-
-    from thymeflow_back_spark.algorithms.geodesic import karney_inverse_m
-    from thymeflow_back_spark.functions.geo import karney_m
-
-    # published WGS84 constants: quarter meridian and 90° equatorial arc
-    assert karney_inverse_m(0, 0, 90, 0) == pytest.approx(10001965.7293, abs=1e-3)
-    assert karney_inverse_m(0, 0, 0, 90) == pytest.approx(
-        6378137.0 * math.pi / 2, abs=1e-6
-    )
-    # Paris ↔ NYC converged-Vincenty golden (same as the vincenty test)
-    assert karney_inverse_m(48.8566, 2.3522, 40.7128, -74.0060) == pytest.approx(
-        5852935.29, abs=2.0
-    )
-    assert karney_inverse_m(50.0, 10.0, 50.0, 10.0) == 0.0
-
-    # mm-level agreement with Vincenty on random non-antipodal pairs
-    rnd = random.Random(42)
-    pairs = [
-        (
-            rnd.uniform(-80, 80), rnd.uniform(-179, 179),
-            rnd.uniform(-80, 80), rnd.uniform(-179, 179),
-        )
-        for _ in range(12)
-    ]
-    pairs = [p for p in pairs if abs(abs(p[1] - p[3]) - 180) > 20][:8]
-    df = spark.createDataFrame(
-        pairs, "lat1 double, lon1 double, lat2 double, lon2 double"
-    )
-    rows = df.select(
-        karney_m(F.col("lat1"), F.col("lon1"), F.col("lat2"), F.col("lon2")).alias("k"),
-        vincenty_m(F.col("lat1"), F.col("lon1"), F.col("lat2"), F.col("lon2")).alias("v"),
-    ).collect()
-    for r in rows:
-        assert r.k == pytest.approx(r.v, abs=5e-3), r
-
-    # nearly antipodal: a sane geodesic distance, no divergence
-    d = karney_inverse_m(0.1, 0.0, -0.1, 179.8)
-    assert 19_900_000 < d < 20_100_000
-    # symmetry under point swap and longitude sign
-    assert karney_inverse_m(10, 20, 30, 40) == pytest.approx(
-        karney_inverse_m(30, 40, 10, 20), abs=1e-9
-    )
-    assert karney_inverse_m(10, -20, 30, -40) == pytest.approx(
-        karney_inverse_m(10, 20, 30, 40), abs=1e-9
-    )

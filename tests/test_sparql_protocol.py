@@ -67,6 +67,24 @@ def test_malformed_post_is_a_400(served, length, body, reason):
     assert reason in payload
 
 
+@pytest.mark.parametrize(
+    "accept, ctype",
+    [
+        ("application/sparql-results+json, application/sparql-results+xml",
+         "application/sparql-results+json"),
+        ("application/sparql-results+xml", "application/sparql-results+xml"),
+        ("text/csv, application/sparql-results+xml", "application/sparql-results+xml"),
+        ("text/csv", "application/sparql-results+json"),
+    ],
+    ids=["json_first", "xml_only", "csv_then_xml", "csv_only"],
+)
+def test_ask_takes_the_first_listed_results_type(served, accept, ctype):
+    """ASK negotiates as SELECT does: the first listed JSON or XML results
+    type, JSON by default. CSV and TSV have no boolean form."""
+    status, got, body = served[0].handle("ASK { ?s ?p ?o }", accept)
+    assert (status, got) == (200, ctype)
+    assert "false" in body
+
 
 def test_post_shorter_than_its_length_is_a_400(served):
     """The client declares the whole two-operation update, sends only the

@@ -70,50 +70,6 @@ def test_incremental_near_dup_within_and_cross_batch(spark, tmp_path):
     assert spark.read.parquet(str(index_dir / "docs")).count() == 5
 
 
-def test_compact_index_preserves_state_and_results(spark, tmp_path):
-    from thymeflow_back_spark.streaming.dedup_stream import compact_index
-
-    staging = tmp_path / "staging"
-    index_dir = tmp_path / "index"
-    pairs_dir = tmp_path / "pairs"
-    ckpt = tmp_path / "ckpt"
-
-    spark.createDataFrame(B1, ["doc_id", "text"]).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(staging))
-    _run(spark, staging, index_dir, pairs_dir, ckpt)
-
-    def logical_bands():
-        return sorted(
-            map(
-                tuple,
-                spark.read.parquet(str(index_dir / "bands"))
-                .select("doc_id", "band", "bkey")
-                .collect(),
-            )
-        )
-
-    before_bands = logical_bands()
-    counts = compact_index(spark, str(index_dir))
-    assert counts == {"bands": len(before_bands), "docs": 3}
-    # same logical rows, now under the reserved batch_id=-1 partition
-    assert logical_bands() == before_bands
-    assert {
-        r.batch_id for r in spark.read.parquet(str(index_dir / "bands")).collect()
-    } == {-1}
-
-    # the job keeps working against the compacted index
-    spark.createDataFrame(B2, ["doc_id", "text"]).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(staging))
-    _run(spark, staging, index_dir, pairs_dir, ckpt)
-    got = {
-        (r.a_id, r.b_id): round(r.jaccard, 3)
-        for r in spark.read.parquet(str(pairs_dir)).collect()
-    }
-    assert got[(2, 20)] == 1.0
-
-
 def _pairs_set(spark, pairs_dir):
     return {
         (r.a_id, r.b_id): round(r.jaccard, 3)
@@ -164,8 +120,8 @@ def test_first_batch_partial_write_repaired_by_retry(spark, tmp_path):
 
 
 def test_half_index_from_other_batches_still_refused(spark, tmp_path):
-    """A missing docs/ that holds OTHER batches' bands is real corruption
-    (crashed compaction swap) — the next batch must refuse, not guess."""
+    """A docs/ missing OTHER batches' shingle sets is an interrupted write
+    of those batches — the next batch must refuse, not guess."""
     import shutil
 
     import pytest
@@ -179,147 +135,6 @@ def test_half_index_from_other_batches_still_refused(spark, tmp_path):
 
     with pytest.raises(RuntimeError, match="incomplete"):
         process_batch(spark.createDataFrame(B2, ["doc_id", "text"]), 1, **kw)
-
-
-def test_compact_refuses_one_sided_batch(spark, tmp_path):
-    """A batch id present in bands/ but not docs/ (crash between the two
-    index writes) must make compaction REFUSE: folding the one-sided bands
-    into batch_id=-1 would erase the mismatch the batch processor's retry
-    guard depends on, and future candidates against those docs would be
-    silently dropped."""
-    import shutil
-
-    import pytest
-
-    from thymeflow_back_spark.streaming.dedup_stream import (
-        compact_index,
-        process_batch,
-    )
-
-    index_dir, pairs_dir = tmp_path / "index", tmp_path / "pairs"
-    kw = dict(index_dir=str(index_dir), pairs_dir=str(pairs_dir))
-    process_batch(spark.createDataFrame(B1, ["doc_id", "text"]), 0, **kw)
-    process_batch(spark.createDataFrame(B2, ["doc_id", "text"]), 1, **kw)
-    # simulate batch 1 crashing after bands but before docs
-    shutil.rmtree(index_dir / "docs" / "batch_id=1")
-
-    with pytest.raises(RuntimeError, match="incomplete"):
-        compact_index(spark, str(index_dir))
-
-    # a retry of the crashed batch repairs the index; compaction then works
-    process_batch(spark.createDataFrame(B2, ["doc_id", "text"]), 1, **kw)
-    counts = compact_index(spark, str(index_dir))
-    assert counts["docs"] == 5
-    assert {
-        r.batch_id for r in spark.read.parquet(str(index_dir / "docs")).collect()
-    } == {-1}
-
-
-def test_compact_phase_crash_resumes(spark, tmp_path):
-    """compact_index folds bands before docs; a crash between the two
-    phases leaves bands={-1} vs per-batch docs. Rerunning must RESUME
-    (fold the remaining side), not refuse — and the stream keeps working
-    against the finished index."""
-    import shutil
-
-    from thymeflow_back_spark.streaming.dedup_stream import (
-        compact_index,
-        process_batch,
-    )
-
-    index_dir, pairs_dir = tmp_path / "index", tmp_path / "pairs"
-    kw = dict(index_dir=str(index_dir), pairs_dir=str(pairs_dir))
-    process_batch(spark.createDataFrame(B1, ["doc_id", "text"]), 0, **kw)
-    process_batch(spark.createDataFrame(B2, ["doc_id", "text"]), 1, **kw)
-
-    # simulate the phase crash: snapshot docs/, compact fully, restore docs/
-    shutil.copytree(index_dir / "docs", tmp_path / "docs_backup")
-    compact_index(spark, str(index_dir))
-    shutil.rmtree(index_dir / "docs")
-    shutil.move(str(tmp_path / "docs_backup"), str(index_dir / "docs"))
-
-    counts = compact_index(spark, str(index_dir))  # resume: docs only
-    assert "docs" in counts and "bands" not in counts
-    assert {
-        r.batch_id for r in spark.read.parquet(str(index_dir / "docs")).collect()
-    } == {-1}
-
-    # new batch joins against the resumed index and finds the cross-batch dup
-    process_batch(
-        spark.createDataFrame([(30, B2[0][1])], ["doc_id", "text"]), 2, **kw
-    )
-    got = _pairs_set(spark, pairs_dir)
-    assert (20, 30) in got or (2, 30) in got
-
-
-def test_compact_swap_crash_stranded_old_recovers(spark, tmp_path):
-    """A crash BETWEEN the two swap renames strands bands.old (original
-    per-batch data) + bands.compact (folded tmp) with bands/ missing.
-    Rerunning compact_index must restore the .old copy, discard the tmp,
-    and finish the fold — and the stream must keep finding cross-batch
-    dups against the recovered index."""
-    import shutil
-
-    from thymeflow_back_spark.streaming.dedup_stream import (
-        compact_index,
-        process_batch,
-    )
-
-    index_dir, pairs_dir = tmp_path / "index", tmp_path / "pairs"
-    kw = dict(index_dir=str(index_dir), pairs_dir=str(pairs_dir))
-    process_batch(spark.createDataFrame(B1, ["doc_id", "text"]), 0, **kw)
-    process_batch(spark.createDataFrame(B2, ["doc_id", "text"]), 1, **kw)
-
-    # build the mid-swap crash state for bands/: snapshot, compact, then
-    # rewind to { bands.old = original, bands.compact = folded, no bands }
-    shutil.copytree(index_dir / "bands", tmp_path / "bands_orig")
-    shutil.copytree(index_dir / "docs", tmp_path / "docs_orig")
-    compact_index(spark, str(index_dir))
-    shutil.move(str(index_dir / "bands"), str(index_dir / "bands.compact"))
-    shutil.move(str(tmp_path / "bands_orig"), str(index_dir / "bands.old"))
-    shutil.rmtree(index_dir / "docs")
-    shutil.move(str(tmp_path / "docs_orig"), str(index_dir / "docs"))
-
-    counts = compact_index(spark, str(index_dir))
-    assert set(counts) == {"bands", "docs"}  # both sides re-folded
-    for name in ("bands", "docs"):
-        assert not (index_dir / f"{name}.old").exists()
-        assert not (index_dir / f"{name}.compact").exists()
-        assert {
-            r.batch_id
-            for r in spark.read.parquet(str(index_dir / name)).collect()
-        } == {-1}
-
-    process_batch(
-        spark.createDataFrame([(30, B2[0][1])], ["doc_id", "text"]), 2, **kw
-    )
-    got = _pairs_set(spark, pairs_dir)
-    assert (20, 30) in got and got[(20, 30)] == 1.0
-
-
-def test_compact_swap_crash_after_second_rename_recovers(spark, tmp_path):
-    """The OTHER swap-crash point — after rename(tmp -> src) but before
-    delete(.old): src already holds the folded data, .old is garbage.
-    Rerun must delete the stale .old and leave the folded index intact."""
-    import shutil
-
-    from thymeflow_back_spark.streaming.dedup_stream import (
-        compact_index,
-        process_batch,
-    )
-
-    index_dir, pairs_dir = tmp_path / "index", tmp_path / "pairs"
-    kw = dict(index_dir=str(index_dir), pairs_dir=str(pairs_dir))
-    process_batch(spark.createDataFrame(B1, ["doc_id", "text"]), 0, **kw)
-    shutil.copytree(index_dir / "bands", tmp_path / "bands_orig")
-    compact_index(spark, str(index_dir))
-    shutil.move(str(tmp_path / "bands_orig"), str(index_dir / "bands.old"))
-
-    compact_index(spark, str(index_dir))  # recovery pass: nothing to fold
-    assert not (index_dir / "bands.old").exists()
-    assert {
-        r.batch_id for r in spark.read.parquet(str(index_dir / "bands")).collect()
-    } == {-1}
 
 
 def test_stream_crash_restart_matches_batch_operator(spark, tmp_path):

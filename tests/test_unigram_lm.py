@@ -91,50 +91,3 @@ def test_segment_distributed_matches_local_and_partitioning(spark):
         assert (score_q, n_pieces, seg) == _viterbi_one(word, lp, 4)
         # the split re-concatenates to the word
         assert seg.replace(" ", "") == word
-
-
-def test_vocab_artifact_round_trip(spark, tmp_path):
-    from thymeflow_back_spark.operators.unigram_lm import (
-        load_unigram_vocab,
-        save_unigram_vocab,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "hello world hello"), (2, "world held hell"), (3, "low lower")],
-        "doc_id long, text string",
-    )
-    vocab = unigram_vocab(docs, "text", 4, 16)
-    path = str(tmp_path / "unigram.json")
-    save_unigram_vocab(vocab, path)
-    loaded = load_unigram_vocab(spark, path)
-    # the artifact is the model: rows identical
-    assert sorted((r.piece, r.cnt, r.lp_q) for r in loaded.collect()) == sorted(
-        (r.piece, r.cnt, r.lp_q) for r in vocab.collect()
-    )
-    # serving from the artifact is bit-identical to serving live
-    words = corpus_words(docs, "text").select("word")
-    live = sorted(
-        (r.word, r.score_q, r.n_pieces, r.seg)
-        for r in viterbi_segment(words, vocab, "word", 4).collect()
-    )
-    from_art = sorted(
-        (r.word, r.score_q, r.n_pieces, r.seg)
-        for r in viterbi_segment(words, loaded, "word", 4).collect()
-    )
-    assert live == from_art
-    # atomic publish: no temp droppings; corrupt/foreign artifacts refuse
-    assert [p.name for p in tmp_path.iterdir()] == ["unigram.json"]
-    import json
-
-    bad = tmp_path / "bad.json"
-    bad.write_text(json.dumps({"format": "qnb-model"}))
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="not a unigram-vocab"):
-        load_unigram_vocab(spark, str(bad))
-    wrong = tmp_path / "wrong_scale.json"
-    wrong.write_text(
-        json.dumps({"format": "unigram-vocab", "scale": 1, "pieces": []})
-    )
-    with _pytest.raises(ValueError, match="scale"):
-        load_unigram_vocab(spark, str(wrong))

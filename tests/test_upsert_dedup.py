@@ -5,7 +5,6 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from thymeflow_back_spark.streaming.dedup_stream import document_stream
 from thymeflow_back_spark.streaming.upsert_dedup import (
@@ -120,269 +119,3 @@ def test_zero_pair_batches_read_as_empty_view(spark, tmp_path):
     )
     assert out.count() == 0
     assert set(out.columns) == {"a_id", "b_id", "n_common", "jaccard"}
-
-
-def test_compacted_index_is_refused(spark, tmp_path):
-    import os
-
-    base = str(tmp_path)
-    out = _run_batches(spark, base, [[(1, TXT_A), (2, TXT_B)]])
-    assert _pairs(out) == {(1, 2)}
-    # simulate compact_index's fold: copy the docs/bands partitions to
-    # batch_id=-1 (version information destroyed)
-    for sub in ("index/docs", "index/bands"):
-        root = os.path.join(base, sub)
-        src = spark.read.option("basePath", root).parquet(root)
-        src.drop("batch_id").withColumn("batch_id", F.lit(-1)).write.mode(
-            "append"
-        ).partitionBy(*(["batch_id", "band"] if sub.endswith("bands") else ["batch_id"])).parquet(root)
-    with pytest.raises(RuntimeError, match="compacted"):
-        current_near_dups(
-            spark, os.path.join(base, "index"), os.path.join(base, "pairs")
-        ).collect()
-    from thymeflow_back_spark.streaming.upsert_dedup import (
-        process_upsert_batch,
-    )
-
-    nxt = spark.createDataFrame([(3, TXT_X)], "doc_id long, text string")
-    with pytest.raises(RuntimeError, match="compacted"):
-        process_upsert_batch(
-            nxt,
-            99,
-            index_dir=os.path.join(base, "index"),
-            pairs_dir=os.path.join(base, "pairs"),
-        )
-
-
-# --- version-aware compaction (compact_upsert_index) -----------------------
-
-
-def _index_state(base):
-    """(sorted base generations, sorted live batch dirs) per side."""
-    out = {}
-    for side in ("docs", "bands"):
-        root = os.path.join(base, "index", side)
-        names = sorted(os.listdir(root)) if os.path.isdir(root) else []
-        out[side] = (
-            [n for n in names if n.startswith("base-")],
-            [n for n in names if n.startswith("batch_id=")],
-        )
-    return out
-
-
-def test_compact_preserves_current_view_and_resets_partitions(
-    spark, tmp_path
-):
-    from thymeflow_back_spark.streaming.upsert_dedup import (
-        compact_upsert_index,
-    )
-
-    batches = [
-        [(1, TXT_A), (2, TXT_B)],
-        [(2, TXT_X)],
-        [(2, TXT_B)],
-    ]
-    # uncompacted replay = the truth
-    truth = _pairs(_run_batches(spark, str(tmp_path / "plain"), batches))
-    out = _run_batches(spark, str(tmp_path / "c"), batches)
-    before = _pairs(out)
-    index = os.path.join(str(tmp_path / "c"), "index")
-    pairs = os.path.join(str(tmp_path / "c"), "pairs")
-    stats = compact_upsert_index(spark, index)
-    assert stats["docs"] > 0 and stats["bands"] > 0
-    from thymeflow_back_spark.streaming.upsert_dedup import current_near_dups
-
-    after = _pairs(current_near_dups(spark, index, pairs))
-    assert after == before == truth == {(1, 2)}
-    # folded layout: exactly one base generation, zero batch partitions
-    st = _index_state(str(tmp_path / "c"))
-    assert st["docs"] == (["base-2"], [])
-    assert st["bands"] == (["base-2"], [])
-    # superseded versions dropped: one docs row per id
-    docs = spark.read.parquet(os.path.join(index, "docs", "base-2"))
-    rows = {(r.doc_id, r.batch_id) for r in docs.select("doc_id", "batch_id").collect()}
-    assert rows == {(1, 0), (2, 2)}
-
-
-def test_update_after_compaction_matches_uncompacted_replay(spark, tmp_path):
-    from thymeflow_back_spark.streaming.upsert_dedup import (
-        compact_upsert_index,
-        current_near_dups,
-    )
-
-    first = [
-        [(1, TXT_A), (2, TXT_B)],
-        [(2, TXT_X)],
-    ]
-    later = [
-        [(2, TXT_B)],          # update of a FOLDED doc: must re-match 1 via base
-        [(3, TXT_X), (4, TXT_A)],  # 3 matches folded v1 of 2? no — 2 is TXT_B now; 4 matches 1
-    ]
-    truth = _pairs(_run_batches(spark, str(tmp_path / "plain"), first + later))
-    # compacted path: run first, compact, run later
-    base = str(tmp_path / "c")
-    _run_batches(spark, base, first)
-    index = os.path.join(base, "index")
-    pairs = os.path.join(base, "pairs")
-    compact_upsert_index(spark, index)
-    out = _run_batches(spark, base, later)
-    assert _pairs(out) == truth
-    # re-compaction folds the new batches into a newer generation
-    compact_upsert_index(spark, index)
-    st = _index_state(base)
-    assert st["docs"][1] == [] and len(st["docs"][0]) == 1
-    assert _pairs(current_near_dups(spark, index, pairs)) == truth
-
-
-def test_compact_resume_after_docs_side_crash(spark, tmp_path):
-    """Crash simulation: docs/base-<F> committed, bands/base-<F> missing,
-    nothing cleaned up. A reader sees the PRE-compaction state (fold = min
-    over sides); a compaction rerun resumes the bands fold and finishes."""
-    import shutil
-
-    from thymeflow_back_spark.streaming.upsert_dedup import (
-        compact_upsert_index,
-        current_near_dups,
-    )
-
-    batches = [
-        [(1, TXT_A), (2, TXT_B)],
-        [(2, TXT_X)],
-    ]
-    plain = str(tmp_path / "plain")
-    truth = _pairs(_run_batches(spark, plain, batches))
-    done = str(tmp_path / "done")
-    _run_batches(spark, done, batches)
-    compact_upsert_index(spark, os.path.join(done, "index"))
-    # crashed state = plain's uncompacted dirs + done's docs base only
-    crash = str(tmp_path / "crash")
-    shutil.copytree(plain, crash)
-    gen = [
-        n
-        for n in os.listdir(os.path.join(done, "index", "docs"))
-        if n.startswith("base-")
-    ][0]
-    shutil.copytree(
-        os.path.join(done, "index", "docs", gen),
-        os.path.join(crash, "index", "docs", gen),
-    )
-    index = os.path.join(crash, "index")
-    pairs = os.path.join(crash, "pairs")
-    # reader under the crashed state: unchanged view (fold not committed on bands)
-    assert _pairs(current_near_dups(spark, index, pairs)) == truth
-    # rerun resumes: bands folds, cleanup runs, view unchanged
-    stats = compact_upsert_index(spark, index)
-    assert stats["bands"] > 0 and stats["docs"] == 0
-    st = _index_state(crash)
-    assert st["docs"] == ([gen], []) and st["bands"] == ([gen], [])
-    assert _pairs(current_near_dups(spark, index, pairs)) == truth
-
-
-def test_replay_of_folded_batch_is_noop(spark, tmp_path):
-    from thymeflow_back_spark.streaming.upsert_dedup import (
-        compact_upsert_index,
-        current_near_dups,
-        process_upsert_batch,
-    )
-
-    base = str(tmp_path)
-    _run_batches(spark, base, [[(1, TXT_A), (2, TXT_B)], [(2, TXT_X)]])
-    index = os.path.join(base, "index")
-    pairs = os.path.join(base, "pairs")
-    compact_upsert_index(spark, index)
-    before = _index_state(base)
-    # checkpoint replay of an already-folded batch: must write nothing
-    replay = spark.createDataFrame([(2, TXT_X)], "doc_id long, text string")
-    process_upsert_batch(replay, 1, index_dir=index, pairs_dir=pairs)
-    assert _index_state(base) == before
-    assert _pairs(current_near_dups(spark, index, pairs)) == set()
-
-
-def test_fresh_checkpoint_against_compacted_index_is_refused(spark, tmp_path):
-    """A NEW stream (fresh checkpoint, batch ids restarting at 0) pointed
-    at a compacted index must raise, not silently no-op its batches as
-    folded replays (round-10 advice fix): a genuinely-folded batch's ids
-    all live in the compacted docs store, so an id absent from the store
-    proves the batch never ran."""
-    from thymeflow_back_spark.streaming.upsert_dedup import (
-        compact_upsert_index,
-        process_upsert_batch,
-    )
-
-    base = str(tmp_path)
-    _run_batches(spark, base, [[(1, TXT_A), (2, TXT_B)], [(2, TXT_X)]])
-    index = os.path.join(base, "index")
-    pairs = os.path.join(base, "pairs")
-    compact_upsert_index(spark, index)
-    fresh = spark.createDataFrame([(99, TXT_A)], "doc_id long, text string")
-    with pytest.raises(RuntimeError, match="fresh checkpoint"):
-        process_upsert_batch(fresh, 0, index_dir=index, pairs_dir=pairs)
-    # a genuine replay (all ids known) still no-ops
-    before = _index_state(base)
-    replay = spark.createDataFrame([(2, TXT_X)], "doc_id long, text string")
-    process_upsert_batch(replay, 1, index_dir=index, pairs_dir=pairs)
-    assert _index_state(base) == before
-
-
-def test_pairs_log_compaction_keeps_only_live_pairs(spark, tmp_path):
-    from thymeflow_back_spark.streaming.upsert_dedup import (
-        compact_upsert_index,
-        current_near_dups,
-    )
-
-    first = [
-        [(1, TXT_A), (2, TXT_B)],  # live pair (1,2)
-        [(5, TXT_X), (6, TXT_X)],  # pair (5,6) ...
-        [(6, TXT_A)],              # ... then 6 updated: (5,6) dead, (1,6)/(2,6) live
-    ]
-    truth = _pairs(_run_batches(spark, str(tmp_path / "plain"), first))
-    base = str(tmp_path / "c")
-    _run_batches(spark, base, first)
-    index = os.path.join(base, "index")
-    pairs = os.path.join(base, "pairs")
-    stats = compact_upsert_index(spark, index, pairs_dir=pairs)
-    assert stats["pairs"] > 0
-    # layout: one pairs base, no batch partitions
-    names = sorted(os.listdir(pairs))
-    assert [n for n in names if n.startswith("batch_id=")] == []
-    assert [n for n in names if n.startswith("base-")] == ["base-2"]
-    # the folded log IS the live set (plus per-pair emit versions)
-    folded = spark.read.parquet(os.path.join(pairs, "base-2"))
-    assert {
-        (min(r.a_id, r.b_id), max(r.a_id, r.b_id)) for r in folded.collect()
-    } == truth
-    # the view is unchanged, and further updates keep matching the
-    # uncompacted replay
-    assert _pairs(current_near_dups(spark, index, pairs)) == truth
-    later = [[(2, TXT_X)]]  # kills (1,2) and (2,6)
-    truth2 = _pairs(_run_batches(spark, str(tmp_path / "plain2"), first + later))
-    out = _run_batches(spark, base, later)
-    assert _pairs(out) == truth2
-    # second compaction folds the new state; zero-or-more survivors both fine
-    compact_upsert_index(spark, index, pairs_dir=pairs)
-    assert _pairs(current_near_dups(spark, index, pairs)) == truth2
-
-
-def test_pairs_compaction_with_zero_survivors_writes_no_base(spark, tmp_path):
-    from thymeflow_back_spark.streaming.upsert_dedup import (
-        compact_upsert_index,
-        current_near_dups,
-    )
-
-    base = str(tmp_path)
-    _run_batches(
-        spark,
-        base,
-        [
-            [(1, TXT_A), (2, TXT_B)],
-            [(2, TXT_X)],  # kills the only pair
-        ],
-    )
-    index = os.path.join(base, "index")
-    pairs = os.path.join(base, "pairs")
-    stats = compact_upsert_index(spark, index, pairs_dir=pairs)
-    assert stats["pairs"] == 0
-    names = sorted(os.listdir(pairs))
-    assert [n for n in names if n.startswith("batch_id=")] == []
-    assert [n for n in names if n.startswith("base-")] == []
-    assert _pairs(current_near_dups(spark, index, pairs)) == set()

@@ -8,8 +8,8 @@ This module is that surface over the Spark engine:
 
 - ``execute_sparql`` — one entry point dispatching SELECT / ASK /
   CONSTRUCT / DESCRIBE / UPDATE to the compilers in plans/sparql.py.
-- SPARQL 1.1 result serializers: Results JSON, Results XML, CSV and TSV
-  for SELECT/ASK; N-Triples for CONSTRUCT/DESCRIBE graphs.
+- SPARQL 1.1 result serializers: Results JSON and XML for SELECT and ASK,
+  CSV and TSV for SELECT; N-Triples for CONSTRUCT/DESCRIBE graphs.
 - ``SparqlEndpoint`` — a stdlib ThreadingHTTPServer endpoint holding a
   StatementStore; updates route through update/updater.apply_update (the
   reference intercepts update diffs into Updater.scala — §3.3).
@@ -331,12 +331,20 @@ _SELECT_WRITERS = {
 }
 
 
-def _negotiate(accept: str) -> str:
-    """The SELECT result media type for an Accept header: the first listed
-    document or line format, else SPARQL Results JSON."""
+_ASK_WRITERS = {
+    "application/sparql-results+json": ask_json,
+    "application/json": ask_json,
+    "application/sparql-results+xml": ask_xml,
+}
+
+
+def _negotiate(accept: str, offered) -> str:
+    """The result media type for an Accept header: the first listed type
+    the query form has a writer for (``offered``), else SPARQL Results
+    JSON."""
     for media in (accept or "").split(","):
         media = media.split(";")[0].strip()
-        if media in _SELECT_WRITERS or media in _STREAMABLE:
+        if media in offered:
             return media
     return "application/sparql-results+json"
 
@@ -395,7 +403,7 @@ class SparqlEndpoint:
                 return 204, "text/plain", ""
             result = execute_sparql(self.store, text)
             if result.kind == "select":
-                ctype = _negotiate(accept)
+                ctype = _negotiate(accept, (*_SELECT_WRITERS, *_STREAMABLE))
                 if ctype in _STREAMABLE:
                     # pull the header AND the first data chunk eagerly: the
                     # first chunk triggers execution, so analysis/runtime
@@ -423,9 +431,9 @@ class SparqlEndpoint:
                 pdf = _stable_int_cols(pdf, _spark_kinds(result.df))
                 return 200, ctype, _SELECT_WRITERS[ctype](pdf)
             if result.kind == "ask":
-                if "xml" in (accept or ""):
-                    return 200, "application/sparql-results+xml", ask_xml(result.boolean)
-                return 200, "application/sparql-results+json", ask_json(result.boolean)
+                # CSV and TSV have no boolean form
+                ctype = _negotiate(accept, _ASK_WRITERS)
+                return 200, ctype, _ASK_WRITERS[ctype](result.boolean)
             body = quads_ntriples(result.df.limit(self.max_rows + 1))
             if body.count("\n") > self.max_rows:
                 return 413, "text/plain", f"result exceeds max_rows={self.max_rows}"

@@ -8,14 +8,5 @@ store is the only state, so an enricher that retracts (IFP, primary facet)
 rederives from it what the diff touches. ``pipeline.ingest`` applies the
 returned diff to the store and appends it to the flowing diff, preserving
 the reference's stage-chaining semantics with exactly-once application.
+Each caller imports the module it uses.
 """
-
-from .ifp import ifp_enricher
-from .owl import owl_enricher
-from .rdfs import rdfs_enricher
-
-__all__ = [
-    "ifp_enricher",
-    "owl_enricher",
-    "rdfs_enricher",
-]

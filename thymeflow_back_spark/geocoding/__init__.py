@@ -1,3 +1,2 @@
-from .geocoder import CachedGeocoder, Feature, Geocoder
-
-__all__ = ["CachedGeocoder", "Feature", "Geocoder"]
+"""Place geocoding with a persistent cache over an injectable fetch
+function (``geocoder``)."""

@@ -1,9 +1,9 @@
-"""Geocoder interface with a persistent cache table.
+"""Geocoding with a persistent cache table.
 
 Parity with the reference geocoding stack (SURVEY.md §2.4 geocoder lookup
-join): a Geocoder resolves place names (optionally location-biased) and
-reverse lookups to features; CachedGeocoder fronts it with a cache keyed by
-(kind, query) — lookups join the cache table first, only misses reach the
+join): a fetch function resolves place names (optionally location-biased)
+and reverse lookups to features; CachedGeocoder fronts it with a cache keyed
+by (kind, query) — lookups join the cache table first, only misses reach the
 backend, and the cache grows monotonically (reference CachedGeocoder.scala:
 34-80 persists a JSON cache; here the cache is a DataFrame the caller can
 persist as parquet/Delta).
@@ -40,22 +40,6 @@ class Feature:
 
 # fetch(kind, query) -> list of Feature
 Fetch = Callable[[str, str], list[Feature]]
-
-
-class Geocoder:
-    """Direct/biased/reverse geocoding over an injectable fetch function."""
-
-    def __init__(self, fetch: Fetch):
-        self._fetch = fetch
-
-    def direct(self, address: str) -> list[Feature]:
-        return self._fetch("direct", address)
-
-    def direct_biased(self, address: str, lon: float, lat: float) -> list[Feature]:
-        return self._fetch("direct_bias", f"{address}|{lon},{lat}")
-
-    def reverse(self, lon: float, lat: float) -> list[Feature]:
-        return self._fetch("reverse", f"{lon},{lat}")
 
 
 class CachedGeocoder:

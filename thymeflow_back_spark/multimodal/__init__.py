@@ -1,15 +1,2 @@
-from .ops import (
-    MEDIA_SCHEMA,
-    decode_image,
-    extract_image_features,
-    resize_images,
-    sample_video_frames,
-)
-
-__all__ = [
-    "MEDIA_SCHEMA",
-    "decode_image",
-    "extract_image_features",
-    "resize_images",
-    "sample_video_frames",
-]
+"""Binary media columns: image/audio features via Arrow-batched
+mapInPandas (``ops``, ``png``, ``audio``)."""

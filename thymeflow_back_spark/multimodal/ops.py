@@ -35,8 +35,6 @@ MEDIA_SCHEMA = (
 )
 
 FEATURES_SCHEMA = "media_id long, width int, height int, mean_luma double, phash string"
-RESIZED_SCHEMA = "media_id long, width int, height int, content binary"
-FRAMES_SCHEMA = "media_id long, frame_index int, t_ms long, content binary"
 
 
 def decode_image(content: bytes, fake: bool = False) -> np.ndarray:
@@ -98,59 +96,3 @@ def extract_image_features(media: DataFrame, fake_decode: bool = False) -> DataF
             yield pd.DataFrame(rows, columns=["media_id", "width", "height", "mean_luma", "phash"])
 
     return media.select("media_id", "content").mapInPandas(run, FEATURES_SCHEMA)
-
-
-def resize_images(media: DataFrame, width: int, height: int, fake_decode: bool = False) -> DataFrame:
-    """Decode → nearest-neighbor resize → re-emit raw RGB bytes."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                img = decode_image(bytes(content), fake=fake_decode)
-                ys = (np.arange(height) * img.shape[0] // height).clip(0, img.shape[0] - 1)
-                xs = (np.arange(width) * img.shape[1] // width).clip(0, img.shape[1] - 1)
-                resized = img[ys][:, xs]
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": width,
-                        "height": height,
-                        "content": resized.tobytes(),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "width", "height", "content"])
-
-    return media.select("media_id", "content").mapInPandas(run, RESIZED_SCHEMA)
-
-
-def sample_video_frames(
-    media: DataFrame, every_ms: int = 1000, max_frames: int = 8, fake_decode: bool = False
-) -> DataFrame:
-    """Frame sampling plumbing: emit ≤ max_frames rows per video at fixed
-    timestamps. The fake path derives per-frame bytes deterministically from
-    (content hash, frame index); a real decoder would seek/decode instead."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                if not fake_decode:
-                    raise NotImplementedError(
-                        "video codec not available in this runtime; pass fake_decode=True"
-                    )
-                digest = hashlib.sha256(bytes(content)).digest()
-                n_frames = 1 + digest[0] % max_frames
-                for i in range(n_frames):
-                    frame = decode_image(bytes(content) + i.to_bytes(4, "big"), fake=True)
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_index": i,
-                            "t_ms": i * every_ms,
-                            "content": frame.tobytes(),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "frame_index", "t_ms", "content"])
-
-    return media.select("media_id", "content").mapInPandas(run, FRAMES_SCHEMA)

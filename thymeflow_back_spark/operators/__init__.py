@@ -3,16 +3,6 @@
 Each operator is a pure function DataFrame -> DataFrame built from JVM-side
 expressions (no Python row loops), designed so the physical plan scales:
 shuffles only on declared keys, broadcasts for small sides, bucketized
-range joins instead of cross products.
+range joins instead of cross products. Each caller imports the module it
+uses.
 """
-
-from .sessionize import sessionize
-from .interval_join import interval_overlap_join, interval_overlap_self_join
-from .topk import top_k_per_group
-
-__all__ = [
-    "sessionize",
-    "interval_overlap_join",
-    "interval_overlap_self_join",
-    "top_k_per_group",
-]

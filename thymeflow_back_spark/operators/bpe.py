@@ -566,39 +566,3 @@ def bpe_encode_bytelevel(
 
 
 # --- Model artifacts ----------------------------------------------------------
-
-
-def save_merges(merges: list[tuple[str, str]], path: str, mode: str = "char") -> None:
-    """Persist a trained merge list as a JSON artifact (atomic publish:
-    temp file + rename, so a reader never sees a torn model). The model
-    IS the ordered pair list — engine-independent by design."""
-    import json
-    import os
-    import uuid
-
-    payload = {"format": "bpe-merges", "version": 1, "mode": mode,
-               "merges": [[a, b] for a, b in merges]}
-    tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(payload, f, ensure_ascii=False)
-    os.replace(tmp, path)
-
-
-def load_merges(path: str) -> tuple[list[tuple[str, str]], str]:
-    """Load a merge list saved by :func:`save_merges`; returns
-    (merges, mode) where mode is 'char' or 'byte'."""
-    import json
-
-    with open(path, encoding="utf-8") as f:
-        payload = json.load(f)
-    if payload.get("format") != "bpe-merges":
-        raise ValueError(f"{path}: not a bpe-merges artifact")
-    return [(a, b) for a, b in payload["merges"]], payload.get("mode", "char")
-
-
-def bpe_vocab(merges: list[tuple[str, str]], mode: str = "char") -> list[str]:
-    """The model's token inventory in rank order: for byte-level models
-    the 256 mapped byte symbols then each merge's product; for char-level
-    models the products only (the base alphabet is corpus-defined)."""
-    base = list(bytes_to_unicode().values()) if mode == "byte" else []
-    return base + [a + b for a, b in merges]

@@ -26,15 +26,15 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 25,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Min-label propagation: returns (node, component) — component is the
     smallest node id reachable (ids must be orderable; works for numeric or
     string ids).
 
-    ``checkpoint_every=1``: sameAs-style graphs converge in 2-3 rounds, so
-    checking after every round with flat lineage beats piling k rounds of
-    nested plans between checks (measured on the IFP component query).
+    Convergence is checked after every round: sameAs-style graphs converge
+    in 2-3 rounds, so checking each round with flat lineage beats piling k
+    rounds of nested plans between checks (measured on the IFP component
+    query).
 
     Round discipline (optimization round 11 — guide §1.2): each round is
     materialized by ONE action — a lazy localCheckpoint forced by the
@@ -267,68 +267,50 @@ def reachable_nodes(
     return result
 
 
-def _large_star(
-    e: DataFrame, input_canonical: bool = False, defer_distinct: bool = False
-) -> DataFrame:
+def _large_star(e: DataFrame) -> DataFrame:
     """One large-star round (Kiveris et al. 2014, "Connected Components in
     MapReduce and Beyond"): every node's LARGER neighbors re-attach to its
     minimum neighbor (or itself). Strictly monotone — large neighbors only
     ever move to smaller attachment points.
 
-    ``input_canonical``: caller guarantees ``e`` is distinct with u > v on
-    every row. Then sym = e ∪ reverse(e) is distinct BY CONSTRUCTION (the
-    two halves live in disjoint u>v / u<v orientations), so its explicit
-    ``.distinct()`` — one full (u, v) shuffle per round — is skipped. The
-    output keeps the canonical u > v orientation either way: emitted rows
-    are (v, m) with m <= u < v.
+    ``e`` must be canonical: distinct, with u > v on every row. Then
+    sym = e ∪ reverse(e) is distinct BY CONSTRUCTION (the two halves live
+    in disjoint u>v / u<v orientations), so no ``.distinct()`` — one full
+    (u, v) shuffle per round — is needed. Emitted rows are (v, m) with
+    m <= u < v, canonical u > v again.
 
-    ``defer_distinct``: skip the output ``.distinct()`` — exactly one
-    shuffle — when the caller feeds the result straight into
+    The output is NOT deduplicated: it feeds straight into
     :func:`_small_star`, whose groupBy-min is duplicate-insensitive and
-    whose own trailing distinct collapses the join side; the composed
-    round's OUTPUT is identical (pre-distinct large-star output is at
-    most |sym| rows, so no intermediate blowup either)."""
+    whose own trailing distinct collapses the join side, so the composed
+    round's OUTPUT is identical with one shuffle fewer (pre-distinct
+    large-star output is at most |sym| rows, so no intermediate blowup
+    either)."""
     sym = e.select("u", "v").unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    if not input_canonical:
-        sym = sym.distinct()
     m = (
         sym.groupBy("u")
         .agg(F.min("v").alias("mn"))
         .select("u", F.least("mn", F.col("u")).alias("m"))
     )
-    out = (
+    return (
         sym.join(m, "u")
         .filter(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
     )
-    return out if defer_distinct else out.distinct()
 
 
-def _small_star(e: DataFrame, input_canonical: bool = False) -> DataFrame:
-    """One small-star round: orient every edge toward its larger endpoint,
-    then each node's SMALLER neighbors (and the node itself) attach to its
-    minimum smaller neighbor.
+def _small_star(e: DataFrame) -> DataFrame:
+    """One small-star round: each node's SMALLER neighbors (and the node
+    itself) attach to its minimum smaller neighbor.
 
-    ``input_canonical``: caller guarantees every input row already has
-    u > v (large-star output and canonicalized initial edge sets do), so
-    the greatest/least re-orientation is the identity and the input-side
-    ``.distinct()`` — needed only to collapse re-oriented duplicates — is
-    dropped. Input duplicates are harmless without it: the groupBy min is
-    duplicate-insensitive and the final ``.distinct()`` collapses the join
-    side, so output is identical. Output rows are (x, m) with m < x —
-    canonical u > v again."""
-    if input_canonical:
-        oriented = e.select("u", "v")
-    else:
-        oriented = (
-            e.select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
+    Every input row must already have u > v (large-star output and the
+    canonicalized initial edge set do), so no re-orientation or input-side
+    ``.distinct()`` is needed. Input duplicates are harmless: the groupBy
+    min is duplicate-insensitive and the final ``.distinct()`` collapses
+    the join side. Output rows are (x, m) with m < x — canonical u > v
+    again."""
+    oriented = e.select("u", "v")
     m = oriented.groupBy("u").agg(F.min("v").alias("m"))
     return (
         oriented.join(m, "u")
@@ -388,8 +370,8 @@ def connected_components_star(
     Round discipline (optimization round 11 — guide §2.4/§1): the edge
     set is canonicalized to distinct u > v rows ONCE up front, which lets
     every round skip the large-star symmetrize-distinct and small-star
-    re-orient-distinct shuffles (see the helpers' ``input_canonical``
-    docs) — 2 fewer Exchanges per round. Each round is materialized by a
+    re-orient-distinct shuffles (see the helpers' docstrings) — 2 fewer
+    Exchanges per round. Each round is materialized by a
     SINGLE action (a lazy localCheckpoint forced by the count+hash-sum
     signature aggregate) instead of the former eager-checkpoint + count +
     exceptAll triple; the exact exceptAll equality check now runs only
@@ -425,10 +407,7 @@ def connected_components_star(
         # parallelismFirst coalescing keeps them); the size-derived
         # count is 1 at bench scale and thousands at 100 TB.
         with scoped_shuffle_partitions(spark, fixpoint_partitions(sig_prev[0])):
-            nxt = _small_star(
-                _large_star(e, input_canonical=True, defer_distinct=True),
-                input_canonical=True,
-            ).localCheckpoint(eager=False)
+            nxt = _small_star(_large_star(e)).localCheckpoint(eager=False)
             sig_next = _edge_signature(nxt)  # ONE job: materialize + guard
             # exact set equality = signature match confirmed by ONE one-sided
             # difference check (both sides distinct, equal cardinality, and

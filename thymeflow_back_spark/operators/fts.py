@@ -6,11 +6,6 @@ FullTextSearchServer.scala: matchQuery with minimumShouldMatch 70-80%) with
 a pure DataFrame inverted index: explode normalized tokens, equi-join
 query tokens against the index, and keep entities matching at least
 ``ceil(match_percent × query_token_count)`` distinct query tokens.
-
-``partial_match`` implements the n-gram growth matcher
-(FullTextSearchPartialTextMatcher: match token subsequences up to depth 3):
-candidate spans are consecutive token n-grams of the text joined against
-the index.
 """
 
 from __future__ import annotations
@@ -108,58 +103,6 @@ def match_query(
         .filter(F.col("n_matched") * 100 >= F.col("n_query_tokens") * match_percent)
         .select("query_id", "entity_id", "n_matched", "n_query_tokens")
     )
-
-
-def partial_match(
-    index: DataFrame, texts: DataFrame, text_id_col: str, text_col: str, max_depth: int = 3
-) -> DataFrame:
-    """Match consecutive token n-grams (n ≤ max_depth) of each text against
-    indexed entity tokens: (text_id, ngram, n, entity_id)."""
-    toks = texts.select(
-        F.col(text_id_col).alias("text_id"),
-        tokenize(normalize_text(F.col(text_col))).alias("toks"),
-    )
-    # all n in ONE projection (explode n, then the per-n span transform) —
-    # a per-n union loop re-scanned and re-tokenized the texts max_depth
-    # times for identical output
-    idx = F.when(
-        F.size("toks") >= F.col("n"),
-        F.sequence(F.lit(0), F.size("toks") - F.col("n")),
-    ).otherwise(F.array().cast("array<int>"))
-    grams = (
-        toks.select(
-            "text_id",
-            F.explode(F.sequence(F.lit(1), F.lit(max_depth))).alias("n"),
-            "toks",
-        )
-        .select(
-            "text_id",
-            "n",
-            F.explode(
-                F.transform(
-                    idx,
-                    lambda i: F.concat_ws(
-                        " ", F.slice(F.col("toks"), i + 1, F.col("n"))
-                    ),
-                )
-            ).alias("ngram"),
-        )
-    )
-    # collapse repeated occurrences of the same n-gram in a text BEFORE the
-    # word explode: a repeat would double matched_words and fail the ==n gate
-    grams = grams.dropDuplicates(["text_id", "n", "ngram"])
-    # an n-gram matches an entity if EVERY word of the n-gram is an entity token
-    words = grams.select(
-        "text_id", "n", "ngram", F.explode(F.split("ngram", " ")).alias("token")
-    )
-    per_entity = (
-        words.join(index, "token")
-        .groupBy("text_id", "n", "ngram", "entity_id")
-        .agg(F.count("*").alias("matched_words"))
-        .filter(F.col("matched_words") == F.col("n"))
-    )
-    # already unique: the groupBy keyed exactly these four columns
-    return per_entity.select("text_id", "ngram", "n", "entity_id")
 
 
 # --- BM25 ranking -------------------------------------------------------------

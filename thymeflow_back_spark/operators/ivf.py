@@ -17,10 +17,11 @@ cell index, means are exact elementwise averages) — same data, same index,
 every run. Only the k×d centroid matrix ever reaches the driver; corpus
 vectors stay distributed.
 
-At 100 TB: the assignment pass is a narrow scan; the per-cell layout can
-be made physical by writing the corpus partitioned by cell, after which a
-probe reads only n_probe partitions (partition pruning does the fan-out
-reduction the in-memory cell join does here).
+At 100 TB: the assignment pass is a narrow scan; the per-cell layout is
+made physical by writing the corpus partitioned by cell (the streaming
+index, streaming/ivf_stream.py, does), after which a probe reads only
+n_probe partitions (partition pruning does the fan-out reduction the
+in-memory cell join does here).
 """
 
 from __future__ import annotations
@@ -135,116 +136,6 @@ def ivf_assign(
         v.alias("c_vec"),
         _cell_scores(v, centroids).alias("scores"),
     ).select("c_id", _argmax_cell(F.col("scores")).alias("cell"), "c_vec")
-
-
-def ivf_write_index(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    path: str,
-    n_cells: int = N_CELLS,
-    refine_iters: int = 1,
-    sq8: bool = False,
-) -> list[list[float]]:
-    """Materialize the inverted file as a parquet dataset PARTITIONED BY
-    cell — the physical form of the 100 TB story: a probe then reads only
-    the n_probe cell partitions (partition pruning), not the corpus.
-    Centroids are stored alongside as JSON (k×d — driver-scale).
-
-    ``sq8=True`` stores vectors as per-vector int8 scalar-quantized codes
-    (1 byte/dim + two doubles) instead of float64 arrays — the IVF-SQ8
-    layout: at 100 TB the index shrinks ~4-8× and probes dequantize
-    map-side (operators/quantize.py midpoint decode) into the same cosine
-    tail."""
-    import json
-
-    centroids = seed_centroids(corpus, id_col, vec_col, n_cells)
-    if refine_iters:
-        centroids = refine_centroids(corpus, id_col, vec_col, centroids, refine_iters)
-    inverted = ivf_assign(corpus, id_col, vec_col, centroids)
-    if sq8:
-        from .quantize import sq8_encode
-
-        inverted = sq8_encode(inverted, "c_vec", out_col="codes32").selectExpr(
-            "c_id",
-            "cell",
-            "mn",
-            "mx",
-            "transform(codes32, c -> cast(c - 128 as tinyint)) as codes",
-        )
-    inverted.write.partitionBy("cell").mode("overwrite").parquet(path)
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        [(json.dumps(centroids),)], "centroids string"
-    ).coalesce(1).write.mode("overwrite").json(path + "_centroids")
-    return centroids
-
-
-def ivf_probe_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    n_probe: int = N_PROBE,
-    query_id_col: str = "q_id",
-) -> DataFrame:
-    """Top-k against a materialized IVF index: the probe-cell set for the
-    query batch is computed first (n_probe × |queries| ints — tiny), then
-    pushed into the scan as a static partition filter, so only those cell
-    partitions are read. ``.explain`` shows PartitionFilters on ``cell``."""
-    import json
-
-    (row,) = spark.read.json(path + "_centroids").collect()
-    centroids = json.loads(row.centroids)
-    inverted = spark.read.parquet(path)
-    if "codes" in inverted.columns:
-        # IVF-SQ8 layout: dequantize map-side (midpoint decode) into the
-        # same cosine tail; the scan still reads 1 byte/dim + 2 doubles.
-        inverted = inverted.selectExpr(
-            "c_id",
-            "cell",
-            "transform(codes, c -> if(mx = mn, mn, "
-            "mn + (cast(c as double) + 128.5d) * (mx - mn) / 255)) as c_vec",
-        )
-
-    qv = as_double_array(F.col(vec_col))
-    ranked = F.transform(
-        F.sequence(F.lit(0), F.lit(len(centroids) - 1)),
-        lambda i: F.struct(
-            F.element_at(F.col("scores"), i + 1).alias("s"), (-i).alias("negcell")
-        ),
-    )
-    probes = (
-        queries.select(
-            F.col(id_col).alias(query_id_col),
-            qv.alias("q_vec"),
-            _cell_scores(qv, centroids).alias("scores"),
-        )
-        .select(
-            query_id_col,
-            "q_vec",
-            F.explode(
-                F.slice(F.sort_array(ranked, asc=False), 1, n_probe).getField("negcell")
-            ).alias("negcell"),
-        )
-        .select(query_id_col, "q_vec", (-F.col("negcell")).alias("cell"))
-    )
-    cells = sorted({r.cell for r in probes.select("cell").distinct().collect()})
-    pruned = inverted.filter(F.col("cell").isin(cells))
-
-    score = F.round(
-        dot(F.col("q_vec"), F.col("c_vec")) / (norm(F.col("q_vec")) * norm(F.col("c_vec"))),
-        SCORE_DECIMALS,
-    )
-    scored = (
-        pruned.join(F.broadcast(probes), "cell")
-        .filter(F.col(query_id_col) != F.col("c_id"))
-        .select(query_id_col, "c_id", score.alias("score"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc("c_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def ivf_topk(

@@ -5,8 +5,8 @@ The canonical billion-scale ANN layout (FAISS IVFPQ; Jégou et al. 2011
 RESIDUAL v - centroid(cell) — residual magnitudes are much smaller than
 raw vectors, so the same code budget quantizes far more precisely. At
 100 TB the index is (cell, m codes) per vector — bytes, not KBs — cells
-partition-prune the probe (operators/ivf.ivf_write_index's layout), and
-candidates cost m table lookups each, never a d-dim dot.
+partition-prune the probe (the cell-partitioned layout of
+streaming/ivf_stream.py), and candidates cost m table lookups each, never a d-dim dot.
 
 Composition of proven parts: the coarse step IS operators/ivf.py
 (content-addressed seeds + exact-sum Lloyd refinement); the code step IS

@@ -154,12 +154,3 @@ def scatter_to_cov(
     if n is None:
         raise ValueError("scatter_to_cov: empty relation")
     return cov / (float(n) ** 2 * float(scale) ** 2)
-
-
-def pca_spectrum(cov: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Eigendecomposition of a covariance matrix, eigenvalues descending —
-    the diagnostic step (variance-explained curves, whitening transforms)
-    that runs on the d x d driver-side matrix, never on the corpus."""
-    w, v = np.linalg.eigh(cov)
-    order = np.argsort(w)[::-1]
-    return w[order], v[:, order]

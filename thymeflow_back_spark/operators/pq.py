@@ -44,8 +44,8 @@ PQ_M = 8  # subspaces
 PQ_K = 16  # codes per subspace
 
 # Opt-in cross-query index cache (the set_shingle_cache pattern): a PQ
-# index is a BUILD-ONCE artifact — at scale it's materialized like
-# ivf_write_index's parquet — so a harness running several PQ queries
+# index is a BUILD-ONCE artifact — at scale it's materialized to parquet
+# — so a harness running several PQ queries
 # over the same corpus should not re-train codebooks / re-encode per
 # query. Keyed by plan semanticHash + parameters; OFF by default (pinning
 # corpus-sized code tables is a per-run capacity decision).

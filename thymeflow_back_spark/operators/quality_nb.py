@@ -251,71 +251,6 @@ def nb_classify(
     )
 
 
-def save_nb_model(
-    weights: DataFrame, prior: DataFrame, path: str, n_buckets: int = QNB_BUCKETS
-) -> None:
-    """Persist a trained model as a JSON artifact (atomic publish: temp
-    file + os.replace, the save_merges discipline — a reader never sees a
-    torn model). The model IS the integer weight table plus the prior row
-    — at most ``n_buckets`` + 1 rows, bounded by construction, so the
-    driver collect is model-sized, never data-sized. Weights are quantized
-    BIGINTs, so the artifact is engine- and platform-exact."""
-    import json
-    import os
-    import uuid
-
-    w = {int(r["bucket"]): int(r["w_q"]) for r in weights.collect()}
-    p = prior.collect()[0]
-    payload = {
-        "format": "qnb-model",
-        "version": 1,
-        "n_buckets": n_buckets,
-        "prior_q": int(p["prior_q"]),
-        "unseen_q": int(p["unseen_q"]),
-        "n_pos_docs": int(p["n_pos_docs"]),
-        "n_neg_docs": int(p["n_neg_docs"]),
-        "pos_occ": int(p["pos_occ"]),
-        "neg_occ": int(p["neg_occ"]),
-        "weights": sorted(w.items()),
-    }
-    tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(payload, f)
-    os.replace(tmp, path)
-
-
-def load_nb_model(spark, path: str) -> tuple[DataFrame, DataFrame, int]:
-    """Load a model saved by :func:`save_nb_model`; returns
-    (weights, prior, n_buckets) in the exact shapes :func:`nb_classify`
-    consumes — serving from an artifact is bit-identical to serving from
-    the live training DataFrames (pytest pins the round trip)."""
-    import json
-
-    with open(path, encoding="utf-8") as f:
-        payload = json.load(f)
-    if payload.get("format") != "qnb-model":
-        raise ValueError(f"{path}: not a qnb-model artifact")
-    weights = spark.createDataFrame(
-        [(int(b), int(wq)) for b, wq in payload["weights"]],
-        "bucket bigint, w_q bigint",
-    )
-    prior = spark.createDataFrame(
-        [
-            (
-                payload["prior_q"],
-                payload["unseen_q"],
-                payload["n_pos_docs"],
-                payload["n_neg_docs"],
-                payload["pos_occ"],
-                payload["neg_occ"],
-            )
-        ],
-        "prior_q bigint, unseen_q bigint, n_pos_docs bigint, "
-        "n_neg_docs bigint, pos_occ bigint, neg_occ bigint",
-    )
-    return weights, prior, int(payload["n_buckets"])
-
-
 # --- Bernoulli NB variant -------------------------------------------------------
 #
 # Multinomial NB sums PRESENT-occurrence weights, so it cannot penalize a

@@ -43,13 +43,6 @@ def hash_uniform(key: Column, salt: str) -> Column:
     return hash_u32(key, salt) / F.lit(TWO_32)
 
 
-def bernoulli_sample(
-    df: DataFrame, key_col: str, rate: float, salt: str = "sample"
-) -> DataFrame:
-    """Keep each row iff hash_uniform(key) < rate — deterministic Bernoulli."""
-    return df.filter(hash_uniform(F.col(key_col), salt) < F.lit(rate))
-
-
 def stratified_sample(
     df: DataFrame,
     key_col: str,
@@ -125,33 +118,6 @@ def deterministic_shuffle(df: DataFrame, key_col: str, salt: str = "shuffle") ->
     with this ordering (range-partitioned sort at scale) materializes it.
     """
     return df.orderBy(hash_uniform(F.col(key_col), salt).asc(), F.col(key_col).asc())
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    key_col: str,
-    num_shards: int,
-    salt: str = "shuffle",
-) -> None:
-    """Materialize the reproducible shuffle as ordered parquet shards.
-
-    Rows are range-partitioned by the keyed hash uniform into
-    ``num_shards`` files and sorted within each shard, so shard i holds a
-    contiguous slice of the global shuffled order — a training loader reads
-    shards sequentially (or assigns them to workers) and sees the exact
-    permutation every run. One range shuffle + per-partition sort; no
-    global single-task sort.
-    """
-    u = hash_uniform(F.col(key_col), salt)
-    (
-        df.withColumn("__u", u)
-        .repartitionByRange(num_shards, F.col("__u"))
-        .sortWithinPartitions("__u", key_col)
-        .drop("__u")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def weighted_sample_n(

@@ -22,10 +22,7 @@ broadcast centroid matrix. Dedup then runs WITHIN each cell only:
      still-lower id (a chain 1~2, 2~3 with 1!~3 prunes both 2 and 3, and
      3's dup_of is the pruned 2) — this order-free rule is deterministic
      and oracle-replayable, but it is chain-pruning, not the paper's
-     greedy leader election (which would keep 3 above). Downstream
-     consumers that need every redirect to land on a KEEPER should pass
-     the result through ``resolve_representatives``, which collapses
-     dup_of chains to their root keeper.
+     greedy leader election (which would keep 3 above).
 
 Scores are rounded to SCORE_DECIMALS before the threshold compare, so the
 pipeline is bit-reproducible cross-engine (the DuckDB oracle replays
@@ -59,8 +56,7 @@ def semantic_dedup(
     ``keep`` is 1 for cluster representatives (no earlier same-cell vector
     within the cosine threshold), 0 for pruned semantic duplicates;
     ``dup_of`` is the lowest-id vector that shadows a pruned vector — it
-    may itself be pruned when chains occur (see module docstring; use
-    ``resolve_representatives`` to redirect to the root keeper) — and -1
+    may itself be pruned when chains occur (see module docstring) — and -1
     for keepers (sentinel instead of NULL so downstream anti-joins and
     the value-hash compare never meet a nullable id).
     """
@@ -96,36 +92,5 @@ def semantic_dedup(
             "cell",
             F.when(F.col("dup_of").isNull(), 1).otherwise(0).cast("int").alias("keep"),
             F.coalesce(F.col("dup_of"), F.lit(-1).cast("bigint")).alias("dup_of"),
-        )
-    )
-
-
-def resolve_representatives(dedup: DataFrame) -> DataFrame:
-    """Redirect every pruned vector's ``dup_of`` to its root KEEPER.
-
-    ``semantic_dedup``'s dup_of is the nearest (lowest-id) shadowing
-    vector, which under chain-pruning may itself be pruned. The pruned
-    rows and their dup_of pointers form a forest whose edges strictly
-    decrease in id (dup_of < vec_id always), so each tree's root — the
-    component minimum — is a keeper. Min-label connected components over
-    the pointer edges therefore collapses every chain to its keeper in
-    O(log chain-depth) rounds; chains are short in practice (cells are
-    bounded), so this converges immediately.
-    """
-    from .closure import connected_components
-
-    edges = dedup.filter(F.col("keep") == 0).select(
-        F.col("vec_id").alias("src"), F.col("dup_of").alias("dst")
-    )
-    roots = connected_components(edges).withColumnRenamed("component", "root")
-    return (
-        dedup.join(roots, dedup["vec_id"] == roots["node"], "left")
-        .select(
-            "vec_id",
-            "cell",
-            "keep",
-            F.when(F.col("keep") == 1, F.lit(-1).cast("bigint"))
-            .otherwise(F.coalesce(F.col("root"), F.col("dup_of")))
-            .alias("dup_of"),
         )
     )

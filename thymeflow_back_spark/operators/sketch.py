@@ -190,14 +190,6 @@ def hll_registers(df: DataFrame, col: str | Column) -> DataFrame:
     )
 
 
-def hll_merge(*sketches: DataFrame) -> DataFrame:
-    """Cell-wise max of register files — the lossless sketch union."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("register").agg(F.max("rho").alias("rho"))
-
-
 def hll_estimate_from_registers(registers: DataFrame) -> DataFrame:
     """One row (m, zeros, z, raw_est, est_distinct) from a register file.
 
@@ -239,36 +231,14 @@ def hll_estimate(df: DataFrame, col: str | Column) -> DataFrame:
 HIST_BUCKETS = 256
 
 
-def histogram_sketch(df: DataFrame, col: str | Column, n_buckets: int = HIST_BUCKETS) -> DataFrame:
-    """Equi-width histogram of a numeric column: rows (bucket, n).
-
-    The mergeable quantile story next to KMV (cardinality) and count-min
-    (frequency): given shared [lo, hi) bounds, per-partition/per-day bucket
-    counts combine by cell-wise SUM with zero loss, and any quantile is
-    answered from the n_buckets counters with error <= one bucket width —
-    the fixed-size alternative to a full sort when an exact rank pass
-    (queries/relational.py q_value_percentiles) is too expensive. Exact
-    t-digest/GK sketches trade this fixed error bound for adaptivity but
-    are merge-order-dependent; equi-width is the deterministic choice, so
-    any engine rebuilds the identical sketch.
-
-    Plan shape: one min/max aggregate (map-side combined), then a narrow
-    bucket projection joined against the broadcast one-row bounds, then one
-    keyed count — two scans, one sketch-sized shuffle.
-    """
-    _, bucketed = _bucketize(df, col, n_buckets)
-    return bucketed.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
-
-
 def _bucketize(
     df: DataFrame, col: str | Column, n_buckets: int
 ) -> tuple[DataFrame, DataFrame]:
     """(bounds, bucketed): the one-row (lo, w, nn) bounds relation and the
     per-value bucket assignment. The SINGLE definition of the bucket-edge
     arithmetic (w == 0 degenerate range -> bucket 0; floor((x-lo)/w) capped
-    at n_buckets-1 so x == hi lands in the last bucket) — histogram_sketch
-    and histogram_quantiles both build on it, so edge-handling can never
-    diverge between the sketch and the quantile path."""
+    at n_buckets-1 so x == hi lands in the last bucket), which
+    histogram_quantiles builds on."""
     c = (F.col(col) if isinstance(col, str) else col).cast("double")
     # NULLs out: they would inflate nn while landing in a NULL bucket,
     # so quantile targets could exceed the real cumulative count (missing

@@ -101,52 +101,6 @@ def unigram_vocab(
     )
 
 
-def save_unigram_vocab(vocab: DataFrame, path: str) -> None:
-    """Persist a trained vocabulary as a JSON artifact (atomic publish:
-    temp file + os.replace, the save_merges/save_nb_model discipline — a
-    reader never sees a torn model). The model IS the (piece, cnt, lp_q)
-    table — ≤ top + |alphabet| rows, bounded by construction, so the
-    driver collect is model-sized, never data-sized. Log-probs are
-    quantized BIGINT micro-nats, so the artifact is engine- and
-    platform-exact; a serving job segments without retraining (the BPE
-    save_merges contract applied to the unigram family)."""
-    import json
-    import os
-    import uuid
-
-    rows = sorted(
-        (r["piece"], int(r["cnt"]), int(r["lp_q"])) for r in vocab.collect()
-    )
-    payload = {"format": "unigram-vocab", "version": 1, "scale": UNI_SCALE,
-               "pieces": [list(r) for r in rows]}
-    tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(payload, f, ensure_ascii=False)
-    os.replace(tmp, path)
-
-
-def load_unigram_vocab(spark, path: str) -> DataFrame:
-    """Load a vocabulary saved by :func:`save_unigram_vocab`; returns
-    (piece, cnt, lp_q) in the exact shape :func:`viterbi_segment`
-    consumes — serving from an artifact is bit-identical to serving from
-    the live training DataFrame (pytest pins the round trip)."""
-    import json
-
-    with open(path, encoding="utf-8") as f:
-        payload = json.load(f)
-    if payload.get("format") != "unigram-vocab":
-        raise ValueError(f"{path}: not a unigram-vocab artifact")
-    if payload.get("scale") != UNI_SCALE:
-        raise ValueError(
-            f"{path}: quantization scale {payload.get('scale')} != "
-            f"engine scale {UNI_SCALE}"
-        )
-    return spark.createDataFrame(
-        [(p, int(c), int(lp)) for p, c, lp in payload["pieces"]],
-        "piece string, cnt bigint, lp_q bigint",
-    )
-
-
 def _viterbi_one(
     word: str, lp: dict[str, int], max_piece: int
 ) -> tuple[int, int, str] | None:

@@ -716,8 +716,7 @@ SEM_THRESHOLD = NEAR_DUP_THRESHOLD  # rounded-cosine prune radius
     "deterministic IVF quantizer (seeded + one Lloyd refinement), then "
     "prune any vector whose rounded cosine to a lower-id vector in the "
     "SAME cell clears the threshold (order-free chain-pruning; dup_of is "
-    "the nearest shadowing id — resolve_representatives collapses chains "
-    "to root keepers). The oracle replays quantizer AND in-cell pair scan, so "
+    "the nearest shadowing id). The oracle replays quantizer AND in-cell pair scan, so "
     "the pruning decision itself is value-checked. The only data-sized "
     "shuffle is the cell-keyed self-join; per-cell pair work is bounded "
     "by n_cells (operators/semdedup.py).",

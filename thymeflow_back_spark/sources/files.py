@@ -66,16 +66,14 @@ def _iter_artifacts(path: str, content: bytes) -> Iterator[tuple[str, bytes]]:
         yield path, content
 
 
-def convert_to_quads(files: DataFrame, extra: dict[str, Converter] | None = None) -> DataFrame:
+def convert_to_quads(files: DataFrame) -> DataFrame:
     """binaryFile DataFrame → quads via extension-dispatched converters.
 
     Unknown extensions are skipped (the reference logs-and-ignores too).
     Converters run per-partition inside mapInPandas; each batch's Python cost
     is amortized over many files via Arrow transfer.
     """
-    registry = dict(_registry())
-    if extra:
-        registry.update(extra)
+    registry = _registry()
 
     def convert(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

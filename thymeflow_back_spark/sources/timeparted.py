@@ -8,8 +8,8 @@ verified on q_regional_revenue's orders scan, round 6), so no row-group
 min/max skipping happens: at 100 TB a two-year predicate on the time
 dimension still READS every row group, filtering rows after decode.
 
-The engine-level answer is the same write-once idiom as the IVF cell index
-(operators/ivf.py's ``ivf_write_index``): pay one full scan to materialize a DERIVED layout
+The engine-level answer is the same idiom as the streaming IVF index's
+cell-partitioned base (streaming/ivf_stream.py): pay one full scan to materialize a DERIVED layout
 partitioned by a calendar bucket of the timestamp, after which every
 time-ranged query prunes whole partition DIRECTORIES at planning time —
 ``.explain`` shows the range on the partition column under
@@ -58,11 +58,10 @@ def publish_once(path: str, write_fn) -> None:
     exactly one rename wins, and a loser (rename fails because the target
     now exists) detects the winner's committed ``_SUCCESS`` and discards
     its own copy — the published path never holds a torn layout. POSIX
-    rename semantics (derived layouts live on local disk); the Hadoop-FS
-    variant of the same idiom is streaming/dedup_stream.py's
-    compact_index swap. A pre-existing target WITHOUT ``_SUCCESS`` can
-    only be residue from a non-atomic writer crash — refused with a
-    clean-up message rather than silently clobbered."""
+    rename semantics (derived layouts live on local disk). A pre-existing
+    target WITHOUT ``_SUCCESS`` can only be residue from a non-atomic
+    writer crash — refused with a clean-up message rather than silently
+    clobbered."""
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return
     tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"

@@ -37,10 +37,10 @@ VERBATIM, and edge->batch assignment cannot matter (components are
 order-free; no staging-mtime sensitivity).
 
 Lifecycle: accreted batch partitions fold into a ``base-<F>``
-generation via :func:`compact_cc_state` (the ivf_stream/upsert_dedup
-compaction discipline: latest row per node, original batch_id kept as a
-data column, parquet ``_SUCCESS`` commit point, crash-safe sweep and
-cleanup, fresh-checkpoint replay guard).
+generation via :func:`compact_cc_state` (the ivf_stream compaction
+discipline, on upsert_dedup's generation helpers: latest row per node,
+original batch_id kept as a data column, parquet ``_SUCCESS`` commit
+point, crash-safe sweep and cleanup, fresh-checkpoint replay guard).
 """
 
 from __future__ import annotations
@@ -275,11 +275,6 @@ def compact_cc_state(spark: SparkSession, state_dir: str) -> dict[str, int]:
     _sweep_uncommitted_bases(spark, state_dir)
     fold = _side_fold(spark, state_dir)
     live_b = _live_batches(spark, state_dir, fold)
-    if any(b < 0 for b in live_b):
-        raise RuntimeError(
-            f"streaming components state at {state_dir} contains negative "
-            "batch_id partitions; cannot version-fold them"
-        )
     if not live_b:
         if fold is not None:
             _cleanup_folded(spark, state_dir, fold)

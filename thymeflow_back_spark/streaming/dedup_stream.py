@@ -146,9 +146,9 @@ def process_batch(
     # about to be dynamically overwritten) — otherwise a retried batch
     # joins against its own half-written bands and emits self-pairs.
     # Partitions from OTHER batches must agree between bands/ and
-    # docs/: a mismatch means a crashed compaction swap (which removes
-    # a whole directory), and proceeding would either forget the
-    # corpus or verify against a missing shingle store.
+    # docs/: a mismatch means another batch crashed between its index
+    # writes, and proceeding would either forget the corpus or verify
+    # against a missing shingle store.
     spark = batch.sparkSession
     bands_prev = _foreign_batch_ids(spark, bands_dir, batch_id)
     docs_prev = _foreign_batch_ids(spark, docs_dir, batch_id)
@@ -156,8 +156,8 @@ def process_batch(
         raise RuntimeError(
             f"near-dup index at {index_dir} is incomplete: bands has "
             f"batches {sorted(bands_prev)} but docs has "
-            f"{sorted(docs_prev)} (interrupted compaction?); run "
-            f"compact_index to recover"
+            f"{sorted(docs_prev)} (interrupted write?); rerun the "
+            f"interrupted batch from its checkpoint to repair it"
         )
     batch = batch.localCheckpoint(eager=True)
 
@@ -223,109 +223,3 @@ def process_batch(
     write(bands, bands_dir, "band")
     write(docs_sh, docs_dir)
     write(pairs, pairs_dir)
-
-
-COMPACTED_BATCH_ID = -1  # compacted data lives under batch_id=-1
-
-
-def compact_index(spark, index_dir: str, files_per_band: int = 1) -> dict[str, int]:
-    """Rewrite the per-batch parquet band index into few large files.
-
-    Every micro-batch writes its own batch_id partition; after N batches
-    the band join pays N-file open overhead per bucket. Compaction folds
-    all batches into the reserved ``batch_id=-1`` partition (keeping the
-    directory layout the batch writer uses, so reads and future batch
-    writes are oblivious) and swaps directories. The swap is two renames —
-    not atomic for a concurrent reader, so run compaction while the stream
-    is quiescent; a CRASH between the renames is recoverable and detected:
-    the batch processor refuses a half-present index, and calling
-    compact_index again first restores the stranded ``.old`` copy.
-
-    Refuses when bands/ and docs/ disagree on which batch ids are present:
-    that means a batch crashed between its two index writes, and folding
-    the one-sided partition into ``batch_id=-1`` would permanently erase
-    the mismatch the batch processor's retry guard depends on — the folded
-    bands would then candidate-join against documents whose shingle sets
-    were never written, silently dropping every such pair. A mismatch
-    heals itself when the streaming checkpoint retries the crashed batch
-    (its partitions are dynamically overwritten); compact after that.
-    The OTHER mismatch shape — one side already folded to batch_id=-1,
-    the other still per-batch — is compaction's own phase crash (bands
-    compacts before docs) and is resumed, not refused: rerun compacts
-    the remaining side.
-
-    Returns {"bands": n_rows, "docs": n_rows} for audit logging (only the
-    sides folded by THIS call appear).
-    """
-    # crash recovery FIRST, for both directories: a stranded .old means the
-    # previous swap died between renames — restore it; a stranded .compact
-    # is garbage. Recovery must precede the consistency listing below,
-    # because restoring .old changes which batch ids are visible.
-    for name in ("bands", "docs"):
-        src = posixpath.join(index_dir, name)
-        fs, jsrc = _hadoop_fs(spark, src)
-        jtmp, jold = (
-            spark._jvm.org.apache.hadoop.fs.Path(p)
-            for p in (src + ".compact", src + ".old")
-        )
-        if fs.exists(jold):
-            if fs.exists(jsrc):
-                fs.delete(jold, True)
-            else:
-                fs.rename(jold, jsrc)
-        if fs.exists(jtmp):
-            fs.delete(jtmp, True)
-    band_ids = _batch_ids(spark, posixpath.join(index_dir, "bands"))
-    doc_ids = _batch_ids(spark, posixpath.join(index_dir, "docs"))
-    comp = {COMPACTED_BATCH_ID}
-    # A mismatch is RESUMABLE when one side already folded to {-1} and the
-    # other still holds only pre-compaction batch ids: that is precisely a
-    # compaction that crashed between its two per-directory phases (the
-    # check below ensured both sides agreed before the first swap), and
-    # rerunning must finish the remaining side — refusing here would wedge
-    # the index forever (process_batch refuses the same mismatch and the
-    # stream has no crashed batch to retry).
-    resumable = (band_ids == comp and doc_ids and COMPACTED_BATCH_ID not in doc_ids) or (
-        doc_ids == comp and band_ids and COMPACTED_BATCH_ID not in band_ids
-    )
-    if band_ids != doc_ids and not resumable:
-        raise RuntimeError(
-            f"near-dup index at {index_dir} is incomplete: bands has "
-            f"batches {sorted(band_ids)} but docs has {sorted(doc_ids)} "
-            f"(a batch crashed mid-write?); let the stream retry the "
-            f"crashed batch, then compact"
-        )
-    ids = {"bands": band_ids, "docs": doc_ids}
-    counts: dict[str, int] = {}
-    for name, extra_parts in (("bands", ("band",)), ("docs", ())):
-        src = posixpath.join(index_dir, name)
-        tmp, old = src + ".compact", src + ".old"
-        # All directory checks/renames go through the Hadoop FS of the
-        # index's own URI — a remote index (hdfs:, s3a:) compacts the same
-        # as a local one. Rename destinations never pre-exist here, so
-        # Hadoop's move-into-existing-dir rename quirk cannot trigger.
-        fs, jsrc = _hadoop_fs(spark, src)
-        jtmp, jold = (spark._jvm.org.apache.hadoop.fs.Path(p) for p in (tmp, old))
-        my_ids = ids[name]
-        if not fs.exists(jsrc) or not my_ids or my_ids == comp:
-            # already fully compacted (the resume case, or a second
-            # compact call): nothing to fold for this side
-            continue
-        # enumerate the committed batch partitions explicitly (same
-        # discipline as process_batch's read_prev): a root read could touch
-        # a truncated footer left under a stray non-partition path
-        paths = [posixpath.join(src, f"batch_id={b}") for b in sorted(my_ids)]
-        df = spark.read.option("basePath", src).parquet(*paths)
-        counts[name] = df.count()
-        folded = df.withColumn("batch_id", F.lit(COMPACTED_BATCH_ID))
-        if extra_parts:
-            folded = folded.repartition(files_per_band, *extra_parts)
-        else:
-            folded = folded.coalesce(max(files_per_band, 1))
-        folded.write.partitionBy("batch_id", *extra_parts).mode("overwrite").parquet(tmp)
-        if not fs.rename(jsrc, jold):
-            raise RuntimeError(f"compact_index: rename {src} -> {old} failed")
-        if not fs.rename(jtmp, jsrc):
-            raise RuntimeError(f"compact_index: rename {tmp} -> {src} failed")
-        fs.delete(jold, True)
-    return counts

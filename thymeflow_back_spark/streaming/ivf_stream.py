@@ -27,8 +27,7 @@ incrementally, the production vector-database pattern:
 
 Lifecycle: a long-running stream accretes one partition per batch, and
 the version lookup over raw batches is O(accreted index) per search.
-:func:`compact_ivf_index` (run quiescent, the upsert_dedup compaction
-discipline) folds each id's LATEST-version entry into a ``base-<F>``
+:func:`compact_ivf_index` (run quiescent) folds each id's LATEST-version entry into a ``base-<F>``
 generation partitioned by cell only — original batch ids preserved as a
 data column, so the version relation is bit-identical. After a fold the
 current view splits exactly:
@@ -46,8 +45,7 @@ only version state consulted corpus-wide is the (small) live tail.
 Commit point is the base write's own parquet ``_SUCCESS``; covered batch
 partitions and older bases are deleted only after it lands, a crashed
 partial base is swept by the next run, and a checkpoint replay of an
-already-folded batch no-ops behind a fresh-checkpoint misuse check (the
-upsert_dedup replay guard).
+already-folded batch no-ops behind a fresh-checkpoint misuse check.
 
 Correctness identity: with the quantizer fixed, the current view's
 top-k equals batch IVF over the latest-version corpus with the same
@@ -225,9 +223,8 @@ def process_ivf_batch(
         # genuinely-folded batch's ids ALL exist in the store; any absent
         # id proves this batch never ran. NECESSARY but not SUFFICIENT: a
         # fresh-checkpoint batch that only RE-delivers ids already in the
-        # compacted index passes this check and is dropped as a replay —
-        # the same residual hazard as upsert_dedup's guard; reuse the
-        # original checkpointLocation to avoid it entirely.
+        # compacted index passes this check and is dropped as a replay;
+        # reuse the original checkpointLocation to avoid it entirely.
         store_ids = current_ivf_entries(spark, index_dir).select(
             F.col("c_id").alias(id_col)
         )
@@ -278,8 +275,7 @@ def compact_ivf_index(spark: SparkSession, index_dir: str) -> dict[str, int]:
     current view and every emitted search result are unchanged (pinned
     by test_ivf_stream.py). Run while the stream is quiescent.
 
-    Crash safety (the compact_upsert_index discipline, single-sided):
-    the commit point is the base write's own parquet ``_SUCCESS``; a
+    Crash safety: the commit point is the base write's own parquet ``_SUCCESS``; a
     partial write lacks it, is ignored by readers, and is swept by the
     next run; covered batch partitions and older bases are deleted only
     after the commit; a rerun after any crash point resumes
@@ -292,11 +288,6 @@ def compact_ivf_index(spark: SparkSession, index_dir: str) -> dict[str, int]:
     _sweep_uncommitted_bases(spark, cells_dir)
     fold = _side_fold(spark, cells_dir)
     live_b = _live_batches(spark, cells_dir, fold)
-    if any(b < 0 for b in live_b):
-        raise RuntimeError(
-            f"streaming IVF index at {index_dir} contains negative "
-            "batch_id partitions; cannot version-fold them"
-        )
     if not live_b:
         if fold is not None:
             # a crash between a committed fold and its cleanup leaves
@@ -377,8 +368,8 @@ def current_ivf_topk(
     compute from the committed quantizer, the cell predicate prunes the
     base scan's partitions BEFORE the version join (the only corpus-wide
     version state is the live tail — see :func:`current_ivf_entries`),
-    exact cosine on the survivors; self-matches excluded (the
-    ivf_probe_index contract)."""
+    exact cosine on the survivors; self-matches excluded (as in
+    ``ivf_topk``)."""
     cents = load_stream_centroids(spark, index_dir)
     if cents is None:
         raise RuntimeError(f"no committed quantizer under {index_dir}")

@@ -33,18 +33,11 @@ projection inside the read-side view.
 
 Write discipline is dedup_stream's: every sink partitioned by batch_id
 with dynamic overwrite, so a retried batch rewrites its own partitions.
+The index is not compacted: it holds one partition per batch per sink.
 
-Lifecycle: a long-running stream accretes one partition per batch per
-sink. :func:`compact_upsert_index` (run quiescent) folds each id's
-LATEST-version docs/bands entries — original batch ids preserved as a
-data column, so the version relation is bit-identical — into a
-``base-<F>`` generation per side, and optionally folds the pairs log to
-its both-endpoints-live survivors. Commit point per side is the parquet
-``_SUCCESS``; docs fold before bands, readers use the min committed
-generation, cleanup runs only after both sides commit, and every crash
-point resumes deterministically. Batches write pairs BEFORE the index
-sides so a checkpoint replay of an already-folded batch can no-op
-without losing pairs.
+The ``base-<F>`` generation helpers below (commit by the write's own
+``_SUCCESS``, sweep, cleanup) are the compaction protocol that the
+connected-components and IVF stream jobs share.
 """
 
 from __future__ import annotations
@@ -119,56 +112,14 @@ def _side_fold(spark, side_dir: str) -> int | None:
     return max(committed) if committed else None
 
 
-def _index_fold(spark, docs_dir: str, bands_dir: str) -> int | None:
-    """The index's effective fold point: the max generation committed on
-    BOTH sides. Compaction writes docs' base before bands', so after a
-    mid-compaction crash docs may be one generation ahead — the common
-    (older) generation is still fully readable on both sides because old
-    bases and folded batch partitions are deleted only after both sides
-    commit."""
-    fd = _side_fold(spark, docs_dir)
-    fb = _side_fold(spark, bands_dir)
-    if fd is None or fb is None:
+def _read_side(spark, side_dir: str, batches: set[int]) -> DataFrame | None:
+    """The given batch_id partitions of a side, batch_id recovered from the
+    partition dirs. None when there are none."""
+    if not batches:
         return None
-    return min(fd, fb)
-
-
-def _live_batch_ids(spark, side_dir: str, fold: int | None) -> set[int]:
-    """batch_id partitions under a side that the fold point does NOT
-    cover (fold=None covers nothing)."""
-    ids = _batch_ids(spark, side_dir)
-    if fold is None:
-        return ids
-    return {b for b in ids if b > fold}
-
-
-def _read_side(
-    spark,
-    side_dir: str,
-    fold: int | None,
-    batches: set[int],
-) -> DataFrame | None:
-    """Unified read of a side: the committed ``base-<fold>`` (batch_id is
-    a DATA column there — compaction preserves each surviving entry's
-    original version) unioned with the still-live batch_id partitions
-    (batch_id recovered from the partition dirs). None when the side holds
-    nothing at all."""
-    parts: list[DataFrame] = []
-    if fold is not None:
-        base = spark.read.parquet(posixpath.join(side_dir, f"base-{fold}"))
-        parts.append(base.withColumn("batch_id", F.col("batch_id").cast("long")))
-    if batches:
-        paths = [
-            posixpath.join(side_dir, f"batch_id={b}") for b in sorted(batches)
-        ]
-        df = spark.read.option("basePath", side_dir).parquet(*paths)
-        parts.append(df.withColumn("batch_id", F.col("batch_id").cast("long")))
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    paths = [posixpath.join(side_dir, f"batch_id={b}") for b in sorted(batches)]
+    df = spark.read.option("basePath", side_dir).parquet(*paths)
+    return df.withColumn("batch_id", F.col("batch_id").cast("long"))
 
 
 def run_upsert_near_dup(
@@ -221,69 +172,15 @@ def process_upsert_batch(
     if batch.isEmpty():
         return
     spark = batch.sparkSession
-    fold = _index_fold(spark, docs_dir, bands_dir)
-    prev = _live_batch_ids(spark, docs_dir, fold) - {batch_id}
-    bands_prev = _live_batch_ids(spark, bands_dir, fold) - {batch_id}
+    prev = _batch_ids(spark, docs_dir) - {batch_id}
+    bands_prev = _batch_ids(spark, bands_dir) - {batch_id}
     if bands_prev != prev:
         raise RuntimeError(
             f"upsert near-dup index at {index_dir} is incomplete: bands "
             f"has batches {sorted(bands_prev)} but docs has "
-            f"{sorted(prev)} (interrupted write?)"
+            f"{sorted(prev)} (interrupted write?); rerun the interrupted "
+            "batch from its checkpoint to repair it"
         )
-    if any(b < 0 for b in prev):
-        # compact_index folds every partition to batch_id=-1, which
-        # destroys the version information this job's liveness checks and
-        # read-side supersession depend on — refuse loudly instead of
-        # silently emptying the current view / reviving stale entries.
-        # (compact_upsert_index is the version-AWARE op for this index.)
-        raise RuntimeError(
-            f"upsert near-dup index at {index_dir} contains compacted "
-            "(batch_id=-1) partitions; compact_index is the APPEND-ONLY "
-            "job's maintenance op and is incompatible with a versioned "
-            "upsert index"
-        )
-    if fold is not None and batch_id <= fold:
-        # a checkpoint replay of a batch the compaction already folded:
-        # its completed write is inside base-<fold>, and readers ignore
-        # batch partitions <= fold, so re-emitting index rows or pairs
-        # would be wasted (and the pair emits would duplicate). Before
-        # no-opping, distinguish a genuine replay from MISUSE: restarting
-        # the stream against a compacted index with a FRESH checkpoint
-        # restarts batch ids at 0, and treating those as replays would
-        # silently drop data. Compaction keeps every id's latest version,
-        # so a genuinely-folded batch's ids ALL exist in the docs store;
-        # any absent id proves this batch never ran. NECESSARY but not
-        # SUFFICIENT: a fresh-checkpoint batch that only RE-delivers ids
-        # already in the compacted store passes this check and is dropped
-        # as a replay, silently losing those updates — content is not
-        # compared (a text-hash check would catch it at the cost of
-        # reading the store's text column on this path). Reuse the
-        # original checkpointLocation to avoid the hazard entirely. The
-        # check is one anti-join of the (micro-batch-sized) id set
-        # against the store's pruned id column, paid only on this rare
-        # replay path.
-        store = _read_side(spark, docs_dir, fold, prev)
-        missing = (
-            batch.select(F.col(id_col))
-            .distinct()
-            .join(store.select(id_col).distinct(), id_col, "left_anti")
-            .limit(1)
-            .count()
-        )
-        if missing:
-            raise RuntimeError(
-                f"batch {batch_id} <= fold {fold} at {index_dir} contains "
-                f"ids absent from the compacted index: this is not a "
-                f"checkpoint replay of a folded batch but a NEW stream "
-                f"started with a fresh checkpoint against a compacted "
-                f"index (batch ids restarted at 0). Reuse the original "
-                f"checkpointLocation, or point the new stream at a fresh "
-                f"index_dir/pairs_dir. (Caveat: an update-only fresh "
-                f"batch — every id already indexed — cannot be told "
-                f"apart from a replay and would be silently dropped.)"
-            )
-        return
-
     # deterministic within-batch last-writer: at most one row per id
     # (double delivery inside one micro-batch has no order, so collapse
     # by max(text) — any pure function works as long as both engines
@@ -311,10 +208,10 @@ def process_upsert_batch(
         F.lit(batch_id).cast("long").alias("b_ver"),
     )
 
-    if prev or fold is not None:
+    if prev:
         cur_ids = batch.select(F.col(id_col).alias("a_id"))
         old_bands = (
-            _read_side(spark, bands_dir, fold, prev)
+            _read_side(spark, bands_dir, prev)
             .withColumnRenamed(id_col, "a_id")
             # (a) re-delivered THIS batch: old bands stale, new text
             # already joined within-batch
@@ -335,7 +232,7 @@ def process_upsert_batch(
         # the docs store's id+batch projection (columns only — the scan
         # prunes to two columns; the semi join bounds the aggregate to
         # candidate ids)
-        old_docs = _read_side(spark, docs_dir, fold, prev)
+        old_docs = _read_side(spark, docs_dir, prev)
         latest = (
             old_docs.select(F.col(id_col).alias("a_id"), "batch_id")
             .join(
@@ -385,59 +282,36 @@ def process_upsert_batch(
             .parquet(path)
         )
 
-    # pairs FIRST: the folded-batch replay no-op above is safe only if
-    # "docs+bands have batch N" implies "batch N's pairs were written" —
-    # compaction can then never fold a batch whose pairs are missing. A
-    # crash after pairs but before the index writes is healed by the
-    # checkpoint replay (batch N stays > fold, dynamic overwrite rewrites
-    # its own partitions); a crash between bands and docs is caught by the
-    # interrupted-write check and heals the same way.
+    # A crash between these writes is healed by the checkpoint replay
+    # (dynamic overwrite rewrites the batch's own partitions); a crash
+    # between bands and docs is caught by the interrupted-write check above
+    # and heals the same way.
     write(pairs, pairs_dir)
     write(bands, bands_dir, "band")
     write(docs_sh, docs_dir)
 
 
 def _read_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame | None:
-    """Read the pairs log — the committed ``base-<F>`` generation (written
-    by compact_upsert_index's pairs fold) plus the live batch_id
-    partitions — tolerating the all-empty-batches layout: if every batch
-    so far emitted zero pairs, the partitioned writes leave only _SUCCESS
-    markers (no parquet footers) and a bare read fails with an
-    unable-to-infer-schema error — signal "no pairs" with None so the
-    caller can build an empty result typed from the docs store."""
-    fold = _side_fold(spark, pairs_dir)
-    live = _live_batch_ids(spark, pairs_dir, fold)
-    parts: list[DataFrame] = []
-    if fold is not None and _has_parquet_files(
-        spark, posixpath.join(pairs_dir, f"base-{fold}")
-    ):
-        parts.append(
-            spark.read.parquet(posixpath.join(pairs_dir, f"base-{fold}"))
+    """Read the pairs log's batch_id partitions, tolerating the
+    all-empty-batches layout: if every batch so far emitted zero pairs, the
+    partitioned writes leave only _SUCCESS markers (no parquet footers) and
+    a bare read fails with an unable-to-infer-schema error — signal "no
+    pairs" with None so the caller can build an empty result typed from the
+    docs store."""
+    # a zero-pair batch's dynamic-overwrite write leaves only _SUCCESS
+    # (no parquet footers) under its batch_id= dir — include only dirs
+    # that hold data files, so schema inference never fails and a
+    # GENUINE IO/corruption error still surfaces from the read itself
+    paths = [
+        p
+        for b in sorted(_batch_ids(spark, pairs_dir))
+        if _has_parquet_files(
+            spark, p := posixpath.join(pairs_dir, f"batch_id={b}")
         )
-    if live:
-        # a zero-pair batch's dynamic-overwrite write leaves only _SUCCESS
-        # (no parquet footers) under its batch_id= dir — include only dirs
-        # that hold data files, so schema inference never fails and a
-        # GENUINE IO/corruption error still surfaces from the read itself
-        paths = [
-            p
-            for b in sorted(live)
-            if _has_parquet_files(
-                spark, p := posixpath.join(pairs_dir, f"batch_id={b}")
-            )
-        ]
-        if paths:
-            parts.append(
-                spark.read.option("basePath", pairs_dir)
-                .parquet(*paths)
-                .drop("batch_id")
-            )
-    if not parts:
+    ]
+    if not paths:
         return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return spark.read.option("basePath", pairs_dir).parquet(*paths).drop("batch_id")
 
 
 def current_near_dups(
@@ -451,19 +325,7 @@ def current_near_dups(
     store derives the version relation; stale pairs vanish without any
     retraction write."""
     docs_dir = posixpath.join(index_dir, "docs")
-    bands_dir = posixpath.join(index_dir, "bands")
-    fold = _index_fold(spark, docs_dir, bands_dir)
-    live = _live_batch_ids(spark, docs_dir, fold)
-    if any(b < 0 for b in live):
-        # a compact_index-folded (batch_id=-1) store has lost its version
-        # information — latest would collapse to -1 and every stored pair
-        # would be dropped (compact_upsert_index preserves versions and is
-        # read here transparently via the base-<F> generation)
-        raise RuntimeError(
-            f"upsert near-dup index at {index_dir} contains compacted "
-            "partitions; the versioned view cannot be derived"
-        )
-    store = _read_side(spark, docs_dir, fold, live)
+    store = _read_side(spark, docs_dir, _batch_ids(spark, docs_dir))
     if store is None:
         raise RuntimeError(f"upsert near-dup index at {index_dir} is empty")
     latest = (
@@ -515,7 +377,7 @@ def _sweep_uncommitted_bases(spark, side_dir: str) -> None:
 def _cleanup_folded(spark, side_dir: str, target: int) -> None:
     """Drop state the committed ``base-<target>`` generation covers: older
     base generations and batch_id partitions <= target. Runs only after
-    BOTH sides committed target, so a crash mid-cleanup leaves extra (but
+    ``base-<target>`` committed, so a crash mid-cleanup leaves extra (but
     ignored) directories, never missing data."""
     for gen in _committed_bases(spark, side_dir):
         if gen < target:
@@ -523,226 +385,3 @@ def _cleanup_folded(spark, side_dir: str, target: int) -> None:
     for b in _batch_ids(spark, side_dir):
         if b <= target:
             _delete_path(spark, posixpath.join(side_dir, f"batch_id={b}"))
-
-
-def _fold_sides(
-    spark,
-    docs_dir: str,
-    bands_dir: str,
-    fold: int | None,
-    batches: set[int],
-    target: int,
-    *,
-    id_col: str,
-    docs_done: bool,
-) -> dict[str, int]:
-    """Write ``base-<target>`` for both sides (docs first — the recovery
-    invariant is docs_fold >= bands_fold). The latest-version map comes
-    from the docs store; every surviving entry keeps its ORIGINAL
-    batch_id as a data column, so read-side supersession (max batch per
-    id vs the pairs' emit versions) is unchanged by compaction."""
-    stats = {"docs": 0, "bands": 0}
-    if docs_done:
-        # resume: docs/base-<target> is committed, its rows ARE the
-        # latest map (one row per id at its latest version)
-        docs_new = spark.read.parquet(
-            posixpath.join(docs_dir, f"base-{target}")
-        ).withColumn("batch_id", F.col("batch_id").cast("long"))
-    else:
-        docs_all = _read_side(spark, docs_dir, fold, batches)
-        latest = docs_all.groupBy(F.col(id_col).alias("__id")).agg(
-            F.max("batch_id").alias("__latest")
-        )
-        docs_new = (
-            docs_all.join(latest, F.col(id_col) == F.col("__id"))
-            .filter(F.col("batch_id") == F.col("__latest"))
-            .drop("__id", "__latest")
-        )
-        docs_new.write.mode("overwrite").parquet(
-            posixpath.join(docs_dir, f"base-{target}")
-        )
-        stats["docs"] = spark.read.parquet(
-            posixpath.join(docs_dir, f"base-{target}")
-        ).count()
-    latest = docs_new.select(
-        F.col(id_col).alias("__id"), F.col("batch_id").alias("__latest")
-    )
-    bands_fold = _side_fold(spark, bands_dir)
-    bands_batches = {
-        b for b in _live_batch_ids(spark, bands_dir, bands_fold) if b <= target
-    }
-    bands_all = _read_side(spark, bands_dir, bands_fold, bands_batches)
-    bands_new = (
-        bands_all.join(latest, F.col(id_col) == F.col("__id"))
-        .filter(F.col("batch_id") == F.col("__latest"))
-        .drop("__id", "__latest")
-    )
-    bands_new.write.partitionBy("band").mode("overwrite").parquet(
-        posixpath.join(bands_dir, f"base-{target}")
-    )
-    stats["bands"] = spark.read.parquet(
-        posixpath.join(bands_dir, f"base-{target}")
-    ).count()
-    return stats
-
-
-def compact_upsert_index(
-    spark: SparkSession,
-    index_dir: str,
-    id_col: str = "doc_id",
-    pairs_dir: str | None = None,
-) -> dict[str, int]:
-    """Version-AWARE compaction of the upsert near-dup index.
-
-    The append-only job's ``compact_index`` folds everything to
-    ``batch_id=-1``, which destroys the version information this index's
-    read-side supersession depends on (process_upsert_batch refuses such
-    an index). This op instead folds each id's LATEST-version docs/bands
-    entries into a ``base-<F>`` generation directory, keeping every
-    surviving entry's original batch_id as a data column — so
-    ``max(batch_id) per id`` (the version relation) is bit-identical
-    before and after, and the current pair view is unchanged. Superseded
-    versions are dropped, and the per-batch partition count resets, fixing
-    the unbounded-accretion lifecycle gap (a long-running upsert stream
-    otherwise accretes one partition per batch forever).
-
-    Crash safety (run while the stream is quiescent, like compact_index):
-
-    - the commit point per side is the parquet write's own ``_SUCCESS``
-      in ``base-<F>``; partial writes lack it, are ignored by readers,
-      and are swept by the next run,
-    - docs' base is written before bands', so docs_fold >= bands_fold
-      always; readers use the min committed generation, under which both
-      sides are complete (old bases and folded batch partitions are
-      deleted only AFTER both sides commit),
-    - a rerun after any crash point resumes deterministically: the
-      latest-version map is a pure function of the surviving store, so
-      the resumed bands fold writes byte-identical content.
-
-    When ``pairs_dir`` is given, the pairs log is folded too (after the
-    index sides commit): only pairs BOTH of whose endpoints are at their
-    latest versions survive into ``pairs/base-<F>`` — safe because
-    liveness (``ver == latest``) can never return once lost (latest only
-    grows; a re-matching update re-EMITS the pair at its new version), so
-    dropped pairs are dead forever. A zero-survivor fold writes no base
-    (the read side treats a footerless generation as empty).
-
-    Returns {"docs": rows, "bands": rows, "pairs": rows} folded by THIS
-    call ("pairs" only when pairs_dir is given).
-    """
-    docs_dir = posixpath.join(index_dir, "docs")
-    bands_dir = posixpath.join(index_dir, "bands")
-    # sweep crashed partial base writes (no _SUCCESS)
-    for side in (docs_dir, bands_dir):
-        _sweep_uncommitted_bases(spark, side)
-    stats = {"docs": 0, "bands": 0}
-    # resume a docs-committed / bands-missing generation first
-    fd = _side_fold(spark, docs_dir)
-    fb = _side_fold(spark, bands_dir)
-    if fd is not None and (fb is None or fb < fd):
-        s = _fold_sides(
-            spark, docs_dir, bands_dir, fb, set(), fd,
-            id_col=id_col, docs_done=True,
-        )
-        stats["bands"] += s["bands"]
-        for side in (docs_dir, bands_dir):
-            _cleanup_folded(spark, side, fd)
-    # fresh fold over whatever live batches remain
-    fold = _index_fold(spark, docs_dir, bands_dir)
-    live_docs = _live_batch_ids(spark, docs_dir, fold)
-    live_bands = _live_batch_ids(spark, bands_dir, fold)
-    if live_docs != live_bands:
-        raise RuntimeError(
-            f"upsert near-dup index at {index_dir} is incomplete: bands "
-            f"has batches {sorted(live_bands)} but docs has "
-            f"{sorted(live_docs)} (interrupted write?) — let the streaming "
-            "checkpoint retry the crashed batch, then compact"
-        )
-    if any(b < 0 for b in live_docs):
-        raise RuntimeError(
-            f"upsert near-dup index at {index_dir} contains append-only "
-            "compacted (batch_id=-1) partitions; cannot version-fold them"
-        )
-    if not live_docs:
-        if fold is not None:
-            for side in (docs_dir, bands_dir):
-                _cleanup_folded(spark, side, fold)
-            if pairs_dir is not None:
-                stats["pairs"] = _fold_pairs(
-                    spark, index_dir, pairs_dir, fold, id_col
-                )
-        return stats
-    target = max(live_docs)
-    s = _fold_sides(
-        spark, docs_dir, bands_dir, fold, live_docs, target,
-        id_col=id_col, docs_done=False,
-    )
-    stats["docs"] += s["docs"]
-    stats["bands"] += s["bands"]
-    for side in (docs_dir, bands_dir):
-        _cleanup_folded(spark, side, target)
-    if pairs_dir is not None:
-        stats["pairs"] = _fold_pairs(spark, index_dir, pairs_dir, target, id_col)
-    return stats
-
-
-def _fold_pairs(
-    spark: SparkSession,
-    index_dir: str,
-    pairs_dir: str,
-    target: int,
-    id_col: str,
-) -> int:
-    """Fold the pairs log through generation ``target``: keep only pairs
-    whose BOTH endpoints are at their latest versions (the current view's
-    survivors — stale pairs are dead forever, see compact_upsert_index).
-    Runs strictly AFTER the index fold commits, so the latest map read
-    here already reflects generation ``target``. Writes
-    ``pairs/base-<target>`` unless zero pairs survive (a footerless
-    write is unreadable; the read side treats "no base" as empty), then
-    drops the covered batch partitions and older pair bases."""
-    _sweep_uncommitted_bases(spark, pairs_dir)
-    fold_p = _side_fold(spark, pairs_dir)
-    if fold_p is not None and fold_p >= target:
-        # already folded through target — but a crash between the fold's
-        # commit and its cleanup can leave covered dirs behind; sweep them
-        _cleanup_folded(spark, pairs_dir, fold_p)
-        return 0
-    pairs = _read_pairs(spark, pairs_dir)
-    n = 0
-    if pairs is not None:
-        docs_dir = posixpath.join(index_dir, "docs")
-        bands_dir = posixpath.join(index_dir, "bands")
-        fold_i = _index_fold(spark, docs_dir, bands_dir)
-        store = _read_side(
-            spark, docs_dir, fold_i, _live_batch_ids(spark, docs_dir, fold_i)
-        )
-        latest = store.groupBy(F.col(id_col).alias("id")).agg(
-            F.max("batch_id").alias("latest")
-        )
-        la = latest.select(
-            F.col("id").alias("a_id"), F.col("latest").alias("__la")
-        )
-        lb = latest.select(
-            F.col("id").alias("b_id"), F.col("latest").alias("__lb")
-        )
-        live_pairs = (
-            pairs.join(la, "a_id")
-            .join(lb, "b_id")
-            .filter(
-                (F.col("a_ver") == F.col("__la"))
-                & (F.col("b_ver") == F.col("__lb"))
-            )
-            .drop("__la", "__lb")
-            .localCheckpoint(eager=True)
-        )
-        n = live_pairs.count()
-        if n > 0:
-            live_pairs.write.mode("overwrite").parquet(
-                posixpath.join(pairs_dir, f"base-{target}")
-            )
-    # cleanup: older bases and covered batch partitions. When zero pairs
-    # survived, no base-<target> exists — _cleanup_folded still only
-    # removes state <= target, which the (empty) fold covers.
-    _cleanup_folded(spark, pairs_dir, target)
-    return n

@@ -1,3 +1,1 @@
-from .updater import apply_update, USER_GRAPH
-
-__all__ = ["apply_update", "USER_GRAPH"]
+"""SPARQL-UPDATE diff routing with write-back (``updater``)."""

@@ -54,17 +54,11 @@ def main() -> None:
     )
     sig = closure._edge_signature(e)
     with scoped_shuffle_partitions(spark, fixpoint_partitions(sig[0])):
-        r1 = closure._small_star(
-            closure._large_star(e, input_canonical=True, defer_distinct=True),
-            input_canonical=True,
-        ).localCheckpoint(eager=False)
+        r1 = closure._small_star(closure._large_star(e)).localCheckpoint(eager=False)
         sig1 = closure._edge_signature(r1)
     # round 2's plan, scoped the way the loop scopes it
     with scoped_shuffle_partitions(spark, fixpoint_partitions(sig1[0])):
-        r2 = closure._small_star(
-            closure._large_star(r1, input_canonical=True, defer_distinct=True),
-            input_canonical=True,
-        )
+        r2 = closure._small_star(closure._large_star(r1))
         plan = r2._sc._jvm.PythonSQLUtils.explainString(
             r2._jdf.queryExecution(), "formatted"
         )
